@@ -131,8 +131,8 @@ object Engine {
   // c=N / _tablestats versions) by name+mtime, the transform store's
   // data directory tree (appendEvolved adds files without touching a
   // top-level ledger — leaf dir mtimes catch it), the stats sidecar
-  // files (they flip the broadcast hint), and the hint threshold
-  // itself. Weak keys: a stopped session must not be pinned.
+  // files (they flip the broadcast hint). Weak keys: a stopped
+  // session must not be pinned.
   private val regMemo = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[SparkSession,
       scala.collection.mutable.HashMap[String, String]]())
@@ -208,8 +208,6 @@ object Engine {
           .foreach(r => stamp(root.resolve(r), r))
       } finally w.close()
     }
-    sb.append("cbo=")
-      .append(sys.props.getOrElse("graft.cbo.broadcastRows", "50000"))
     sb.toString
   }
 
@@ -222,12 +220,12 @@ object Engine {
     // joins against it plan broadcast even when Spark's size estimate
     // can't see through the view (the CBO use every catalog keeps
     // stats for). Threshold in ROWS because that's what ANALYZE
-    // stores; -Dgraft.cbo.broadcastRows=0 disables. HEAD-only: stats
-    // from any older version are stale (the table may have grown
-    // arbitrarily since) and broadcast() overrides size-based vetoes,
-    // so a stale hint would be a driver-OOM risk — any commit after
-    // ANALYZE invalidates the hint until the next ANALYZE.
-    val cboRows = sys.props.getOrElse("graft.cbo.broadcastRows", "50000").toLong
+    // stores. HEAD-only: stats from any older version are stale (the
+    // table may have grown arbitrarily since) and broadcast() overrides
+    // size-based vetoes, so a stale hint would be a driver-OOM risk —
+    // any commit after ANALYZE invalidates the hint until the next
+    // ANALYZE.
+    val cboRows = 50000L
     val memo = {
       var m = regMemo.get(spark)
       if (m == null) {
@@ -247,7 +245,7 @@ object Engine {
       if (!fresh) {
         val base = readTable(spark, tdir)
         val hinted = graft.sources.Snapshots.headAnalyzedRowCount(spark, tdir) match {
-          case Some(n) if cboRows > 0 && n <= cboRows =>
+          case Some(n) if n <= cboRows =>
             org.apache.spark.sql.functions.broadcast(base)
           case _ => base
         }

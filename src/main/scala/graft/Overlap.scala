@@ -8,33 +8,41 @@ package graft
   * when submitted from separate threads. FIFO scheduling keeps the
   * back-fill behaviour the guide describes.
   *
-  * Failure contract: the FIRST failing action's own exception is
-  * rethrown (unwrapped from the pool's ExecutionException), so call
-  * sites that catch a specific store error keep working.
-  *
-  * BenchPhase attribution: workers inherit the CALLER's landing
-  * depth — a land-wrapped overlap region accumulates its wall once
-  * (the outer frame), never the per-thread sum.
+  * Failure contract: the FIRST failing action (in item order) has its
+  * own exception rethrown (unwrapped from the pool's
+  * ExecutionException), so call sites that catch a specific store
+  * error keep working. Before it is rethrown, items that have not
+  * started are cancelled and items already running are waited for:
+  * no action outlives the call, so a caller that retries or resumes
+  * never races a still-committing sibling.
   */
 object Overlap {
   def jobs[A, B](items: Seq[A], maxThreads: Int = 4)(f: A => B): Seq[B] = {
     if (items.sizeIs <= 1) items.map(f)
     else {
-      val nested = BenchPhase.isLanding
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(items.size, maxThreads))
       try {
         val futs = items.map { a =>
           pool.submit(new java.util.concurrent.Callable[B] {
-            def call(): B = if (nested) BenchPhase.runNested(f(a)) else f(a)
+            def call(): B = f(a)
           })
         }
-        futs.map { fut =>
-          try fut.get()
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
+        try {
+          futs.map { fut =>
+            try fut.get()
+            catch {
+              case e: java.util.concurrent.ExecutionException =>
+                throw Option(e.getCause).getOrElse(e)
+            }
           }
+        } catch {
+          case t: Throwable =>
+            futs.foreach(_.cancel(false)) // queued items never start
+            pool.shutdown()
+            pool.awaitTermination(Long.MaxValue,
+              java.util.concurrent.TimeUnit.NANOSECONDS)
+            throw t
         }
       } finally pool.shutdown()
     }

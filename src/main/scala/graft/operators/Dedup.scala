@@ -282,17 +282,10 @@ object Dedup {
   // each (OR-ed bands, AND within a band — classic banding). Candidate
   // volume ~ T·n²/2^B vs n²/2 all-pairs; B is the scale knob (grow it
   // with log2(n) to keep per-bucket size — and so per-bucket fanout —
-  // constant as the corpus grows). Deploy-tunable via system
-  // properties: query AND oracle both derive from these values at
-  // class init, so retuning can never de-synchronize the gate.
-  private[operators] val EMB_TABLES: Int = {
-    val t = sys.props.getOrElse("graft.lsh.tables", "10").toInt
-    require(t >= 1 && t <= 64, s"graft.lsh.tables out of range: $t"); t
-  }
-  private[operators] val EMB_PLANES: Int = {
-    val b = sys.props.getOrElse("graft.lsh.planes", "5").toInt
-    require(b >= 1 && b <= 24, s"graft.lsh.planes out of range: $b"); b
-  }
+  // constant as the corpus grows). Query AND oracle both derive from
+  // these constants, so the gate and its oracle never de-synchronize.
+  private[operators] val EMB_TABLES: Int = 10
+  private[operators] val EMB_PLANES: Int = 5
 
   /** d05: embedding-cosine near-dup — top-50 most-similar CANDIDATE
     * pairs, where candidates come from banded random-hyperplane LSH
@@ -617,15 +610,6 @@ object Dedup {
     * fixpoint, singletons labeled by their own id. Returns
     * `(doc_id, label)` covering the whole corpus.
     */
-  // dev-only stage timing for the CC fixpoint (-Dgraft.profile=true)
-  private def prof[T](label: String)(f: => T): T =
-    if (java.lang.Boolean.getBoolean("graft.profile")) {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[prof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    } else f
-
   def dupLabels(spark: SparkSession, dir: String, maxRounds: Int): DataFrame = {
     val d = docs(spark, dir)
     val sig = minhashSigs(d).persist()
@@ -674,10 +658,7 @@ object Dedup {
     // SparkSession must never be silently planned at the loop's width.
     // The final labels are re-rooted onto the caller's session below,
     // so the corpus-wide final rollup keeps the session width.
-    if (java.lang.Boolean.getBoolean("graft.profile")) {
-      prof("sig-build")(sig.count()); prof("pairs-build")(pairs.count())
-    }
-    val nEdges = prof("edges-count (sig+pairs+edges)")(edges.count())
+    val nEdges = edges.count()
     // STATS-GATED SOLVE, same pattern as the as-of join's build cap:
     // the verified subgraph is usually a vanishing fraction of the
     // corpus (near-dup pairs, not docs), so below the cap — ≤ 16 MB
@@ -692,7 +673,7 @@ object Dedup {
     // spec pins local == distributed).
     val localCap = sys.props.get("graft.cc.localEdgeCap")
       .map(_.toLong).getOrElse(1000000L)
-    val finalLabels: DataFrame = if (nEdges / 2 <= localCap) prof("cc-local") {
+    val finalLabels: DataFrame = if (nEdges / 2 <= localCap) {
       import spark.implicits._
       val parent = new java.util.HashMap[Long, Long]()
       def find(a: Long): Long = {
@@ -722,8 +703,8 @@ object Dedup {
       // same persisted edge table, planned under the loop session (the
       // CacheManager lives in SharedState, so the cache hit carries over)
       val edgesL = org.apache.spark.sql.GraftShims.reRoot(loopSpark, edges)
-      var labels = prof("labels-init")(ccCheckpoint(edgesL.select(col("doc_id")).distinct()
-        .withColumn("label", col("doc_id"))))
+      var labels = ccCheckpoint(edgesL.select(col("doc_id")).distinct()
+        .withColumn("label", col("doc_id")))
       def step(ls: DataFrame): DataFrame = {
         val nbrMin = edgesL
           .join(ls.select(col("doc_id").as("nbr"), col("label").as("nbr_label")), Seq("nbr"))
@@ -745,15 +726,13 @@ object Dedup {
         // saves — and a double-jump variant saves no rounds at all on
         // these shallow components while paying a deeper lineage; a
         // step-folded init likewise measured net-negative)
-        prof(s"cc-round $round") {
-          val next = ccCheckpoint(jump(step(labels.select(col("doc_id"), col("label"))))
-            .withColumnRenamed("label", "new_label")
-            .join(labels.select(col("doc_id"), col("label").as("old_label")), Seq("doc_id"))
-            .select(col("doc_id"), col("old_label"), col("new_label").as("label")))
-          converged = next.filter(col("label") =!= col("old_label")).isEmpty
-          labels = next.select(col("doc_id"), col("label"))
-          round += 1
-        }
+        val next = ccCheckpoint(jump(step(labels.select(col("doc_id"), col("label"))))
+          .withColumnRenamed("label", "new_label")
+          .join(labels.select(col("doc_id"), col("label").as("old_label")), Seq("doc_id"))
+          .select(col("doc_id"), col("old_label"), col("new_label").as("label")))
+        converged = next.filter(col("label") =!= col("old_label")).isEmpty
+        labels = next.select(col("doc_id"), col("label"))
+        round += 1
       }
       // back onto the caller's session: the final corpus-wide rollup
       // plans at the session width, not the loop width

@@ -42,12 +42,9 @@ object Similarity {
       .orderBy(col("qid"), col("rnk"))
   }
 
-  // deploy-tunable (s02/s06/s07 queries and oracles regenerate in
-  // lockstep from this value at class init — see Dedup.EMB_PLANES)
-  private val PLANES: Int = {
-    val p = sys.props.getOrElse("graft.lsh.query.planes", "8").toInt
-    require(p >= 1 && p <= 24, s"graft.lsh.query.planes out of range: $p"); p
-  }
+  // s02/s06/s07 queries and oracles regenerate in lockstep from this
+  // constant — see Dedup.EMB_PLANES
+  private val PLANES: Int = 8
 
   /** s02: random-hyperplane LSH — 8 deterministic hyperplanes
     * (md5-derived ±1 sign vectors, [[graft.functions.Hyperplanes]])
@@ -429,7 +426,7 @@ object Similarity {
     */
   private[graft] def buildAnnIndex(spark: SparkSession, dir: String,
       idxDir: String, corpus: Option[DataFrame] = None,
-      meta: Option[DataFrame] = None): Unit = graft.BenchPhase.land {
+      meta: Option[DataFrame] = None): Unit = {
     val base = kmeansAssignments(spark, dir, corpus)
       .select(col("vec_id"), col("embedding"), col("cell_id"))
     // metadata columns (filter attributes) ride INSIDE the posting
@@ -523,7 +520,7 @@ object Similarity {
     * drain → serve sequence never reads mid-append.
     */
   private[graft] def appendAnnIndex(spark: SparkSession, idxDir: String,
-      batch: DataFrame, batchTag: Option[String] = None): Unit = graft.BenchPhase.land {
+      batch: DataFrame, batchTag: Option[String] = None): Unit = {
     if (batchTag.exists(committedAppendTags(idxDir).contains)) return
     GraftFunctions.register(spark)
     val cents = graft.sources.Snapshots.read(spark, s"$idxDir/centroids")
@@ -586,7 +583,7 @@ object Similarity {
     * serve-side anti-join broadcast is safe by construction.
     */
   private[graft] def deleteFromAnnIndex(spark: SparkSession, idxDir: String,
-      ids: DataFrame, batchTag: Option[String] = None): Unit = graft.BenchPhase.land {
+      ids: DataFrame, batchTag: Option[String] = None): Unit = {
     if (batchTag.exists(committedAppendTags(idxDir).contains)) return
     val tombs = ids.select(col("vec_id")).distinct()
     batchTag match {
@@ -787,8 +784,7 @@ object Similarity {
     * append path: a concurrent READER could observe the swap window
     * (raw layout, no commit point); maintenance runs fenced.
     */
-  private[graft] def compactAnnIndex(spark: SparkSession, idxDir: String): Unit =
-    graft.BenchPhase.land {
+  private[graft] def compactAnnIndex(spark: SparkSession, idxDir: String): Unit = {
     // the WHOLE read-rewrite-swap runs under the append lock: an
     // append committing between a staging build and the swap would be
     // dropped by the swap, and — its tag already ledgered — would

@@ -509,7 +509,11 @@ final class Runner(spark: SparkSession, warehouseDir: String) {
       // concurrently, then record lineage sequentially in name order so
       // the manifest (and the returned report) are byte-identical to a
       // serial run. Overlap rethrows the first failure in name order —
-      // the same exception a serial run surfaces.
+      // the same exception a serial run surfaces, but not the same side
+      // effects: same-level siblings of the failed model that already
+      // started still build, commit and tag (a serial run would have
+      // stopped at the failure). Siblings not yet started are cancelled,
+      // and none is still running when `run` throws.
       val runs = graft.Overlap.jobs(level)(runOne)
       level.zip(runs).map { case (m, (run, inputRecs)) =>
         record(m, run, inputRecs)

@@ -81,10 +81,8 @@ object Warehouse {
   def compactOrders(spark: SparkSession, dir: String): Landed = {
     val frag = tempDir("graft-frag")
     val out = tempDir("graft-compact")
-    graft.BenchPhase.land {
-      Tables(spark, dir, "orders").repartition(64)
-        .write.mode("overwrite").parquet(frag)
-    }
+    Tables(spark, dir, "orders").repartition(64)
+      .write.mode("overwrite").parquet(frag)
     Sources.compact(spark, frag, out, targetMB = 256, sortCols = Seq("o_orderdate"))
     Landed(Sources.readParquet(spark, out), out)
   }
@@ -707,14 +705,12 @@ object Warehouse {
     val p = tempDir("graft-bloomland")
     val idx = s"$p-index"
     // time-clustered landing: the layout a streaming/CDC ingest leaves
-    graft.BenchPhase.land {
-      Tables(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
-          col("o_totalprice"))
-        .repartitionByRange(32, col("o_orderdate"), col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderdate"))
-        .write.mode("overwrite").parquet(p)
-    }
+    Tables(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
+        col("o_totalprice"))
+      .repartitionByRange(32, col("o_orderdate"), col("o_orderkey"))
+      .sortWithinPartitions(col("o_orderdate"))
+      .write.mode("overwrite").parquet(p)
     Sources.buildBloomIndex(spark, p, "o_custkey", idx, mBits = 65536)
     val orders = Tables(spark, dir, "orders")
     val byCount = orders.groupBy(col("o_custkey")).agg(count(lit(1)).as("n"))
@@ -786,12 +782,10 @@ object Warehouse {
   def q77MetadataOnly(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val p = tempDir("graft-metaonly")
-    graft.BenchPhase.land {
-      Tables(spark, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-        .repartition(16)
-        .write.mode("overwrite").parquet(p)
-    }
+    Tables(spark, dir, "orders")
+      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+      .repartition(16)
+      .write.mode("overwrite").parquet(p)
     Sources.writeStatsManifest(spark, p, "o_orderkey")
     val (n, lo, hi) = Sources.statsOnlyAnswer(p)
     Seq((n, lo, hi)).toDF("n_rows", "min_orderkey", "max_orderkey")

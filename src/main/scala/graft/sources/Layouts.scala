@@ -92,7 +92,7 @@ object Layouts {
     * streaming/CDC ingest shape) instead of one per upstream task.
     */
   def append(spark: SparkSession, tableDir: String, df: DataFrame,
-      dateCol: String): Unit = graft.BenchPhase.land {
+      dateCol: String): Unit = {
     val (id, t) = specs(tableDir).lastOption.getOrElse(
       throw new IllegalStateException(
         s"no partition spec declared at $tableDir — call evolveTo first"))

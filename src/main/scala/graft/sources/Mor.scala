@@ -122,7 +122,7 @@ object Mor {
     * batch commits nothing twice.
     */
   private def commit(df: DataFrame, tableDir: String, kind: String,
-      keyCols: Seq[String] = Nil, tag: Option[String] = None): Long = graft.BenchPhase.land {
+      keyCols: Seq[String] = Nil, tag: Option[String] = None): Long = {
     require(keyCols.forall(c => !c.contains(',') && !c.contains('\t')),
       s"key column names must not contain ',' or tab: $keyCols")
     tag.foreach(t => require(!t.exists(c => c == '\t' || c == '\n'),
@@ -277,7 +277,7 @@ object Mor {
 
   private def commitPair(deletes: DataFrame, data: DataFrame,
       tableDir: String, tag: Option[String],
-      delKind: String = "posdelete", delKeyCols: Seq[String] = Nil): (Long, Long) = graft.BenchPhase.land {
+      delKind: String = "posdelete", delKeyCols: Seq[String] = Nil): (Long, Long) = {
     require(delKeyCols.forall(c => !c.contains(',') && !c.contains('\t')),
       s"key column names must not contain ',' or tab: $delKeyCols")
     tag.foreach(t => require(!t.exists(c => c == '\t' || c == '\n'),

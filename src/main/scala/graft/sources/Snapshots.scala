@@ -210,7 +210,7 @@ object Snapshots {
   }
 
   private def commitWith(df: DataFrame, tableDir: String,
-      tag: Option[String], partCols: Seq[String]): Long = graft.BenchPhase.land {
+      tag: Option[String], partCols: Seq[String]): Long = {
     tag.foreach(t => require(!t.exists(c => c == '\t' || c == '\n'),
       s"tag must not contain tab/newline: $t"))
     Files.createDirectories(Paths.get(tableDir))
@@ -316,7 +316,7 @@ object Snapshots {
     * Table dirs must live under `txnRoot`.
     */
   def commitTxn(txnRoot: String, writes: Seq[(DataFrame, String)],
-      txnId: String): Seq[Long] = graft.BenchPhase.land {
+      txnId: String): Seq[Long] = {
     require(writes.nonEmpty, "empty transaction")
     require(!txnId.exists(c => c == '\t' || c == '\n' || c == ','),
       s"txnId must not contain tab/newline/comma: $txnId")
@@ -666,7 +666,7 @@ object Snapshots {
     * only [[readStaged]] can. Idempotent per wapId (a replayed stage
     * returns the existing staged version). Returns the staged id.
     */
-  def stage(df: DataFrame, tableDir: String, wapId: String): Long = graft.BenchPhase.land {
+  def stage(df: DataFrame, tableDir: String, wapId: String): Long = {
     require(!wapId.exists(c => c == '\t' || c == '\n'),
       s"wap id must not contain tab/newline: $wapId")
     Files.createDirectories(Paths.get(tableDir))
@@ -769,7 +769,7 @@ object Snapshots {
     * vacuumable orphan; no manifest line appears).
     */
   private def commitIfLatest(df: DataFrame, tableDir: String, baseVersion: Long,
-      tag: Option[String]): Option[Long] = graft.BenchPhase.land {
+      tag: Option[String]): Option[Long] = {
     val next = reserveVersion(tableDir)
     compactLocal(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/v=$next")
     withManifestLock(tableDir) {
@@ -890,7 +890,7 @@ object Snapshots {
     */
   def purge(spark: SparkSession, tableDir: String,
       predicate: org.apache.spark.sql.Column): Map[Long, Long] =
-    graft.BenchPhase.land { withManifestLock(tableDir) {
+    withManifestLock(tableDir) {
       versions(tableDir).map { v =>
         val dir = s"$tableDir/v=$v"
         val cur = spark.read.parquet(dir)
@@ -905,7 +905,7 @@ object Snapshots {
         }
         v -> hit
       }.toMap
-    } }
+    }
 
   def expireSnapshots(tableDir: String, keep: Int): Seq[Long] = {
     require(keep >= 1, "must keep at least the latest snapshot")
@@ -1042,7 +1042,7 @@ object Snapshots {
     * Main's manifest is untouched — [[read]]/[[versions]]/time travel
     * cannot see this version until [[fastForward]] publishes it.
     */
-  def commitToBranch(df: DataFrame, tableDir: String, branch: String): Long = graft.BenchPhase.land {
+  def commitToBranch(df: DataFrame, tableDir: String, branch: String): Long = {
     require(versions(tableDir).nonEmpty,
       s"branching needs an existing table at $tableDir")
     Files.createDirectories(Paths.get(tableDir))
@@ -1155,7 +1155,7 @@ object Snapshots {
     * previous count-by-input-file aggregate was one full pass per
     * backfilled version; guide §6). #files output rows only.
     */
-  def writeFileStats(spark: SparkSession, tableDir: String, v: Long): Unit = graft.BenchPhase.land {
+  def writeFileStats(spark: SparkSession, tableDir: String, v: Long): Unit = {
     val p = fileStatsPath(tableDir, v)
     if (Files.exists(p)) return
     val dir = Paths.get(tableDir, s"v=$v")
@@ -1197,7 +1197,7 @@ object Snapshots {
     * as longs) — the pruning predicate shape [[readPruned]] serves.
     */
   def writeColStats(spark: SparkSession, tableDir: String, v: Long,
-      cols: Seq[String]): Unit = graft.BenchPhase.land {
+      cols: Seq[String]): Unit = {
     val p = colStatsPath(tableDir, v)
     if (Files.exists(p)) return
     val dir = Paths.get(tableDir, s"v=$v")

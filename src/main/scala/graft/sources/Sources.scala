@@ -21,15 +21,15 @@ object Sources {
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  def writeCsv(df: DataFrame, path: String): Unit = graft.BenchPhase.land {
+  def writeCsv(df: DataFrame, path: String): Unit = {
     df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
   }
 
-  def writeJson(df: DataFrame, path: String): Unit = graft.BenchPhase.land {
+  def writeJson(df: DataFrame, path: String): Unit = {
     df.write.mode(SaveMode.Overwrite).json(path)
   }
 
-  def writeOrc(df: DataFrame, path: String): Unit = graft.BenchPhase.land {
+  def writeOrc(df: DataFrame, path: String): Unit = {
     df.write.mode(SaveMode.Overwrite).orc(path)
   }
 
@@ -39,9 +39,7 @@ object Sources {
     * `partitioned by __source_ts` in docs/components/cdc.md).
     */
   def writePartitioned(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    graft.BenchPhase.land {
-      df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
-    }
+    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(path)
 
   /** Dynamic partition overwrite — replace ONLY the partitions present
     * in `df`, leaving every other partition's files physically
@@ -52,12 +50,10 @@ object Sources {
     * 100 TB the cost is the recomputed partitions, never the table.
     */
   def overwritePartitions(df: DataFrame, path: String, partitionCols: Seq[String]): Unit =
-    graft.BenchPhase.land {
-      df.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCols: _*)
-        .parquet(path)
-    }
+    df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
+      .parquet(path)
 
   /** Bucketed + sorted table: both sides of a fact⋈fact join bucketed
     * the same way join with NO shuffle exchange (each bucket pairs up
@@ -66,7 +62,7 @@ object Sources {
     * saveAsTable (bucketing metadata lives in the catalog).
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-      numBuckets: Int, path: Option[String] = None): Unit = graft.BenchPhase.land {
+      numBuckets: Int, path: Option[String] = None): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)
       .bucketBy(numBuckets, bucketCol)
       .sortBy(bucketCol)
@@ -83,7 +79,7 @@ object Sources {
     * are distributed; only file STATS are driver-side.
     */
   def compact(spark: SparkSession, inPath: String, outPath: String,
-      targetMB: Int = 256, sortCols: Seq[String] = Nil): Long = graft.BenchPhase.land {
+      targetMB: Int = 256, sortCols: Seq[String] = Nil): Long = {
     val df = spark.read.parquet(inPath)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = math.max(1L,
@@ -153,7 +149,7 @@ object Sources {
   }
 
   def landWithStats(df: DataFrame, path: String, statsCol: String,
-      numFiles: Int): Unit = graft.BenchPhase.land {
+      numFiles: Int): Unit = {
     require(df.schema(statsCol).dataType == org.apache.spark.sql.types.LongType,
       s"landWithStats clusters a BIGINT column, got ${df.schema(statsCol).dataType.sql}")
     df.repartitionByRange(numFiles, df.col(statsCol))
@@ -266,7 +262,7 @@ object Sources {
   }
 
   def landZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-      numFiles: Int): Unit = graft.BenchPhase.land {
+      numFiles: Int): Unit = {
     zCluster(df, colA, colB, numFiles)
       .write.mode(SaveMode.Overwrite).parquet(path)
     // two-column bounds from the footers (see footerBounds) — the
@@ -326,8 +322,7 @@ object Sources {
     * METADATA-ONLY answers: COUNT(*) = Σ rows, MIN/MAX = min lo /
     * max hi, read from the manifest without touching a data file.
     */
-  def writeStatsManifest(spark: SparkSession, path: String, statsCol: String): Unit =
-    graft.BenchPhase.land {
+  def writeStatsManifest(spark: SparkSession, path: String, statsCol: String): Unit = {
     import org.apache.spark.sql.functions._
     val stats = spark.read.parquet(path)
       .groupBy(input_file_name().as("file"))
@@ -339,7 +334,7 @@ object Sources {
       java.nio.file.Paths.get(path.stripPrefix("file:"), "_full_stats.tsv"),
       stats.sorted.mkString("", "\n", "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    }
+  }
 
   /** Answer (rows, min, max) from `_full_stats.tsv` ALONE — the
     * Iceberg metadata-only query path: planning cost is the manifest
@@ -368,7 +363,7 @@ object Sources {
     * wrong result: callers still apply the exact residual predicate).
     */
   def buildBloomIndex(spark: SparkSession, path: String, keyCol: String,
-      indexPath: String, mBits: Int): Unit = graft.BenchPhase.land {
+      indexPath: String, mBits: Int): Unit = {
     import org.apache.spark.sql.functions._
     val m = lit(mBits.toLong)
     spark.read.parquet(path)
@@ -419,7 +414,7 @@ object Sources {
   }
 
   def buildPointIndex(spark: SparkSession, path: String, keyCol: String,
-      indexPath: String): Unit = graft.BenchPhase.land {
+      indexPath: String): Unit = {
     import org.apache.spark.sql.functions._
     spark.read.parquet(path)
       .select(col(keyCol), input_file_name().as("file"))

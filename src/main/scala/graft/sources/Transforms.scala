@@ -193,7 +193,7 @@ object Transforms {
     * directory key). One task per value → one file per value.
     */
   def land(spark: SparkSession, tableDir: String, df: DataFrame,
-      t: Transform): Unit = graft.BenchPhase.land {
+      t: Transform): Unit = {
     graft.functions.GraftFunctions.register(spark) // MBucket's expression
     Files.createDirectories(Paths.get(tableDir))
     // repartition PINNED at the session shuffle width: the unnumbered
@@ -249,7 +249,7 @@ object Transforms {
     * [[Snapshots]] store is the tool for that).
     */
   def append(spark: SparkSession, tableDir: String, df: DataFrame,
-      t: Transform, batchId: Option[Long] = None): Unit = graft.BenchPhase.land {
+      t: Transform, batchId: Option[Long] = None): Unit = {
     val specF = Paths.get(tableDir, "_spec")
     if (Files.exists(specF))
       require(readSpec(tableDir).specLine == t.specLine,
@@ -400,7 +400,7 @@ object Transforms {
     * the [[land]] invariant, so file counts stay oracle-derivable).
     */
   def appendEvolved(spark: SparkSession, tableDir: String,
-      df: DataFrame): Unit = graft.BenchPhase.land {
+      df: DataFrame): Unit = {
     graft.functions.GraftFunctions.register(spark) // MBucket's expression
     val (sid, ts) = specs(tableDir).last
     val pvCols = ts.indices.map(i => s"__pv$i")

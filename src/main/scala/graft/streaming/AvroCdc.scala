@@ -110,9 +110,7 @@ object AvroCdc {
       }
     }
     val path = graft.TempDirs.scratch("graft-avro-topic")
-    graft.BenchPhase.land {
-      topic.toDF().repartition(8).write.mode("overwrite").parquet(path)
-    }
+    topic.toDF().repartition(8).write.mode("overwrite").parquet(path)
 
     // 2. CONSUME: stream the topic, registry-decode per partition
     val wireSchema = org.apache.spark.sql.types.StructType(Seq(

@@ -447,9 +447,7 @@ object EventStream {
       col("ts").as("timestamp"))
     val path = graft.TempDirs.scratch("graft-topic")
     // one file per topic partition — the actual Kafka landing shape
-    graft.BenchPhase.land {
-      topicDump.repartition(8).write.mode("overwrite").parquet(path)
-    }
+    topicDump.repartition(8).write.mode("overwrite").parquet(path)
 
     // 2. STREAM the topic and decode the envelope into typed rows
     val kafkaSchema = StructType(Seq(
@@ -557,12 +555,10 @@ object EventStream {
     val src = graft.TempDirs.scratch("graft-st08-src")
     // land ts as long micros: the sharded copy must round-trip through
     // the long-typed streaming schema (eventsSchema) unchanged
-    graft.BenchPhase.land {
-      graft.Tables(spark, dir, "events")
-        .withColumn("ts", unix_micros(col("ts")))
-        .repartition(16)
-        .write.mode("overwrite").parquet(src)
-    }
+    graft.Tables(spark, dir, "events")
+      .withColumn("ts", unix_micros(col("ts")))
+      .repartition(16)
+      .write.mode("overwrite").parquet(src)
     val t = s"${graft.TempDirs.scratch("graft-st08-tbl")}/events_ingest"
     val stream = s.readStream
       .schema(eventsSchema)
@@ -615,10 +611,8 @@ object EventStream {
       when(col("op") =!= "d", row).as("after"),
       when(col("op") === "d", row).as("before")))
     val topic = graft.TempDirs.scratch("graft-st09-topic")
-    graft.BenchPhase.land {
-      ev.select(envelope.cast("binary").as("value"))
-        .repartition(16).write.mode("overwrite").parquet(topic)
-    }
+    ev.select(envelope.cast("binary").as("value"))
+      .repartition(16).write.mode("overwrite").parquet(topic)
 
     // 2. seed the target table (empty v0) with the upsert-state schema
     val stateSchema = StructType(Seq(
@@ -699,12 +693,10 @@ object EventStream {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st10-src")
-    graft.BenchPhase.land {
-      graft.Tables(spark, dir, "events")
-        .withColumn("ts", unix_micros(col("ts")))
-        .repartition(16)
-        .write.mode("overwrite").parquet(src)
-    }
+    graft.Tables(spark, dir, "events")
+      .withColumn("ts", unix_micros(col("ts")))
+      .repartition(16)
+      .write.mode("overwrite").parquet(src)
 
     val matSchema = StructType(Seq(
       StructField("event_type", StringType),
@@ -761,12 +753,10 @@ object EventStream {
     val hvCol = conv(substring(md5(col("user_id").cast("string").cast("binary")), 1, 15),
       16, 10).cast("long")
     val src = graft.TempDirs.scratch("graft-st13-src")
-    graft.BenchPhase.land {
-      graft.Tables(spark, dir, "events")
-        .select(col("event_type"), hvCol.as("hv"))
-        .repartition(16)
-        .write.mode("overwrite").parquet(src)
-    }
+    graft.Tables(spark, dir, "events")
+      .select(col("event_type"), hvCol.as("hv"))
+      .repartition(16)
+      .write.mode("overwrite").parquet(src)
 
     val skSchema = StructType(Seq(
       StructField("event_type", StringType),
@@ -845,24 +835,20 @@ object EventStream {
         .when(col("event_id") % 17 === 0, noKey)               // key field gone
         .otherwise(good)
     val topic = graft.TempDirs.scratch("graft-st14-topic")
-    graft.BenchPhase.land {
-      ev.select(payload.as("payload")).repartition(16)
-        .write.mode("overwrite").parquet(topic)
-    }
+    ev.select(payload.as("payload")).repartition(16)
+      .write.mode("overwrite").parquet(topic)
 
     val mainT = s"${graft.TempDirs.scratch("graft-st14-tbl")}/events_valid"
     val dlqT = s"${graft.TempDirs.scratch("graft-st14-dlq")}/events_dlq"
     // two independent empty seeds — committed concurrently (guide §2.6)
-    graft.BenchPhase.land {
-      graft.Overlap.pair(
-        graft.sources.Snapshots.commit(
-          s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            envSchema), mainT),
-        graft.sources.Snapshots.commit(
-          s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            StructType(Seq(StructField("reason", StringType),
-              StructField("payload", StringType)))), dlqT))
-    }
+    graft.Overlap.pair(
+      graft.sources.Snapshots.commit(
+        s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          envSchema), mainT),
+      graft.sources.Snapshots.commit(
+        s.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          StructType(Seq(StructField("reason", StringType),
+            StructField("payload", StringType)))), dlqT))
 
     val stream = s.readStream
       .schema(StructType(Seq(StructField("payload", StringType))))
@@ -883,18 +869,16 @@ object EventStream {
         // tables — two independent commits per batch, submitted
         // concurrently (guide §2.6) so the batch pays max() not sum()
         // of two scheduling-dominated tiny jobs
-        graft.BenchPhase.land {
-          graft.Overlap.pair(
-            graft.sources.Snapshots.mergeWith(batch.sparkSession, mainT,
-              parsed.filter(!col("invalid")).select(col("env.*")),
-              tag = Some(s"valid-batch=$id")) { (mat, b) => mat.unionByName(b) },
-            graft.sources.Snapshots.mergeWith(batch.sparkSession, dlqT,
-              parsed.filter(col("invalid")).select(
-                when(col("unparseable"), "unparseable").otherwise("missing_key")
-                  .as("reason"),
-                col("payload")),
-              tag = Some(s"dlq-batch=$id")) { (mat, b) => mat.unionByName(b) })
-        }
+        graft.Overlap.pair(
+          graft.sources.Snapshots.mergeWith(batch.sparkSession, mainT,
+            parsed.filter(!col("invalid")).select(col("env.*")),
+            tag = Some(s"valid-batch=$id")) { (mat, b) => mat.unionByName(b) },
+          graft.sources.Snapshots.mergeWith(batch.sparkSession, dlqT,
+            parsed.filter(col("invalid")).select(
+              when(col("unparseable"), "unparseable").otherwise("missing_key")
+                .as("reason"),
+              col("payload")),
+            tag = Some(s"dlq-batch=$id")) { (mat, b) => mat.unionByName(b) })
         ()
       }
       .start()
@@ -931,10 +915,8 @@ object EventStream {
     val ckpt = graft.TempDirs.scratch("graft-st15-ckpt")
     val ev = graft.Tables(s, dir, "events")
       .select(col("event_type"), col("value"), (col("user_id") % 2).as("half"))
-    graft.BenchPhase.land {
-      ev.filter(col("half") === 0).drop("half")
-        .repartition(8).write.mode("overwrite").parquet(src)
-    }
+    ev.filter(col("half") === 0).drop("half")
+      .repartition(8).write.mode("overwrite").parquet(src)
 
     val matSchema = StructType(Seq(
       StructField("event_type", StringType),
@@ -958,10 +940,8 @@ object EventStream {
       try q.processAllAvailable() finally q.stop()
     }
     runOnce() // wave 1: 8 files → 2 merge commits, then the query STOPS
-    graft.BenchPhase.land {
-      ev.filter(col("half") === 1).drop("half")
-        .repartition(8).write.mode("append").parquet(src) // wave 2 lands
-    }
+    ev.filter(col("half") === 1).drop("half")
+      .repartition(8).write.mode("append").parquet(src) // wave 2 lands
     runOnce() // NEW instance, SAME checkpoint: resumes at batch id 2
 
     val nVersions = graft.sources.Snapshots.versions(table).size
@@ -1013,10 +993,8 @@ object EventStream {
     val ckpt = graft.TempDirs.scratch("graft-st16-ckpt")
     val ev = graft.Tables(s, dir, "events")
       .select(col("event_type"), col("value"), (col("user_id") % 2).as("half"))
-    graft.BenchPhase.land {
-      ev.filter(col("half") === 0).drop("half")
-        .repartition(8).write.mode("overwrite").parquet(src)
-    }
+    ev.filter(col("half") === 0).drop("half")
+      .repartition(8).write.mode("overwrite").parquet(src)
 
     val matSchema = StructType(Seq(
       StructField("event_type", StringType),
@@ -1028,10 +1006,8 @@ object EventStream {
         matSchema), table)
 
     drainAvailable(s, src, ckpt, table)   // wave 1: self-terminating
-    graft.BenchPhase.land {
-      ev.filter(col("half") === 1).drop("half")
-        .repartition(8).write.mode("append").parquet(src) // wave 2 lands
-    }
+    ev.filter(col("half") === 1).drop("half")
+      .repartition(8).write.mode("append").parquet(src) // wave 2 lands
     drainAvailable(s, src, ckpt, table)   // new invocation: wave 2 only
 
     val nVersions = graft.sources.Snapshots.versions(table).size
@@ -1203,12 +1179,10 @@ object EventStream {
     // one directory+file per topic partition (partitionBy, not
     // repartition: hash collisions over 16 shard values would make
     // the file — and therefore batch/commit — count nondeterministic)
-    graft.BenchPhase.land {
-      ev.select(envelope.cast("binary").as("value"),
-          pmod(col("user_id"), lit(16)).as("kpart"))
-        .repartition(16, col("kpart"))
-        .write.partitionBy("kpart").mode("overwrite").parquet(topic)
-    }
+    ev.select(envelope.cast("binary").as("value"),
+        pmod(col("user_id"), lit(16)).as("kpart"))
+      .repartition(16, col("kpart"))
+      .write.partitionBy("kpart").mode("overwrite").parquet(topic)
 
     // 2. stream-decode; each micro-batch = one MoR upsert (two commits)
     val rowSchema = StructType(Seq(
@@ -1290,10 +1264,8 @@ object EventStream {
 
     val orders = graft.Tables(spark, dir, "orders")
     val basePath = graft.TempDirs.scratch("graft-st18-base")
-    graft.BenchPhase.land {
-      orders.filter(col("o_orderkey") % 2 === 0)
-        .repartition(8).write.mode("overwrite").parquet(basePath)
-    }
+    orders.filter(col("o_orderkey") % 2 === 0)
+      .repartition(8).write.mode("overwrite").parquet(basePath)
 
     val mvName = s"orders_mv_${java.util.UUID.randomUUID().toString.take(8)}"
     Mv.create(
@@ -1302,10 +1274,8 @@ object EventStream {
       Seq(Mv.Measure("sum", "o_totalprice", Some(dec), "sum_price")))
 
     val srcPath = graft.TempDirs.scratch("graft-st18-src")
-    graft.BenchPhase.land {
-      orders.filter(col("o_orderkey") % 2 === 1)
-        .repartition(16).write.mode("overwrite").parquet(srcPath)
-    }
+    orders.filter(col("o_orderkey") % 2 === 1)
+      .repartition(16).write.mode("overwrite").parquet(srcPath)
 
     var refreshes = 1
     val q = s.readStream
@@ -1371,10 +1341,8 @@ object EventStream {
     val groupCols = Seq("o_orderstatus", "o_orderdate")
     val orders = graft.Tables(spark, dir, "orders")
     val basePath = graft.TempDirs.scratch("graft-st18s-base")
-    graft.BenchPhase.land {
-      orders.filter(col("o_orderkey") % 2 === 0)
-        .repartition(4).write.mode("overwrite").parquet(basePath)
-    }
+    orders.filter(col("o_orderkey") % 2 === 0)
+      .repartition(4).write.mode("overwrite").parquet(basePath)
     val mvName = s"orders_mv_${java.util.UUID.randomUUID().toString.take(8)}"
     Mv.create(
       spark.read.parquet(basePath), mvName, basePath,
@@ -1483,12 +1451,10 @@ object EventStream {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st21-src")
-    graft.BenchPhase.land {
-      graft.Tables(spark, dir, "events")
-        .withColumn("ts", unix_micros(col("ts")))
-        .repartition(16)
-        .write.mode("overwrite").parquet(src)
-    }
+    graft.Tables(spark, dir, "events")
+      .withColumn("ts", unix_micros(col("ts")))
+      .repartition(16)
+      .write.mode("overwrite").parquet(src)
     val table = s"${graft.TempDirs.scratch("graft-st21-tbl")}/events_by_day"
     val stream = s.readStream
       .schema(eventsSchema)
@@ -1546,12 +1512,10 @@ object EventStream {
     // the 80% index build and the 20% holdout landing read the same
     // source but write disjoint outputs — overlap them (guide §2.6):
     // the landing write back-fills cores the k-means tail leaves idle
-    graft.BenchPhase.land {
-      graft.Overlap.pair(
-        Similarity.buildAnnIndex(spark, dir, idxDir,
-          corpus = Some(e.filter(col("vec_id") % 5 =!= 4))),
-        holdout.repartition(8).write.mode("overwrite").parquet(src))
-    }
+    graft.Overlap.pair(
+      Similarity.buildAnnIndex(spark, dir, idxDir,
+        corpus = Some(e.filter(col("vec_id") % 5 =!= 4))),
+      holdout.repartition(8).write.mode("overwrite").parquet(src))
     val stream = s.readStream
       .schema(holdout.schema)
       .option("maxFilesPerTrigger", "2")
@@ -1601,12 +1565,10 @@ object EventStream {
     val t = s"${graft.TempDirs.scratch("graft-st23-tbl")}/events_drift"
     val ev = graft.Tables(s, dir, "events")
     // phase A: the old producer — three fields
-    graft.BenchPhase.land {
-      ev.filter(col("event_id") % 2 === 0)
-        .select(to_json(struct(col("event_id"), col("user_id"),
-          col("value"))).as("value"))
-        .repartition(2).write.mode("overwrite").text(src)
-    }
+    ev.filter(col("event_id") % 2 === 0)
+      .select(to_json(struct(col("event_id"), col("user_id"),
+        col("value"))).as("value"))
+      .repartition(2).write.mode("overwrite").text(src)
     val stream = s.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("value",
@@ -1696,12 +1658,10 @@ object EventStream {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st24-src")
-    graft.BenchPhase.land {
-      graft.Tables(spark, dir, "events")
-        .withColumn("ts", unix_micros(col("ts")))
-        .repartition(16)
-        .write.mode("overwrite").parquet(src)
-    }
+    graft.Tables(spark, dir, "events")
+      .withColumn("ts", unix_micros(col("ts")))
+      .repartition(16)
+      .write.mode("overwrite").parquet(src)
     val wh = graft.TempDirs.scratch("graft-st24-wh")
     val fact = s"$wh/events_fact"
     val mart = s"$wh/events_mart"
@@ -1799,23 +1759,19 @@ object EventStream {
     val del = cust.filter(col("k") % 7 === 0)
       .withColumn("seq", lit(3L)).withColumn("deleted", lit(true))
     val src = graft.TempDirs.scratch("graft-st25-src")
-    graft.BenchPhase.land {
-      base.unionByName(upd).unionByName(del)
-        .repartition(16).write.mode("overwrite").parquet(src)
-    }
+    base.unionByName(upd).unionByName(del)
+      .repartition(16).write.mode("overwrite").parquet(src)
     // seeds: empty upstream state, empty mart, cursor at the seed —
     // three independent tables, seeded concurrently (guide §2.6)
     import spark.implicits._
-    graft.BenchPhase.land {
-      graft.Overlap.jobs(Seq[() => Unit](
-        () => { Snapshots.commit(base.filter(lit(false)), up); () },
-        () => { Snapshots.commit(
-          base.filter(lit(false))
-            .select(col("seg").as("status"),
-              lit(0L).as("n_live"), lit(null).cast(dec).as("rev_dec")), mart); () },
-        () => { Snapshots.commit(Seq(1L).toDF("last_version"), cur); () }
-      ))(_.apply())
-    }
+    graft.Overlap.jobs(Seq[() => Unit](
+      () => { Snapshots.commit(base.filter(lit(false)), up); () },
+      () => { Snapshots.commit(
+        base.filter(lit(false))
+          .select(col("seg").as("status"),
+            lit(0L).as("n_live"), lit(null).cast(dec).as("rev_dec")), mart); () },
+      () => { Snapshots.commit(Seq(1L).toDF("last_version"), cur); () }
+    ))(_.apply())
     val srcSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType),
@@ -1925,14 +1881,12 @@ object EventStream {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st26-src")
-    graft.BenchPhase.land {
-      graft.Tables(spark, dir, "events")
-        .select(col("event_id"), unix_micros(col("ts")).as("ts"),
-          col("user_id"), col("event_type"),
-          when(col("event_id") % 11 === 0, lit(null).cast("double"))
-            .otherwise(col("value")).as("value"))
-        .repartition(16).write.mode("overwrite").parquet(src)
-    }
+    graft.Tables(spark, dir, "events")
+      .select(col("event_id"), unix_micros(col("ts")).as("ts"),
+        col("user_id"), col("event_type"),
+        when(col("event_id") % 11 === 0, lit(null).cast("double"))
+          .otherwise(col("value")).as("value"))
+      .repartition(16).write.mode("overwrite").parquet(src)
     val wh = graft.TempDirs.scratch("graft-st26-wh")
     val fact = s"$wh/events_clean"
     val dlq = s"$wh/events_dlq"
@@ -1975,13 +1929,11 @@ object EventStream {
             // the clean-state commit and the DLQ delta append write
             // DIFFERENT tables — two independent scheduling-dominated
             // commits per batch, submitted concurrently (guide §2.6)
-            graft.BenchPhase.land {
-              graft.Overlap.pair(
-                Checks.commitChecked(state, fact, gate,
-                  tag = Some(s"clean-$id")),
-                if (hasBad) { Mor.append(bad, dlq, tag = Some(s"dlq-$id")); () }
-                else ())
-            }
+            graft.Overlap.pair(
+              Checks.commitChecked(state, fact, gate,
+                tag = Some(s"clean-$id")),
+              if (hasBad) { Mor.append(bad, dlq, tag = Some(s"dlq-$id")); () }
+              else ())
             ()
           }
         } finally { cached.unpersist(); () }
@@ -2034,14 +1986,12 @@ object EventStream {
     val src = graft.TempDirs.scratch("graft-st27-src")
     // the CDC-honest keyed grain (q125): the raw (orderkey, linenumber)
     // is not unique in this corpus
-    graft.BenchPhase.land {
-      graft.Tables(spark, dir, "lineitem")
-        .groupBy(col("l_orderkey"), col("l_linenumber"))
-        .agg(count(lit(1)).as("qty"),
-          sum(col("l_extendedprice").cast("decimal(18,2)")).as("price"))
-        .repartition(16)
-        .write.mode("overwrite").parquet(src)
-    }
+    graft.Tables(spark, dir, "lineitem")
+      .groupBy(col("l_orderkey"), col("l_linenumber"))
+      .agg(count(lit(1)).as("qty"),
+        sum(col("l_extendedprice").cast("decimal(18,2)")).as("price"))
+      .repartition(16)
+      .write.mode("overwrite").parquet(src)
 
     val martSchema = StructType(Seq(
       StructField("o_month", StringType),
@@ -2162,12 +2112,10 @@ object EventStream {
   def st29StreamWriteOrder(spark: SparkSession, dir: String): DataFrame = {
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st29-src")
-    graft.BenchPhase.land {
-      graft.Tables(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"))
-        .repartition(16)
-        .write.mode("overwrite").parquet(src)
-    }
+    graft.Tables(s, dir, "events")
+      .select(col("event_id"), col("user_id"), col("event_type"))
+      .repartition(16)
+      .write.mode("overwrite").parquet(src)
     val table = s"${graft.TempDirs.scratch("graft-st29-tbl")}/events_ordered"
     // declare the write order BEFORE any data lands: every commit of
     // this table — batch or streaming — clusters on user_id

@@ -148,9 +148,16 @@ class PipelineRunnerSpec extends AnyFunSuite {
     runner.run(Seq(clean), Map("src" -> Seq((1, "a"), (2, "b")).toDF("k", "v")))
     assert(runner.readModel("m").count() == 2)
     val dirty = Seq((1, "a"), (1, "b")).toDF("k", "v") // duplicate key
+    // a check-free sibling at the same level builds concurrently: the
+    // abort does not undo it, and it has finished committing by the
+    // time `run` throws
+    val sibling = Model("n", Seq("src"), Materialization.Table,
+      (in, _) => in("src"))
     val e = intercept[IllegalArgumentException](
-      runner.run(Seq(clean), Map("src" -> dirty)))
+      runner.run(Seq(clean, sibling), Map("src" -> dirty)))
     assert(e.getMessage.contains("unique(k)"))
+    assert(Snapshots.versions(runner.tableDir("n")).size == 1)
+    assert(runner.readModel("n").count() == 2)
   }
 
   test("severity=warn checks report but never abort; error still does") {

@@ -193,6 +193,23 @@ class StoreOptSpec extends AnyFunSuite {
     assert(Overlap.jobs(Seq(1, 2, 3))(_ * 10) == Seq(10, 20, 30))
   }
 
+  test("Overlap leaves no action running or queued once it has thrown") {
+    // a failed Runner level must not keep committing siblings behind
+    // the caller's back: queued items are cancelled, running ones are
+    // waited for before the exception surfaces
+    val done = new java.util.concurrent.atomic.AtomicInteger(0)
+    intercept[IllegalStateException] {
+      Overlap.jobs(Seq(0, 1, 2, 3), maxThreads = 2) { i =>
+        if (i == 0) throw new IllegalStateException("boom")
+        Thread.sleep(200)
+        done.incrementAndGet()
+      }
+    }
+    val atThrow = done.get()
+    Thread.sleep(500)
+    assert(done.get() == atThrow)
+  }
+
   test("concurrently-staged commitTxn lands both tables atomically") {
     import graft.sources.Snapshots
     import spark.implicits._
