@@ -129,8 +129,9 @@ object Engine {
   // reads: top-level ledger/sidecar files (manifest, _times, _commits,
   // _schemas, _props, …) by size+mtime, top-level dirs (new v=N /
   // c=N / _tablestats versions) by name+mtime, the transform store's
-  // data directory tree (appendEvolved adds files without touching a
-  // top-level ledger — leaf dir mtimes catch it), the stats sidecar
+  // data directory tree (an append into existing leaves does not
+  // change the `_partitions` manifest's content — leaf dir mtimes
+  // catch it), the stats sidecar
   // files (they flip the broadcast hint). Weak keys: a stopped
   // session must not be pinned.
   private val regMemo = java.util.Collections.synchronizedMap(
@@ -179,7 +180,7 @@ object Engine {
     listSorted(root).foreach(f => stamp(f, f.getFileName.toString))
     // transform-store data tree: dir mtimes see appended files, and a
     // per-directory ENTRY COUNT closes the mtime-granularity hole (two
-    // appendEvolved batches landing in the same millisecond tick, or a
+    // Transforms.append batches landing in the same millisecond tick, or a
     // coarse-mtime filesystem, leave the mtime unchanged — the count
     // still moves)
     val data = root.resolve("data")
@@ -277,7 +278,7 @@ object Engine {
 
   /** Latest view of a warehouse table, whichever store backs it.
     * Store markers are mutually exclusive by construction (`_commits`
-    * = MoR ledger, `_spec`/`_specs` = hidden-partition transform,
+    * = MoR ledger, `_specs` = hidden-partition transform ledger,
     * `_manifest` = CoW snapshot) — a dir carrying two would silently
     * flip semantics depending on check order, so fail loudly instead.
     */
@@ -295,14 +296,12 @@ object Engine {
     */
   private def assertStoreExclusive(dir: String): Unit = {
     val p = java.nio.file.Paths.get(dir)
-    val markers = Seq("_commits", "_spec", "_specs", "_manifest")
+    val markers = Seq("_commits", "_specs", "_manifest")
       .filter(m => java.nio.file.Files.exists(p.resolve(m)))
-      // _spec and _specs are two generations of the SAME store
-      .map { case "_specs" => "_spec"; case m => m }.distinct
     require(markers.size <= 1,
       s"table dir $dir carries conflicting store markers ${markers.mkString(", ")}: " +
         "a table is exactly one of merge-on-read (_commits), " +
-        "transform-partitioned (_spec) or snapshot (_manifest)")
+        "transform-partitioned (_specs) or snapshot (_manifest)")
   }
 
   /** (qualified name, table dir) for every table under the warehouse:
@@ -315,15 +314,14 @@ object Engine {
       else {
         val listing = java.nio.file.Files.list(root)
         // snapshot (_manifest), merge-on-read (_commits) and hidden-
-        // partition transform tables (_spec/_specs) are ALL catalog
+        // partition transform tables (_specs) are ALL catalog
         // entries — a SQL user sees one namespace regardless of store.
         // A transform table needs its first landed data to be
         // queryable (the spec ledger alone carries no schema).
         try listing.iterator().asScala
           .filter(p => java.nio.file.Files.exists(p.resolve("_manifest")) ||
             java.nio.file.Files.exists(p.resolve("_commits")) ||
-            ((java.nio.file.Files.exists(p.resolve("_spec")) ||
-              java.nio.file.Files.exists(p.resolve("_specs"))) &&
+            (java.nio.file.Files.exists(p.resolve("_specs")) &&
               java.nio.file.Files.exists(p.resolve("data"))))
           .toSeq
         finally listing.close()
@@ -883,28 +881,11 @@ object Engine {
   private def viewsLedger(wh: String) =
     java.nio.file.Paths.get(wh, "_views")
 
-  // CREATE/DROP VIEW mutate the ledger under an exclusive lock
-  // (the store convention — Snapshots.withManifestLock's shape): a
+  // CREATE/DROP VIEW mutate the ledger under an exclusive lock: a
   // concurrent CREATE interleaving a DROP's read-rewrite would
-  // otherwise lose one of the two writes silently. Per-warehouse JVM
-  // monitor FIRST (two sessions of ONE Spark app — the Kyuubi share
-  // model — would otherwise hit OverlappingFileLockException, since
-  // FileChannel locks are held per-JVM), then the file lock
-  // arbitrates across processes.
-  private val viewsJvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def withViewsLock[A](wh: String)(f: => A): A = {
-    import java.nio.file.StandardOpenOption._
-    val key = java.nio.file.Paths.get(wh).toAbsolutePath.normalize.toString
-    val monitor = viewsJvmLocks.computeIfAbsent(key, _ => new Object)
-    monitor.synchronized {
-      val ch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(wh, "_views.lock"), CREATE, WRITE)
-      try { val l = ch.lock(); try f finally l.release() }
-      finally ch.close()
-    }
-  }
+  // otherwise lose one of the two writes silently
+  private def withViewsLock[A](wh: String)(f: => A): A =
+    FileLocks.withLock(java.nio.file.Paths.get(wh, "_views.lock"))(f)
 
   private def viewDefs(wh: String): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._

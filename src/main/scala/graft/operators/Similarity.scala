@@ -466,8 +466,7 @@ object Similarity {
   // but BEFORE its ledger line converges on replay because every file
   // a tag lands carries a name derived from the tag (`ann-<tag>-<i>`)
   // — the replay first clears the tag's residue, re-lands the same
-  // set, then commits the line. Same JVM-monitor + FileChannel lock
-  // shape as Snapshots.withManifestLock.
+  // set, then commits the line, under `_append.lock` (FileLocks).
   private def appendLedgerPath(idxDir: String) =
     java.nio.file.Paths.get(idxDir, "_append_ledger")
 
@@ -481,21 +480,8 @@ object Similarity {
     }
   }
 
-  private val appendLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def withAppendLock[A](idxDir: String)(f: => A): A = {
-    val key = java.nio.file.Paths.get(idxDir)
-      .toAbsolutePath.normalize.toString
-    val monitor = appendLocks.computeIfAbsent(key, _ => new Object)
-    monitor.synchronized {
-      import java.nio.file.StandardOpenOption._
-      val ch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(idxDir, "_append.lock"), CREATE, WRITE)
-      try { val l = ch.lock(); try f finally l.release() }
-      finally ch.close()
-    }
-  }
+  private def withAppendLock[A](idxDir: String)(f: => A): A =
+    graft.FileLocks.withLock(java.nio.file.Paths.get(idxDir, "_append.lock"))(f)
 
   /** APPEND a batch of new vectors into a stored ANN index without
     * rebuilding it — the production ingest path of every IVF store
@@ -802,7 +788,7 @@ object Similarity {
       }
       // width-pinned (one task per cell, cells spread over the width)
       // instead of AQE-coalesced to one serial writer — same move as
-      // Transforms.land (guide §2.6/§6)
+      // Transforms.append (guide §2.6/§6)
       live0.repartition(spark.sessionState.conf.numShufflePartitions,
           col("cell_id"))
         .write.mode(SaveMode.Overwrite).partitionBy("cell_id").parquet(staging)

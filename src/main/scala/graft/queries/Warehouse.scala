@@ -180,13 +180,13 @@ object Warehouse {
 
   /** q60's evolved landing: 1995 under the MONTH spec, then the spec
     * evolves and 1996-Q1 lands under the DAY spec; the query range
-    * spans the evolution boundary.
+    * (inclusive dates) spans the evolution boundary.
     */
   val Q60From = "1995-11-15"
   val Q60To = "1996-02-15"
 
   def landEvolvedOrders(spark: SparkSession, dir: String): Landed = {
-    import graft.sources.Layouts
+    import graft.sources.Transforms
     val path = tempDir("graft-evolve")
     val orders = Tables(spark, dir, "orders").select(
       col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -194,23 +194,26 @@ object Warehouse {
     def slice(from: String, until: String) =
       orders.filter(col("o_orderdate") >= lit(from).cast("timestamp") &&
         col("o_orderdate") < lit(until).cast("timestamp"))
-    Layouts.evolveTo(path, Layouts.ByMonth)
-    Layouts.append(spark, path, slice("1995-01-01", "1996-01-01"), "o_orderdate")
+    Transforms.create(path, Seq(Transforms.Months("o_orderdate")))
+    Transforms.append(spark, path, slice("1995-01-01", "1996-01-01"))
     // the table grew; partitions evolve month -> day WITHOUT rewriting
-    // the 1995 files (they keep their month directories)
-    Layouts.evolveTo(path, Layouts.ByDay)
-    Layouts.append(spark, path, slice("1996-01-01", "1996-04-01"), "o_orderdate")
-    Landed(Layouts.scan(spark, path, "o_orderdate", Q60From, Q60To), path)
+    // the 1995 files (they keep their month leaves under spec 0)
+    Transforms.evolve(path, Seq(Transforms.Days("o_orderdate")))
+    Transforms.append(spark, path, slice("1996-01-01", "1996-04-01"))
+    val toExcl = java.time.LocalDate.parse(Q60To).plusDays(1).toString
+    val (rows, _, _) = Transforms.scan(spark, path,
+      Transforms.TimeRange("o_orderdate", Q60From, toExcl))
+    Landed(rows, path)
   }
 
   /** q60: partition-spec evolution, end-to-end — the Iceberg
-    * hidden-partitioning surface ([[graft.sources.Layouts]]): orders
-    * land month-partitioned, the spec evolves to day partitions, later
-    * data lands under the new layout, and ONE date-range query spans
-    * both. Each layout is pruned at scan planning from the same
-    * user-facing range (WarehouseSpec asserts PartitionFilters and the
-    * files read on both sides); the oracle recomputes the range from
-    * the raw table, proving the two-layout union loses nothing.
+    * hidden-partitioning surface ([[graft.sources.Transforms]]): orders
+    * land under spec 0 = `months(o_orderdate)`, the spec evolves to
+    * `days(o_orderdate)`, later data lands under spec 1, and ONE
+    * date-range query spans both. Each spec's leaves are pruned at
+    * scan planning from the same user-facing range (WarehouseSpec pins
+    * the files read per spec); the oracle recomputes the range from
+    * the raw table, proving the two-spec union loses nothing.
     */
   def q60EvolvedPartitions(spark: SparkSession, dir: String): DataFrame =
     landEvolvedOrders(spark, dir).df
@@ -360,7 +363,7 @@ object Warehouse {
   }
 
   /** q132: HIDDEN-PARTITION tables IN the SQL catalog — a transform-
-    * partitioned table (Iceberg hidden partitioning, `_specs` layout)
+    * partitioned table (Iceberg hidden partitioning, `_specs` ledger)
     * is a first-class catalog citizen: SHOW TABLES lists it, SELECT
     * reads it with every `__pv*`/`__spec` partition-key column
     * hidden ([[graft.sources.Transforms.readAll]] — hidden means the
@@ -389,12 +392,13 @@ object Warehouse {
     // history wrote thousands of tiny directories (115 s at sf0.1)
     // for zero extra semantics; months() exercises the same
     // evolution with 15 tuples total
-    Transforms.createEvolved(t, Seq(Transforms.Months("o_orderdate")))
-    Transforms.appendEvolved(spark, t, stg.filter(
+    Transforms.create(t, Seq(Transforms.Months("o_orderdate")))
+    Transforms.append(spark, t, stg.filter(
       col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1995-04-01").cast("timestamp")))
-    Transforms.addPartitionField(t, Transforms.MBucket(4, "o_orderkey"))
-    Transforms.appendEvolved(spark, t, stg.filter(
+    Transforms.evolve(t, Seq(Transforms.Months("o_orderdate"),
+      Transforms.MBucket(4, "o_orderkey")))
+    Transforms.append(spark, t, stg.filter(
       col("o_orderdate") >= lit("1995-04-01").cast("timestamp") &&
         col("o_orderdate") < lit("1995-07-01").cast("timestamp")))
     def sql(q: String) = graft.Engine.sqlWarehouse(spark, wh, q)
@@ -1307,7 +1311,7 @@ object Warehouse {
     * [[graft.sources.Transforms]]: the table's metadata records
     * `days(ts)` / `bucket(n, key)`, queries name only the RAW column,
     * and planning turns the raw predicate into the exact file set by
-    * transform arithmetic against the `_pvals` manifest (reference:
+    * transform arithmetic against the `_partitions` manifest (reference:
     * the CDC landing partitions by the source timestamp the reader
     * never names — docs/components/cdc.md; Iceberg partition
     * transforms). Two legs: a quarter of orders lands days-partitioned
@@ -1329,19 +1333,21 @@ object Warehouse {
       col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1995-04-01").cast("timestamp"))
     val tDays = s"$wh/orders_by_day"
-    Transforms.land(spark, tDays, q1, Transforms.Days("o_orderdate"))
-    val (dr, dKept, dTotal) =
-      Transforms.scanDays(spark, tDays, "1995-03-01", "1995-03-08")
+    Transforms.create(tDays, Seq(Transforms.Days("o_orderdate")))
+    Transforms.append(spark, tDays, q1)
+    val (dr, dKept, dTotal) = Transforms.scan(spark, tDays,
+      Transforms.TimeRange("o_orderdate", "1995-03-01", "1995-03-08"))
     // bucket(8, o_orderkey) point lookups on the full table
     val tBuck = s"$wh/orders_by_bucket"
-    Transforms.land(spark, tBuck,
-      orders.select(col("o_orderkey"), col("o_totalprice")),
-      Transforms.Bucket(8, "o_orderkey"))
+    Transforms.create(tBuck, Seq(Transforms.Bucket(8, "o_orderkey")))
+    Transforms.append(spark, tBuck,
+      orders.select(col("o_orderkey"), col("o_totalprice")))
     val bounds = orders.agg(
       min(col("o_orderkey")).cast("long"),
       max(col("o_orderkey")).cast("long")).head
     val keys = Seq(bounds.getLong(0), bounds.getLong(1))
-    val (br, bKept, bTotal) = Transforms.scanKeys(spark, tBuck, keys)
+    val (br, bKept, bTotal) =
+      Transforms.scan(spark, tBuck, Transforms.LongKeys("o_orderkey", keys))
     def leg(rows: DataFrame, name: String, kept: Long, total: Long) =
       rows.agg(count(lit(1)).as("n_rows"),
           dsum(col("o_totalprice")).as("revenue"))
@@ -1374,12 +1380,12 @@ object Warehouse {
     graft.functions.GraftFunctions.register(spark)
     val wh = tempDir("graft-mbucket")
     val t = s"$wh/supplier_by_key"
-    Transforms.land(spark, t,
-      Tables(spark, dir, "supplier").select(
-        col("s_suppkey"), col("s_name"), col("s_acctbal")),
-      Transforms.MBucket(8, "s_suppkey"))
+    Transforms.create(t, Seq(Transforms.MBucket(8, "s_suppkey")))
+    Transforms.append(spark, t, Tables(spark, dir, "supplier").select(
+      col("s_suppkey"), col("s_name"), col("s_acctbal")))
     val keys = Seq(1L, 3L, 5L, 7L)
-    val (rows, kept, _) = Transforms.scanKeys(spark, t, keys)
+    val (rows, kept, _) =
+      Transforms.scan(spark, t, Transforms.LongKeys("s_suppkey", keys))
     rows.select(col("s_suppkey"), col("s_name"))
       .withColumn("bucket_id",
         graft.functions.GraftFunctions.icebergBucket(col("s_suppkey"), 8))
@@ -1394,7 +1400,7 @@ object Warehouse {
     * hash-map is oracle-restatable: all 25 nations with the engine's
     * codegen'd bucket of BOTH the integral key and the name, plus a
     * 2-name point lookup against the name-bucketed LAYOUT
-    * ([[graft.sources.Transforms.scanStringKeys]]) pinning
+    * ([[graft.sources.Transforms.StringKeys]]) pinning
     * `n_files_read`/`n_files_total` (the 25 names happen to cover
     * all 8 buckets). Every bucket constant in the oracle was
     * precomputed with the spec arithmetic — 50 independent equalities
@@ -1408,9 +1414,10 @@ object Warehouse {
     val t = s"$wh/nation_by_name"
     val nation = Tables(spark, dir, "nation")
       .select(col("n_nationkey"), col("n_name"))
-    Transforms.land(spark, t, nation, Transforms.MBucket(8, "n_name"))
-    val (hit, kept, total) =
-      Transforms.scanStringKeys(spark, t, Seq("NATION_3", "NATION_7"))
+    Transforms.create(t, Seq(Transforms.MBucket(8, "n_name")))
+    Transforms.append(spark, t, nation)
+    val (hit, kept, total) = Transforms.scan(spark, t,
+      Transforms.StringKeys("n_name", Seq("NATION_3", "NATION_7")))
     val nHit = hit.count()
     nation
       .withColumn("bucket_key", GraftFunctions.icebergBucket(col("n_nationkey"), 8))
@@ -1438,10 +1445,11 @@ object Warehouse {
     import graft.sources.Transforms
     val wh = tempDir("graft-trunc")
     val t = s"$wh/orders_by_custgroup"
-    Transforms.land(spark, t,
-      Tables(spark, dir, "orders").select(col("o_custkey"), col("o_totalprice")),
-      Transforms.TruncateLong(50L, "o_custkey"))
-    val (rows, kept, total) = Transforms.scanRange(spark, t, 50L, 150L)
+    Transforms.create(t, Seq(Transforms.TruncateLong(50L, "o_custkey")))
+    Transforms.append(spark, t,
+      Tables(spark, dir, "orders").select(col("o_custkey"), col("o_totalprice")))
+    val (rows, kept, total) =
+      Transforms.scan(spark, t, Transforms.LongRange("o_custkey", 50L, 150L))
     rows.groupBy((col("o_custkey") - pmod(col("o_custkey"), lit(50L)))
         .as("trunc_group"))
       .agg(count(lit(1)).as("n_orders"), dsum(col("o_totalprice")).as("revenue"))
@@ -1457,7 +1465,7 @@ object Warehouse {
     * partitions by (a day layout is millions of directories; a
     * month layout is thousands). All time transforms are MONOTONE,
     * so a raw-timestamp range prunes to a contiguous value range
-    * via [[graft.sources.Transforms.scanTimeRange]] — the
+    * via [[graft.sources.Transforms.TimeRange]] — the
     * to-exclusive bound evaluated at −1µs never opens the group
     * above an exact boundary, and misaligned bounds (the months leg
     * starts/ends mid-month here deliberately) stay exact through
@@ -1471,13 +1479,15 @@ object Warehouse {
     val orders = Tables(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"))
     val tM = s"$wh/orders_by_month"
-    Transforms.land(spark, tM, orders, Transforms.Months("o_orderdate"))
-    val (mr, mKept, mTotal) = Transforms.scanTimeRange(spark, tM,
-      "1995-03-15 00:00:00", "1995-06-15 00:00:00")
+    Transforms.create(tM, Seq(Transforms.Months("o_orderdate")))
+    Transforms.append(spark, tM, orders)
+    val (mr, mKept, mTotal) = Transforms.scan(spark, tM, Transforms.TimeRange(
+      "o_orderdate", "1995-03-15 00:00:00", "1995-06-15 00:00:00"))
     val tY = s"$wh/orders_by_year"
-    Transforms.land(spark, tY, orders, Transforms.Years("o_orderdate"))
-    val (yr, yKept, yTotal) = Transforms.scanTimeRange(spark, tY,
-      "1996-01-01 00:00:00", "1997-01-01 00:00:00")
+    Transforms.create(tY, Seq(Transforms.Years("o_orderdate")))
+    Transforms.append(spark, tY, orders)
+    val (yr, yKept, yTotal) = Transforms.scan(spark, tY, Transforms.TimeRange(
+      "o_orderdate", "1996-01-01 00:00:00", "1997-01-01 00:00:00"))
     def leg(rows: DataFrame, name: String, kept: Long, total: Long) =
       rows.agg(count(lit(1)).as("n_rows"), dsum(col("o_totalprice")).as("revenue"))
         .select(lit(name).as("leg"), col("n_rows"), col("revenue"),
@@ -1643,7 +1653,7 @@ object Warehouse {
   }
 
   /** q102: PARTITION-SPEC EVOLUTION — Iceberg's `ALTER TABLE … ADD
-    * PARTITION FIELD` ([[graft.sources.Transforms.addPartitionField]];
+    * PARTITION FIELD` ([[graft.sources.Transforms.evolve]];
     * reference: the lakehouse "partition evolution" ACID surface,
     * docs/architecture/lakehouse.md:3, over the CDC landing's hidden
     * `days(ts)` layout, docs/components/cdc.md): January orders land
@@ -1674,18 +1684,19 @@ object Warehouse {
     val feb = orders.filter(
       col("o_orderdate") >= lit("1995-02-01").cast("timestamp") &&
         col("o_orderdate") < lit("1995-03-01").cast("timestamp"))
-    Transforms.createEvolved(t, Seq(Transforms.Days("o_orderdate")))
-    Transforms.appendEvolved(spark, t, jan)
-    Transforms.addPartitionField(t, Transforms.Bucket(4, "o_custkey"))
-    Transforms.appendEvolved(spark, t, feb)
+    Transforms.create(t, Seq(Transforms.Days("o_orderdate")))
+    Transforms.append(spark, t, jan)
+    Transforms.evolve(t, Seq(Transforms.Days("o_orderdate"),
+      Transforms.Bucket(4, "o_custkey")))
+    Transforms.append(spark, t, feb)
     val bounds = feb.agg(
       min(col("o_custkey")).cast("long"),
       max(col("o_custkey")).cast("long")).head
     val keys = Seq(bounds.getLong(0), bounds.getLong(1)).distinct
-    val (spanRows, spanRead, total) = Transforms.scanEvolved(spark, t,
-      dayRange = Some(("1995-01-28", "1995-02-05")))
-    val (keyRows, keyRead, _) = Transforms.scanEvolved(spark, t,
-      keys = Some(keys))
+    val (spanRows, spanRead, total) = Transforms.scan(spark, t,
+      Transforms.TimeRange("o_orderdate", "1995-01-28", "1995-02-05"))
+    val (keyRows, keyRead, _) =
+      Transforms.scan(spark, t, Transforms.LongKeys("o_custkey", keys))
     def leg(rows: DataFrame, name: String, read: Long) =
       rows.agg(count(lit(1)).as("n_rows"),
           dsum(col("o_totalprice")).as("revenue"))

@@ -1,8 +1,7 @@
 package graft.sources
 
-import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -58,18 +57,6 @@ object Mor {
       tag: Option[String] = None)
 
 
-  /** See Snapshots.compactLocal: a driver-local frame writes one file,
-    * not default-parallelism many. */
-  private def compactLocal(df: DataFrame): DataFrame = {
-    // isLocal alone misses toDF's Project-over-LocalRelation; the
-    // optimizer collapses that back to a LocalRelation, so check there
-    val local = df.isLocal || (df.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
-      case _ => false
-    })
-    if (local) df.coalesce(1) else df
-  }
-
   private def ledger(tableDir: String) = Paths.get(tableDir, "_commits")
 
   /** Ledger lines in commit-id order (empty if table doesn't exist). */
@@ -85,33 +72,13 @@ object Mor {
       }.sortBy(_.id)
   }
 
-  private def reserveId(tableDir: String): Long = {
-    var id = commits(tableDir).lastOption.map(_.id).getOrElse(0L) + 1L
-    while ({
-      try { Files.createFile(Paths.get(tableDir, s"_reserve.$id")); false }
-      catch { case _: FileAlreadyExistsException => id += 1L; true }
-    }) ()
-    id
-  }
+  // commit ids share Snapshots' `_reserve.<n>` marker rule
+  private def reserveId(tableDir: String): Long =
+    Snapshots.reserveId(tableDir,
+      commits(tableDir).lastOption.map(_.id).getOrElse(0L))
 
-  // per-table JVM monitor first (two sessions of one Spark app —
-  // FileChannel locks are per-JVM and overlap throws, not waits),
-  // then the file lock arbitrates across processes — the
-  // Snapshots.withManifestLock convention
-  private val ledgerJvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def withLedgerLock[A](tableDir: String)(f: => A): A = {
-    val key = Paths.get(tableDir).toAbsolutePath.normalize.toString
-    val monitor = ledgerJvmLocks.computeIfAbsent(key, _ => new Object)
-    monitor.synchronized {
-      val lockPath = Paths.get(tableDir, "_commits.lock")
-      val ch = FileChannel.open(lockPath,
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try { val l = ch.lock(); try f finally l.release() }
-      finally ch.close()
-    }
-  }
+  private def withLedgerLock[A](tableDir: String)(f: => A): A =
+    graft.FileLocks.withLock(Paths.get(tableDir, "_commits.lock"))(f)
 
   /** Write `df` under a fresh commit id, then ledger it (append LAST,
     * so readers never see an in-flight commit). `tag` makes the
@@ -129,7 +96,7 @@ object Mor {
       s"tag must not contain tab/newline: $t"))
     Files.createDirectories(Paths.get(tableDir))
     val id = reserveId(tableDir)
-    compactLocal(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/c=$id")
+    Snapshots.compactLocal(df).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/c=$id")
     withLedgerLock(tableDir) {
       val existing = tag.flatMap(t => commits(tableDir).find(_.tag.contains(t)))
       existing.map(_.id).getOrElse {
@@ -290,8 +257,8 @@ object Mor {
     // CDC-batch sizes each write is a scheduling-dominated job — the
     // pair costs max() instead of sum()
     graft.Overlap.pair(
-      compactLocal(deletes).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/c=$delId"),
-      compactLocal(data).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/c=$addId"))
+      Snapshots.compactLocal(deletes).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/c=$delId"),
+      Snapshots.compactLocal(data).write.mode(SaveMode.Overwrite).parquet(s"$tableDir/c=$addId"))
     withLedgerLock(tableDir) {
       replayedPair(tableDir, tag).getOrElse {
         val lines =

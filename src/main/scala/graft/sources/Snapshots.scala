@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardOpenOption}
 
@@ -120,38 +119,19 @@ object Snapshots {
       if (!committedTags(tableDir).contains(tag)) appendTag(tableDir, version, tag)
     }
 
-  // FileChannel locks are held per-JVM: a second thread in the same
-  // JVM (parallel test committers, streaming writers sharing a
-  // SparkSession) hits OverlappingFileLockException instead of
-  // waiting. Serialize same-JVM committers on a per-table monitor
-  // FIRST; the file lock then only arbitrates across processes.
-  private val jvmLocks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
+  /** Exclusive lock for manifest appends (`_manifest.lock`). */
+  private def withManifestLock[A](tableDir: String)(f: => A): A =
+    graft.FileLocks.withLock(Paths.get(tableDir, "_manifest.lock"))(f)
 
-  /** Exclusive lock for manifest appends: per-table JVM monitor (same
-    * process) + `FileChannel` lock (cross-process).
+  /** Claim the next free id after `last`. `Files.createFile` is
+    * atomic on POSIX filesystems, so exactly one committer wins each
+    * id; losers advance and retry. Markers (`_reserve.<n>`) are never
+    * deleted — a reserved id stays burned even if its commit crashed,
+    * so a later committer can never overwrite a directory someone
+    * else may still be writing. Shared with [[Mor]]'s commit ids.
     */
-  private def withManifestLock[A](tableDir: String)(f: => A): A = {
-    val key = Paths.get(tableDir).toAbsolutePath.normalize.toString
-    val monitor = jvmLocks.computeIfAbsent(key, _ => new Object)
-    monitor.synchronized {
-      val ch = FileChannel.open(Paths.get(tableDir, "_manifest.lock"),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock()
-        try f finally lock.release()
-      } finally ch.close()
-    }
-  }
-
-  /** Claim the next free version id. `Files.createFile` is atomic on
-    * POSIX filesystems, so exactly one committer wins each id; losers
-    * advance and retry. Markers are never deleted — a reserved id
-    * stays burned even if its commit crashed, so a later committer
-    * can never overwrite a directory someone else may still be
-    * writing.
-    */
-  private def reserveVersion(tableDir: String): Long = {
-    var v = versions(tableDir).lastOption.getOrElse(0L) + 1L
+  private[sources] def reserveId(tableDir: String, last: Long): Long = {
+    var v = last + 1L
     var claimed = false
     while (!claimed) {
       try {
@@ -163,6 +143,9 @@ object Snapshots {
     }
     v
   }
+
+  private def reserveVersion(tableDir: String): Long =
+    reserveId(tableDir, versions(tableDir).lastOption.getOrElse(0L))
 
   /** Write `df` as the next snapshot; returns the committed version
     * id. `tag` (no tabs/newlines) is recorded with the version and
@@ -181,7 +164,7 @@ object Snapshots {
     * (guide §6 output sizing; a LocalRelation is by definition
     * driver-small). Distributed frames are untouched.
     */
-  private def compactLocal(df: DataFrame): DataFrame = {
+  private[sources] def compactLocal(df: DataFrame): DataFrame = {
     // isLocal alone misses toDF's Project-over-LocalRelation; the
     // optimizer collapses that back to a LocalRelation, so check there
     val local = df.isLocal || (df.queryExecution.optimizedPlan match {

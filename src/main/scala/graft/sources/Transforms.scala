@@ -1,51 +1,61 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Iceberg-style PARTITION TRANSFORMS with file-level pruning — the
-  * other half of hidden partitioning next to [[Layouts]] (which
-  * evolves Hive directory specs): here the transform itself is
-  * RECORDED IN THE TABLE'S METADATA, the partition value never
-  * appears in user queries, and scan planning turns a predicate on
-  * the RAW source column into the exact set of files to open via
-  * transform arithmetic alone (reference: the CDC landing is
-  * "partitioned by" the source timestamp — docs/components/cdc.md —
-  * and Iceberg's spec derives `days(ts)` / `bucket(n, key)` values
-  * the reader never names).
+import graft.functions.IcebergMurmur3
+
+/** Iceberg-style HIDDEN PARTITIONING with spec evolution and
+  * file-level pruning: the partition transforms are RECORDED IN THE
+  * TABLE'S METADATA, the partition values never appear in user
+  * queries, and scan planning turns a predicate on the RAW source
+  * column into the exact set of files to open via transform
+  * arithmetic alone (reference: the CDC landing is "partitioned by"
+  * the source timestamp — docs/components/cdc.md — and Iceberg's spec
+  * derives `days(ts)` / `bucket(n, key)` values the reader never
+  * names).
   *
   * Layout:
-  *   tableDir/data/__pv=<v>/…parquet   one directory per partition value
-  *   tableDir/_spec                    "<transform>\t<sourceCol>[\t<n>]"
-  *   tableDir/_pvals                   one partition value per line
+  *   tableDir/_specs        the spec ledger, oldest first: one line per
+  *                          spec, `<sid>|<specLine>[;<specLine>…]`
+  *                          ('|' and ';' because specLines hold tabs)
+  *   tableDir/data/__spec=<sid>/__pv0=<v>[/__pv1=<w>…]/…parquet
+  *                          one leaf directory per partition tuple,
+  *                          under the spec CURRENT when it was written
+  *   tableDir/_partitions   the manifest: one `<sid>|<v0>[,<v1>…]`
+  *                          line per leaf
+  *   tableDir/_batches      batch ids already appended (idempotence)
   *
-  * `land` repartitions by the derived value before the partitioned
-  * write, so every value directory is written by exactly ONE task →
-  * exactly one file per partition value; `n_files_read` below is
-  * therefore the partition-value count and oracle-derivable from the
-  * transform arithmetic. `_pvals` (the manifest) is written from the
-  * directory listing after the write — planning reads ONLY this
-  * sidecar, never a data footer: cost = one tiny file, independent of
-  * data size. At 100 TB a day-range query opens the hit days and a
-  * key lookup opens one bucket; everything else is never listed.
+  * A single-field table is simply spec 0 with one field. Evolving the
+  * spec ([[evolve]]) is ONE ledger line — zero data paths touched,
+  * exactly Iceberg's ADD/REPLACE PARTITION FIELD — and old files keep
+  * their own spec: [[scan]] prunes EACH leaf by the fields ITS spec
+  * records, so old files prune coarser (never wrongly) until a
+  * rewrite lands them under the new spec.
+  *
+  * [[append]] repartitions by the derived tuple before the
+  * partitioned write, so every leaf is written by exactly ONE task →
+  * exactly one file per partition tuple per write; `filesRead` below
+  * therefore counts leaves and is oracle-derivable from the transform
+  * arithmetic. `_partitions` is rebuilt from the directory listing
+  * after every write — planning reads ONLY the two sidecars, never a
+  * data listing or footer: cost = two tiny files, independent of data
+  * size. At 100 TB a day-range query opens the hit days and a key
+  * lookup opens one bucket; everything else is never listed.
   *
   * Transforms:
-  *   - `days(srcTimestamp)` — value = days since 1970-01-01 of the
-  *     source timestamp (Iceberg's `days` transform exactly).
-  *   - `bucket(n, srcKey)` — value = key mod n. (Iceberg specs
-  *     murmur3-32 here; this engine's recorded bucket function is
-  *     `mod`, deterministic and cross-engine reproducible — the
-  *     planner and writer share whatever function the spec records,
-  *     which is the property that matters.)
+  *   - `days/hours/months/years(ts)` — time since 1970-01-01 (UTC) of
+  *     the source timestamp, Iceberg's time transforms exactly.
+  *   - `bucket(n, key)` — key mod n, the engine's legacy bucket.
+  *   - `mbucket(n, key)` — the Iceberg-spec murmur3 bucket.
+  *   - `truncate(w, key)` — key floored to a multiple of w.
   */
 object Transforms {
-
-  private val PvCol = "__pv"
 
   sealed trait Transform {
     def sourceCol: String
@@ -93,10 +103,10 @@ object Transforms {
     * time-transform family next to [[Days]] — hours/months/years
     * since epoch (1970-01-01 / 1970-01). All monotone in the source
     * timestamp, so a raw time-range predicate prunes to a contiguous
-    * value range ([[scanTimeRange]]). Months and years are the
-    * coarser CDC-landing layouts a slowly-growing table wants (a
-    * day-partitioned 100 TB table is millions of directories; a
-    * month-partitioned one is thousands).
+    * value range. Months and years are the coarser CDC-landing
+    * layouts a slowly-growing table wants (a day-partitioned 100 TB
+    * table is millions of directories; a month-partitioned one is
+    * thousands).
     */
   final case class Hours(sourceCol: String) extends Transform {
     def derive: Column = {
@@ -146,28 +156,8 @@ object Transforms {
     case TruncateLong(w, c) => s"truncate($w, $c)"
   }
 
-  /** DDL spellings of the table's CURRENT partition fields (latest
-    * `_specs` entry for spec-evolved tables, the single `_spec`
-    * otherwise); empty when not transform-partitioned. A pure sidecar
-    * read — metadata-only at any table size (SHOW CREATE TABLE's
-    * partition clause).
-    */
-  def currentSpecShow(tableDir: String): Seq[String] =
-    if (Files.exists(specsLedger(tableDir)))
-      specs(tableDir).last._2.map(showTransform)
-    else if (Files.exists(Paths.get(tableDir, "_spec")))
-      Seq(showTransform(readSpec(tableDir)))
-    else Seq.empty
-
-  private def readSpec(tableDir: String): Transform = {
-    val f = Paths.get(tableDir, "_spec")
-    require(Files.exists(f), s"no transform spec at $tableDir")
-    val p = Files.readAllLines(f, StandardCharsets.UTF_8).asScala
-      .find(_.nonEmpty).get.split('\t')
-    parseSpecParts(p)
-  }
-
-  private def parseSpecParts(p: Array[String]): Transform =
+  private def parseSpecLine(s: String): Transform = {
+    val p = s.split('\t')
     p(0) match {
       case "days" => Days(p(1))
       case "hours" => Hours(p(1))
@@ -179,278 +169,193 @@ object Transforms {
       case other => throw new IllegalArgumentException(
         s"unknown transform '$other'")
     }
-
-  /** The manifest: every partition value with a data directory. */
-  def partitionValues(tableDir: String): Seq[Long] = {
-    val f = Paths.get(tableDir, "_pvals")
-    require(Files.exists(f), s"no partition manifest at $tableDir")
-    Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
-      .filter(_.nonEmpty).map(_.toLong).sorted
   }
 
-  /** Land `df` partitioned by `t`'s derived value (hidden — the
-    * column is dropped from the data files' payload into the
-    * directory key). One task per value → one file per value.
+  /** A scan predicate on ONE raw column. The planner prunes every
+    * field whose transform can serve it; [[exact]] is always applied
+    * to the rows read.
     */
-  def land(spark: SparkSession, tableDir: String, df: DataFrame,
-      t: Transform): Unit = {
-    graft.functions.GraftFunctions.register(spark) // MBucket's expression
-    Files.createDirectories(Paths.get(tableDir))
-    // repartition PINNED at the session shuffle width: the unnumbered
-    // repartition(col) lets AQE coalesce the tiny pre-write exchange
-    // to ONE task, which then writes every partition-value file
-    // SERIALLY — a many-directory landing (e.g. ~300 truncate groups)
-    // measured 4.1 s single-task vs spread across the width (guide
-    // §2.6 idle capacity; §6 the write is file-count-bound, not
-    // byte-bound). Hash keeps one task per value → one file per value.
-    val width = spark.sessionState.conf.numShufflePartitions
-    df.withColumn(PvCol, t.derive)
-      .repartition(width, col(PvCol))
-      .write.mode(SaveMode.Overwrite).partitionBy(PvCol)
-      .parquet(s"$tableDir/data")
-    writeManifest(tableDir, t)
+  sealed trait Predicate {
+    def column: String
+    def exact: Column
   }
-
-  /** Manifest (+spec) rebuilt from the directory listing — what was
-    * actually written, never what a writer intended.
+  /** Half-open time range `[from, toExcl)`: `yyyy-MM-dd` or
+    * `yyyy-MM-dd HH:mm:ss` strings, read as UTC (the engine's session
+    * convention). Prunes [[Days]]/[[Hours]]/[[Months]]/[[Years]].
     */
-  private def writeManifest(tableDir: String, t: Transform): Unit = {
-    val listing = Files.list(Paths.get(tableDir, "data"))
-    val pvals =
-      try listing.iterator().asScala
-        .map(_.getFileName.toString)
-        .filter(_.startsWith(s"$PvCol="))
-        .map(_.stripPrefix(s"$PvCol=").toLong)
-        .toSeq.sorted
-      finally listing.close()
-    Files.write(Paths.get(tableDir, "_spec"),
-      s"${t.specLine}\n".getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-    Files.write(Paths.get(tableDir, "_pvals"),
-      pvals.mkString("", "\n", "\n").getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
-  }
-
-  /** INCREMENTAL landing — the streaming/multi-batch variant of
-    * [[land]] (the reference's CDC landing grows a day-partition at
-    * a time as Debezium batches arrive, docs/components/cdc.md):
-    * appends `df`'s rows into the value directories the transform
-    * derives (a touched value gains one file per append — compaction
-    * is [[land]]'s full rewrite or a per-directory pass), then
-    * rebuilds the `_pvals` manifest so planning sees new partitions
-    * immediately. The spec must match the table's recorded transform
-    * — a writer cannot silently change the partitioning. `batchId`
-    * makes replays idempotent: an id already in the `_batches`
-    * ledger short-circuits (the foreachBatch at-least-once
-    * contract); the ledger line is written AFTER the data lands, so
-    * a crash mid-append re-runs the batch rather than losing it.
-    * Micro-batches from one query arrive serially; this writer is
-    * not safe under CONCURRENT multi-writer appends (the versioned
-    * [[Snapshots]] store is the tool for that).
-    */
-  def append(spark: SparkSession, tableDir: String, df: DataFrame,
-      t: Transform, batchId: Option[Long] = None): Unit = {
-    val specF = Paths.get(tableDir, "_spec")
-    if (Files.exists(specF))
-      require(readSpec(tableDir).specLine == t.specLine,
-        s"append with ${t.specLine} onto a ${readSpec(tableDir).specLine} table")
-    val ledger = Paths.get(tableDir, "_batches")
-    val seen = batchId.isDefined && Files.exists(ledger) &&
-      Files.readAllLines(ledger, StandardCharsets.UTF_8).asScala
-        .contains(batchId.get.toString)
-    if (seen) return
-    graft.functions.GraftFunctions.register(spark) // MBucket's expression
-    Files.createDirectories(Paths.get(tableDir))
-    // same width pin as [[land]]: a batch touching many partition
-    // values must not collapse to one serial writer task
-    df.withColumn(PvCol, t.derive)
-      .repartition(spark.sessionState.conf.numShufflePartitions, col(PvCol))
-      .write.mode(SaveMode.Append).partitionBy(PvCol)
-      .parquet(s"$tableDir/data")
-    writeManifest(tableDir, t)
-    batchId.foreach(id => Files.write(ledger,
-      s"$id\n".getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND))
-  }
-
-  /** Open exactly the directories for `kept` values. */
-  private def readParts(spark: SparkSession, tableDir: String,
-      kept: Seq[Long]): DataFrame =
-    if (kept.isEmpty)
-      spark.read.parquet(s"$tableDir/data").filter(lit(false)).drop(PvCol)
-    else
-      spark.read.parquet(kept.map(v => s"$tableDir/data/$PvCol=$v"): _*)
-
-  /** Day-range scan with the predicate on the RAW timestamp column:
-    * `[from, toExcl)` date strings. Planning = transform arithmetic
-    * against the `_pvals` manifest (hit days only); the exact
-    * row-level predicate trims nothing here (day-aligned bounds) but
-    * is applied anyway — the residual-filter contract. Returns
-    * (rows, filesRead, filesTotal).
-    */
-  def scanDays(spark: SparkSession, tableDir: String,
-      from: String, toExcl: String): (DataFrame, Long, Long) = {
-    val t = readSpec(tableDir) match {
-      case d: Days => d
-      case other => throw new IllegalArgumentException(
-        s"scanDays on a ${other.specLine} table")
+  final case class TimeRange(column: String, from: String, toExcl: String)
+      extends Predicate {
+    def exact: Column =
+      col(column).cast("timestamp") >= lit(from).cast("timestamp") &&
+        col(column).cast("timestamp") < lit(toExcl).cast("timestamp")
+    /** Keep-test for a monotone time transform `value`: the bounds'
+      * values delimit the kept leaves, the exclusive bound evaluated
+      * at `toExcl − 1µs` so an exact boundary never opens the value
+      * above; misaligned bounds just keep one extra edge leaf.
+      */
+    private[Transforms] def within(
+        value: java.time.LocalDateTime => Long): Long => Boolean = {
+      def parse(s: String) =
+        if (s.length == 10) java.time.LocalDate.parse(s).atStartOfDay
+        else java.time.LocalDateTime.parse(s.replace(' ', 'T'))
+      val lo = value(parse(from))
+      val hi = value(parse(toExcl).minusNanos(1000))
+      v => v >= lo && v <= hi
     }
-    val lo = java.time.LocalDate.parse(from).toEpochDay
-    val hi = java.time.LocalDate.parse(toExcl).toEpochDay
-    val pvals = partitionValues(tableDir)
-    val kept = pvals.filter(v => v >= lo && v < hi)
-    val df = readParts(spark, tableDir, kept)
-      .filter(col(t.sourceCol).cast("date") >= lit(from).cast("date") &&
-        col(t.sourceCol).cast("date") < lit(toExcl).cast("date"))
-    (df, kept.size.toLong, pvals.size.toLong)
   }
-
-  /** Raw-timestamp range scan `[from, toExcl)` over ANY of the
-    * monotone time transforms ([[Days]]/[[Hours]]/[[Months]]/
-    * [[Years]]): the derived values of the bounds delimit the kept
-    * partition directories (to-exclusive evaluated at `toExcl − 1µs`
-    * so an exact boundary never opens the group above), and the
-    * exact predicate applies as the residual filter — misaligned
-    * bounds stay correct, just prune one extra edge group.
-    * Timestamps parse as UTC (the engine's session convention).
-    * Returns (rows, filesRead, filesTotal).
+  /** Point lookup on an integral key. Prunes [[Bucket]] and [[MBucket]]. */
+  final case class LongKeys(column: String, keys: Seq[Long]) extends Predicate {
+    def exact: Column = col(column).isin(keys: _*)
+  }
+  /** Point lookup on a string key. Prunes [[MBucket]] (UTF-8 murmur3). */
+  final case class StringKeys(column: String, keys: Seq[String])
+      extends Predicate {
+    def exact: Column = col(column).isin(keys: _*)
+  }
+  /** Half-open range `[lo, hiExcl)` on an integral column. Prunes
+    * [[TruncateLong]] — the one bucket-family transform that
+    * PRESERVES ordering, which is why Iceberg recommends it for
+    * range-queried keys.
     */
-  def scanTimeRange(spark: SparkSession, tableDir: String,
-      from: String, toExcl: String): (DataFrame, Long, Long) = {
-    val t = readSpec(tableDir)
-    def parse(s: String) =
-      java.time.LocalDateTime.parse(s.replace(' ', 'T'))
-    def valueOf(dt: java.time.LocalDateTime): Long = t match {
-      case Days(_) => dt.toLocalDate.toEpochDay
-      case Hours(_) =>
-        java.lang.Math.floorDiv(
-          dt.toEpochSecond(java.time.ZoneOffset.UTC), 3600L)
-      case Months(_) => (dt.getYear - 1970).toLong * 12 + dt.getMonthValue - 1
-      case Years(_) => (dt.getYear - 1970).toLong
-      case other => throw new IllegalArgumentException(
-        s"scanTimeRange on a ${other.specLine} table")
-    }
-    val lo = valueOf(parse(from))
-    val hi = valueOf(parse(toExcl).minusNanos(1000))
-    val pvals = partitionValues(tableDir)
-    val kept = pvals.filter(v => v >= lo && v <= hi)
-    val df = readParts(spark, tableDir, kept)
-      .filter(col(t.sourceCol).cast("timestamp") >= lit(from).cast("timestamp") &&
-        col(t.sourceCol).cast("timestamp") < lit(toExcl).cast("timestamp"))
-    (df, kept.size.toLong, pvals.size.toLong)
+  final case class LongRange(column: String, lo: Long, hiExcl: Long)
+      extends Predicate {
+    def exact: Column =
+      col(column).cast("long") >= lo && col(column).cast("long") < hiExcl
   }
 
-  // ---- partition-spec EVOLUTION (Iceberg ADD PARTITION FIELD) ------
-  // A table carries an append-only ledger of partition SPECS
-  // (`_specs`: one line per spec, `<sid>|<specLine>[;<specLine>…]` —
-  // '|' because specLines contain tabs), every data file lands under
-  // the spec that was CURRENT when it was written
-  // (`data/__spec=<sid>/__pv0=<v>[/__pv1=<w>]/…`), and evolving the
-  // spec is ONE ledger line — zero data paths touched, exactly
-  // Iceberg's ADD PARTITION FIELD. Scan planning prunes EACH file by
-  // ITS OWN spec: old files keep pruning on the fields they record
-  // and simply cannot prune on fields they predate — the defining
-  // semantics of spec evolution (old data is never rewritten, it just
-  // prunes coarser until a compaction rewrites it under the new
-  // spec).
+  /** Which partition values of field `t` can hold rows matching `p`;
+    * None when the field cannot serve the predicate (it then keeps
+    * every leaf).
+    */
+  private def keep(t: Transform, p: Predicate): Option[Long => Boolean] =
+    if (t.sourceCol != p.column) None
+    else (t, p) match {
+      case (Days(_), r: TimeRange) => Some(r.within(_.toLocalDate.toEpochDay))
+      case (Hours(_), r: TimeRange) => Some(r.within(dt =>
+        java.lang.Math.floorDiv(dt.toEpochSecond(java.time.ZoneOffset.UTC), 3600L)))
+      case (Months(_), r: TimeRange) =>
+        Some(r.within(dt => (dt.getYear - 1970L) * 12 + dt.getMonthValue - 1))
+      case (Years(_), r: TimeRange) => Some(r.within(dt => dt.getYear - 1970L))
+      case (Bucket(n, _), LongKeys(_, ks)) =>
+        Some(ks.map(k => java.lang.Math.floorMod(k, n.toLong)).toSet)
+      case (MBucket(n, _), LongKeys(_, ks)) =>
+        Some(ks.map(k => IcebergMurmur3.bucketLong(k, n).toLong).toSet)
+      case (MBucket(n, _), StringKeys(_, ks)) =>
+        Some(ks.map(k => IcebergMurmur3.bucketString(k, n).toLong).toSet)
+      case (TruncateLong(w, _), LongRange(_, lo, hi)) =>
+        Some(v => v < hi && v + w > lo)
+      case _ => None
+    }
 
   private def specsLedger(tableDir: String) = Paths.get(tableDir, "_specs")
+  private def manifest(tableDir: String) = Paths.get(tableDir, "_partitions")
 
-  private def parseSpecLine(s: String): Transform = parseSpecParts(s.split('\t'))
+  private def readLines(f: Path): Seq[String] =
+    Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq.filter(_.nonEmpty)
+
+  private def writeLine(f: Path, line: String, mode: StandardOpenOption): Unit =
+    Files.write(f, s"$line\n".getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE, mode)
+
+  /** `<specId>|<rest>` lines of one sidecar. */
+  private def bySpec(f: Path): Seq[(Int, String)] = readLines(f).map { line =>
+    val i = line.indexOf('|')
+    (line.substring(0, i).toInt, line.substring(i + 1))
+  }
 
   /** The spec ledger, oldest first: (specId, partition fields). */
   def specs(tableDir: String): Seq[(Int, Seq[Transform])] = {
     val f = specsLedger(tableDir)
     require(Files.exists(f), s"no spec ledger at $tableDir")
-    Files.readAllLines(f, StandardCharsets.UTF_8).asScala.toSeq
-      .filter(_.nonEmpty).map { line =>
-        val i = line.indexOf('|')
-        (line.substring(0, i).toInt,
-          line.substring(i + 1).split(';').toSeq.map(parseSpecLine))
-      }
+    bySpec(f).map { case (sid, s) => sid -> s.split(';').toSeq.map(parseSpecLine) }
   }
 
-  /** Create an evolvable table whose first spec is `ts`. */
-  def createEvolved(tableDir: String, ts: Seq[Transform]): Unit = {
-    require(ts.nonEmpty, "a partition spec needs at least one field")
-    Files.createDirectories(Paths.get(tableDir))
-    require(!Files.exists(specsLedger(tableDir)),
-      s"spec ledger already exists at $tableDir")
-    Files.write(specsLedger(tableDir),
-      s"0|${ts.map(_.specLine).mkString(";")}\n"
-        .getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+  /** The manifest, one entry per leaf: (specId, partition tuple). */
+  def partitions(tableDir: String): Seq[(Int, Seq[Long])] = {
+    val f = manifest(tableDir)
+    if (!Files.exists(f)) Seq.empty
+    else bySpec(f).map { case (sid, s) => sid -> s.split(',').toSeq.map(_.toLong) }
   }
 
-  /** Iceberg `ALTER TABLE … ADD PARTITION FIELD`: the new current
-    * spec = the old fields plus `t`. Metadata-only by construction —
-    * the only write is the ledger line.
+  private def ledgerLine(sid: Int, fields: Seq[Transform]): String =
+    s"$sid|${fields.map(_.specLine).mkString(";")}"
+
+  /** Create a table whose spec 0 is `fields`. A no-op when the table
+    * already has exactly these fields; a different spec is rejected —
+    * a writer cannot silently change the partitioning (that is
+    * [[evolve]]'s job).
     */
-  def addPartitionField(tableDir: String, t: Transform): Int = {
-    val cur = specs(tableDir)
-    val sid = cur.last._1 + 1
-    Files.write(specsLedger(tableDir),
-      s"$sid|${(cur.last._2 :+ t).map(_.specLine).mkString(";")}\n"
-        .getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    sid
-  }
-
-  /** Land `df` under the CURRENT spec (one file per partition tuple —
-    * the [[land]] invariant, so file counts stay oracle-derivable).
-    */
-  def appendEvolved(spark: SparkSession, tableDir: String,
-      df: DataFrame): Unit = {
-    graft.functions.GraftFunctions.register(spark) // MBucket's expression
-    val (sid, ts) = specs(tableDir).last
-    val pvCols = ts.indices.map(i => s"__pv$i")
-    val withPv = ts.zipWithIndex.foldLeft(df) { case (d, (t, i)) =>
-      d.withColumn(s"__pv$i", t.derive)
+  def create(tableDir: String, fields: Seq[Transform]): Unit = {
+    require(fields.nonEmpty, "a partition spec needs at least one field")
+    if (Files.exists(specsLedger(tableDir))) {
+      val cur = specs(tableDir).last._2
+      require(cur == fields, s"table at $tableDir is partitioned by " +
+        s"${cur.map(showTransform).mkString(", ")}, not " +
+        fields.map(showTransform).mkString(", "))
+    } else {
+      Files.createDirectories(Paths.get(tableDir))
+      writeLine(specsLedger(tableDir), ledgerLine(0, fields),
+        StandardOpenOption.TRUNCATE_EXISTING)
     }
-    // same width pin as [[land]]: an unnumbered repartition(cols) lets
-    // AQE coalesce the tiny pre-write exchange to one serial writer
+  }
+
+  /** Iceberg `ALTER TABLE … ADD/REPLACE PARTITION FIELD`: `fields`
+    * becomes the current spec. Metadata-only by construction — the
+    * only write is the ledger line. Returns the current spec id (the
+    * existing one when `fields` already is the current spec).
+    */
+  def evolve(tableDir: String, fields: Seq[Transform]): Int = {
+    require(fields.nonEmpty, "a partition spec needs at least one field")
+    val (sid, cur) = specs(tableDir).last
+    if (cur == fields) sid
+    else {
+      writeLine(specsLedger(tableDir), ledgerLine(sid + 1, fields),
+        StandardOpenOption.APPEND)
+      sid + 1
+    }
+  }
+
+  /** Append `df` under the CURRENT spec: each field's derived value is
+    * a hidden directory key (dropped from the files' payload), one
+    * task per tuple → one file per tuple per write; then `_partitions`
+    * is rebuilt so planning sees new leaves immediately. `batchId`
+    * makes replays idempotent: an id already in the `_batches` ledger
+    * short-circuits (the foreachBatch at-least-once contract); the
+    * ledger line is written AFTER the data lands, so a crash
+    * mid-append re-runs the batch rather than losing it. Micro-batches
+    * from one query arrive serially; this writer is not safe under
+    * CONCURRENT multi-writer appends (the versioned [[Snapshots]]
+    * store is the tool for that).
+    */
+  def append(spark: SparkSession, tableDir: String, df: DataFrame,
+      batchId: Option[Long] = None): Unit = {
+    val (sid, fields) = specs(tableDir).last
+    val ledger = Paths.get(tableDir, "_batches")
+    val seen = batchId.exists(id =>
+      Files.exists(ledger) && readLines(ledger).contains(id.toString))
+    if (seen) return
+    graft.functions.GraftFunctions.register(spark) // MBucket's expression
+    val pvCols = fields.indices.map(i => s"__pv$i")
+    val withPv = fields.zip(pvCols).foldLeft(df) { case (d, (t, c)) =>
+      d.withColumn(c, t.derive)
+    }
+    // repartition PINNED at the session shuffle width: the unnumbered
+    // repartition(cols) lets AQE coalesce the tiny pre-write exchange
+    // to ONE task, which then writes every leaf file SERIALLY — a
+    // many-directory landing (e.g. ~300 truncate groups) measured
+    // 4.1 s single-task vs spread across the width (guide §2.6 idle
+    // capacity; §6 the write is file-count-bound, not byte-bound).
+    // Hash keeps one task per tuple → one file per tuple.
     withPv.repartition(spark.sessionState.conf.numShufflePartitions,
         pvCols.map(col): _*)
       .write.mode(SaveMode.Append).partitionBy(pvCols: _*)
       .parquet(s"$tableDir/data/__spec=$sid")
+    writeManifest(tableDir)
+    batchId.foreach(id =>
+      writeLine(ledger, id.toString, StandardOpenOption.APPEND))
   }
 
-  /** Full logical read of a transform-partitioned table — the facade
-    * catalog path (`SELECT * FROM t` on a hidden-partition table):
-    * partition-key directories are discovery columns, and HIDDEN
-    * partitioning means exactly that the user never sees them, so
-    * every `__pv*`/`__spec` column is dropped. Works for both the
-    * single-`_spec` layout (`data/__pv=…`) and the evolved `_specs`
-    * layout (`data/__spec=…/__pvN=…` — per-file schemas may differ
-    * across specs only in partition keys, which are dropped anyway).
-    */
-  def readAll(spark: SparkSession, tableDir: String): DataFrame = {
-    def dropHidden(df: DataFrame): DataFrame = {
-      val hidden = df.columns.filter(c =>
-        c.startsWith(PvCol) || c == "__spec")
-      df.drop(hidden.toIndexedSeq: _*)
-    }
-    if (Files.exists(specsLedger(tableDir))) {
-      // per-spec subtrees have DIFFERENT partition-key arities — one
-      // discovery over the whole tree conflicts; scan each spec's
-      // subtree with its own discovery and union the logical rows
-      val frames = specs(tableDir).map(_._1).distinct.flatMap { sid =>
-        val p = Paths.get(tableDir, "data", s"__spec=$sid")
-        if (Files.exists(p)) Some(dropHidden(spark.read.parquet(p.toString)))
-        else None
-      }
-      require(frames.nonEmpty, s"no data at $tableDir")
-      frames.reduce(_.unionByName(_))
-    } else dropHidden(spark.read.parquet(s"$tableDir/data"))
-  }
-
-  /** Whether `tableDir` is a transform-partitioned table. */
-  def isTransformTable(tableDir: String): Boolean =
-    Files.exists(Paths.get(tableDir, "_spec")) ||
-      Files.exists(specsLedger(tableDir))
-
-  private def listLongDirs(dir: java.nio.file.Path,
-      prefix: String): Seq[(Long, java.nio.file.Path)] = {
+  private def listLongDirs(dir: Path, prefix: String): Seq[(Long, Path)] = {
     val s = Files.list(dir)
     try s.iterator().asScala
       .filter(p => Files.isDirectory(p) &&
@@ -460,153 +365,89 @@ object Transforms {
     finally s.close()
   }
 
-  /** One entry per partition tuple of spec `sid`: (values, leaf dir). */
-  private def specLeaves(tableDir: String, sid: Int,
-      arity: Int): Seq[(Seq[Long], java.nio.file.Path)] = {
-    val root = Paths.get(tableDir, "data", s"__spec=$sid")
-    if (!Files.exists(root)) Seq.empty
-    else (0 until arity).foldLeft(
-      Seq((Seq.empty[Long], root))) { case (acc, i) =>
-      acc.flatMap { case (vals, dir) =>
-        listLongDirs(dir, s"__pv$i=").map { case (v, p) => (vals :+ v, p) }
-      }
+  /** `_partitions` rebuilt from the directory listing — what was
+    * actually written, never what a writer intended.
+    */
+  private def writeManifest(tableDir: String): Unit = {
+    val lines = specs(tableDir).flatMap { case (sid, fields) =>
+      val root = Paths.get(tableDir, "data", s"__spec=$sid")
+      val leaves =
+        if (!Files.exists(root)) Seq.empty
+        else fields.indices.foldLeft(Seq((Seq.empty[Long], root))) {
+          case (acc, i) => acc.flatMap { case (vals, dir) =>
+            listLongDirs(dir, s"__pv$i=").map { case (v, p) => (vals :+ v, p) }
+          }
+        }
+      leaves.map { case (vals, _) => s"$sid|${vals.mkString(",")}" }
     }
+    Files.write(manifest(tableDir),
+      lines.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8),
+      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
   }
 
-  /** Evolved-table scan with predicates on the RAW columns. Each spec
-    * prunes by the fields IT records: a `days` field prunes against
-    * `dayRange`, a `bucket` field against `keys`' buckets, and a spec
-    * that predates a field keeps all its directories for that
-    * predicate (coarser pruning, never wrong answers — the exact
-    * row-level predicates are applied as residual filters). Returns
-    * (rows, filesRead, filesTotal) with one file per tuple by the
-    * landing invariant.
+  /** Scan with `predicate` on its RAW column. Planning reads only the
+    * `_specs` and `_partitions` sidecars: each leaf is kept unless a
+    * field of ITS spec rules it out — a spec that predates (or lacks)
+    * a field that can serve the predicate keeps all its leaves, and
+    * the exact predicate on the rows read keeps answers exact either
+    * way. A predicate no field of any spec can prune is a caller error
+    * (a wrong-kind scan), rejected rather than silently read in full.
+    * Returns (rows, filesRead, filesTotal): leaves, one file per tuple
+    * per write by the [[append]] invariant.
     */
-  def scanEvolved(spark: SparkSession, tableDir: String,
-      dayRange: Option[(String, String)] = None,
-      keys: Option[Seq[Long]] = None): (DataFrame, Long, Long) = {
-    val all = specs(tableDir)
-    val lohi = dayRange.map { case (f, t) =>
-      (java.time.LocalDate.parse(f).toEpochDay,
-        java.time.LocalDate.parse(t).toEpochDay)
-    }
-    var read = 0L
-    var total = 0L
-    val kept: Seq[String] = all.flatMap { case (sid, ts) =>
-      val leaves = specLeaves(tableDir, sid, ts.length)
-      total += leaves.size
-      val hit = leaves.filter { case (vals, _) =>
-        ts.zip(vals).forall {
-          case (Days(_), v) =>
-            lohi.forall { case (lo, hi) => v >= lo && v < hi }
-          case (b: Bucket, w) =>
-            keys.forall(_.exists(k =>
-              java.lang.Math.floorMod(k, b.n.toLong) == w))
-          case (b: MBucket, w) =>
-            keys.forall(_.exists(k =>
-              graft.functions.IcebergMurmur3.bucketLong(k, b.n).toLong == w))
-          case (t: TruncateLong, v) =>
-            keys.forall(_.exists(k =>
-              k - java.lang.Math.floorMod(k, t.w) == v))
-          // coarser time fields in an evolved spec: kept (no pruning
-          // on this field) — the residual filter keeps answers exact
-          case (_: Hours | _: Months | _: Years, _) => true
-        }
+  def scan(spark: SparkSession, tableDir: String,
+      predicate: Predicate): (DataFrame, Long, Long) = {
+    val fieldsOf = specs(tableDir).toMap
+    if (!fieldsOf.values.flatten.exists(keep(_, predicate).isDefined))
+      throw new IllegalArgumentException(s"$predicate cannot prune any " +
+        s"partition field of $tableDir (" + fieldsOf.toSeq.sortBy(_._1)
+          .map(_._2.map(showTransform).mkString(", ")).mkString("; ") + ")")
+    val leaves = partitions(tableDir)
+    val kept = leaves.filter { case (sid, vals) =>
+      fieldsOf(sid).zip(vals).forall { case (t, v) =>
+        keep(t, predicate).forall(_(v))
       }
-      read += hit.size
-      hit.map(_._2.toString)
     }
-    val base =
-      if (kept.nonEmpty) spark.read.parquet(kept: _*)
+    val rows =
+      if (kept.isEmpty) readAll(spark, tableDir).filter(lit(false))
+      else spark.read.parquet(kept.map { case (sid, vals) =>
+        (s"$tableDir/data/__spec=$sid" +: vals.zipWithIndex.map {
+          case (v, i) => s"__pv$i=$v"
+        }).mkString("/")
+      }: _*)
+    (rows.filter(predicate.exact), kept.size.toLong, leaves.size.toLong)
+  }
+
+  /** Full logical read — the facade catalog path (`SELECT * FROM t`
+    * on a hidden-partition table): partition-key directories are
+    * discovery columns, and HIDDEN partitioning means exactly that the
+    * user never sees them, so every `__pv*` column is dropped.
+    * Per-spec subtrees have DIFFERENT partition-key arities — one
+    * discovery over the whole tree conflicts — so each spec's subtree
+    * is read with its own discovery and the logical rows are unioned.
+    */
+  def readAll(spark: SparkSession, tableDir: String): DataFrame = {
+    val frames = specs(tableDir).map(_._1).flatMap { sid =>
+      val p = Paths.get(tableDir, "data", s"__spec=$sid")
+      if (!Files.exists(p)) None
       else {
-        val any = all.flatMap { case (sid, ts) =>
-          specLeaves(tableDir, sid, ts.length)
-        }
-        require(any.nonEmpty, s"no data in evolved table $tableDir")
-        spark.read.parquet(any.head._2.toString).filter(lit(false))
+        val df = spark.read.parquet(p.toString)
+        Some(df.drop(df.columns.filter(_.startsWith("__pv")).toIndexedSeq: _*))
       }
-    val dayCol = all.flatMap(_._2).collectFirst { case Days(c) => c }
-    val keyCol = all.flatMap(_._2).collectFirst {
-      case b: Bucket => b.sourceCol
-      case b: MBucket => b.sourceCol
-      case t: TruncateLong => t.sourceCol
     }
-    var out = base
-    for ((f, t) <- dayRange; c <- dayCol)
-      out = out.filter(col(c).cast("date") >= lit(f).cast("date") &&
-        col(c).cast("date") < lit(t).cast("date"))
-    for (ks <- keys; c <- keyCol)
-      out = out.filter(col(c).isin(ks: _*))
-    (out, read, total)
+    require(frames.nonEmpty, s"no data at $tableDir")
+    frames.reduce(_.unionByName(_))
   }
 
-  /** Point lookups with the predicate on the RAW key column: opens
-    * only the buckets the queried keys hash to — `mod` for the legacy
-    * [[Bucket]] spec, the Iceberg murmur3 for [[MBucket]]; either
-    * way planning is pure driver arithmetic against the `_pvals`
-    * sidecar. Returns (rows, filesRead, filesTotal).
+  /** DDL spellings of the table's CURRENT partition fields; empty when
+    * not transform-partitioned. A pure sidecar read — metadata-only at
+    * any table size (SHOW CREATE TABLE's partition clause).
     */
-  def scanKeys(spark: SparkSession, tableDir: String,
-      keys: Seq[Long]): (DataFrame, Long, Long) = {
-    val (srcCol, bucketOf) = readSpec(tableDir) match {
-      case b: Bucket =>
-        (b.sourceCol, (k: Long) => java.lang.Math.floorMod(k, b.n.toLong))
-      case b: MBucket =>
-        (b.sourceCol,
-          (k: Long) => graft.functions.IcebergMurmur3.bucketLong(k, b.n).toLong)
-      case other => throw new IllegalArgumentException(
-        s"scanKeys on a ${other.specLine} table")
-    }
-    val pvals = partitionValues(tableDir)
-    val want = keys.map(bucketOf).distinct.toSet
-    val kept = pvals.filter(want)
-    val df = readParts(spark, tableDir, kept)
-      .filter(col(srcCol).isin(keys: _*))
-    (df, kept.size.toLong, pvals.size.toLong)
-  }
+  def currentSpecShow(tableDir: String): Seq[String] =
+    if (isTransformTable(tableDir)) specs(tableDir).last._2.map(showTransform)
+    else Seq.empty
 
-  /** [[scanKeys]] for STRING keys on an [[MBucket]] table — the spec
-    * hashes the key's UTF-8 bytes, so a natural-key-bucketed table
-    * (user ids, URLs) point-looks-up by opening one bucket per key.
-    */
-  def scanStringKeys(spark: SparkSession, tableDir: String,
-      keys: Seq[String]): (DataFrame, Long, Long) = {
-    val t = readSpec(tableDir) match {
-      case b: MBucket => b
-      case other => throw new IllegalArgumentException(
-        s"scanStringKeys on a ${other.specLine} table (string keys need " +
-          "the murmur3 spec)")
-    }
-    val pvals = partitionValues(tableDir)
-    val want = keys
-      .map(k => graft.functions.IcebergMurmur3.bucketString(k, t.n).toLong)
-      .distinct.toSet
-    val kept = pvals.filter(want)
-    val df = readParts(spark, tableDir, kept)
-      .filter(col(t.sourceCol).isin(keys: _*))
-    (df, kept.size.toLong, pvals.size.toLong)
-  }
-
-  /** Range scan `[lo, hi)` on the RAW column of a [[TruncateLong]]
-    * table: a width-`w` group starting at `v` overlaps iff
-    * `v < hi && v + w > lo` — truncate is the one bucket-family
-    * transform that PRESERVES ordering, which is exactly why Iceberg
-    * recommends it for range-queried keys. The exact predicate is
-    * applied as the residual filter (the group boundaries rarely
-    * align with the range). Returns (rows, filesRead, filesTotal).
-    */
-  def scanRange(spark: SparkSession, tableDir: String,
-      lo: Long, hiExcl: Long): (DataFrame, Long, Long) = {
-    val t = readSpec(tableDir) match {
-      case tr: TruncateLong => tr
-      case other => throw new IllegalArgumentException(
-        s"scanRange on a ${other.specLine} table")
-    }
-    val pvals = partitionValues(tableDir)
-    val kept = pvals.filter(v => v < hiExcl && v + t.w > lo)
-    val df = readParts(spark, tableDir, kept)
-      .filter(col(t.sourceCol).cast("long") >= lo &&
-        col(t.sourceCol).cast("long") < hiExcl)
-    (df, kept.size.toLong, pvals.size.toLong)
-  }
+  /** Whether `tableDir` is a transform-partitioned table. */
+  def isTransformTable(tableDir: String): Boolean =
+    Files.exists(specsLedger(tableDir))
 }

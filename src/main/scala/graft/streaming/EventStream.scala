@@ -1436,10 +1436,11 @@ object EventStream {
     * (docs/components/cdc.md), so each micro-batch must extend the
     * transform-partitioned table, not overwrite it. Events shard 16
     * ways, stream back 4 files per trigger, and every batch
-    * `Transforms.append`s under the recorded `days(ts)` transform
+    * `Transforms.append`s under the table's recorded `days(ts)` spec
     * with batch-id idempotency (a replayed batch is a no-op). After
-    * the drain, a RAW-predicate week scan plans via transform
-    * arithmetic against the `_pvals` manifest — partitions_read /
+    * the drain, a RAW-predicate week scan (`Transforms.scan` with a
+    * `TimeRange`) plans via transform arithmetic against the
+    * `_partitions` manifest — partitions_read /
     * partitions_total pinned in-result and restated by the oracle
     * from day arithmetic, proving multi-batch appends compose with
     * hidden-partition pruning. At 100 TB: the landing grows a
@@ -1456,6 +1457,7 @@ object EventStream {
       .repartition(16)
       .write.mode("overwrite").parquet(src)
     val table = s"${graft.TempDirs.scratch("graft-st21-tbl")}/events_by_day"
+    Transforms.create(table, Seq(Transforms.Days("ts")))
     val stream = s.readStream
       .schema(eventsSchema)
       .option("maxFilesPerTrigger", "4")
@@ -1465,13 +1467,13 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         Transforms.append(batch.sparkSession, table,
           batch.withColumn("ts", timestamp_micros(col("ts"))),
-          Transforms.Days("ts"), batchId = Some(id))
+          batchId = Some(id))
         ()
       }
       .start()
     try q.processAllAvailable() finally q.stop()
-    val (week, partsRead, partsTotal) =
-      Transforms.scanDays(spark, table, "2024-01-10", "2024-01-17")
+    val (week, partsRead, partsTotal) = Transforms.scan(spark, table,
+      Transforms.TimeRange("ts", "2024-01-10", "2024-01-17"))
     week.groupBy(col("ts").cast("date").as("day"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"))

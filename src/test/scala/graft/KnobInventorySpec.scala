@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Every system property and environment variable the library reads
-  * is a knob someone can turn. The set is pinned here, so adding one
-  * shows up as a diff to this list instead of hiding in a module.
+/** Every system property, environment variable and `spark.graft.*`
+  * session conf the library reads is a knob someone can turn. The sets
+  * are pinned here, so adding one shows up as a diff to these lists
+  * instead of hiding in a module.
   */
 class KnobInventorySpec extends AnyFunSuite {
   private val accessor =
@@ -43,5 +44,18 @@ class KnobInventorySpec extends AnyFunSuite {
       "graft.cc.reliableCheckpoint",
       "graft.cc.checkpointDir",
       "SPARK_GRAFT_CPUS"))
+  }
+
+  test("the library reads exactly the documented spark.graft.* session confs") {
+    val confKey = """"(spark\.graft\.[^"]+)"""".r
+    val keys = mainSources.flatMap { p =>
+      val src = new String(java.nio.file.Files.readAllBytes(p),
+        java.nio.charset.StandardCharsets.UTF_8)
+      confKey.findAllMatchIn(src).map(_.group(1))
+    }.toSet
+    assert(keys == Set(
+      "spark.graft.asof.maxBuildRows",
+      "spark.graft.asof.fallbackBytes",
+      "spark.graft.streaming.shufflePartitions"))
   }
 }

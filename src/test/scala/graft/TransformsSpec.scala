@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Transforms
 
 /** Hidden-partitioning invariants q94's oracle can't see: planning
-  * answers from the `_pvals` manifest alone (files outside the pruned
-  * set can be DELETED and the scan still answers), one file per
-  * partition value, and the raw-column predicate never names `__pv`.
+  * answers from the `_partitions` manifest alone (files outside the
+  * pruned set can be DELETED and the scan still answers), one file per
+  * partition tuple, and the raw-column predicate never names `__pv0`.
   */
 class TransformsSpec extends AnyFunSuite {
   import TestSession._
@@ -31,12 +31,15 @@ class TransformsSpec extends AnyFunSuite {
       .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
       .filter(col("o_orderdate") >= lit("1995-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1995-02-01").cast("timestamp"))
-    Transforms.land(spark, t, orders, Transforms.Days("o_orderdate"))
+    Transforms.create(t, Seq(Transforms.Days("o_orderdate")))
+    Transforms.append(spark, t, orders)
     // one file per partition value, by construction
-    val pvals = Transforms.partitionValues(t)
+    val pvals = Transforms.partitions(t).map(_._2.head)
     assert(dataFiles(t).size == pvals.size,
       "landing must write exactly one file per partition value")
-    val (df, kept, total) = Transforms.scanDays(spark, t, "1995-01-10", "1995-01-15")
+    def days(from: String, toExcl: String) = Transforms.scan(spark, t,
+      Transforms.TimeRange("o_orderdate", from, toExcl))
+    val (df, kept, total) = days("1995-01-10", "1995-01-15")
     val expect = orders.filter(
       col("o_orderdate").cast("date") >= lit("1995-01-10").cast("date") &&
         col("o_orderdate").cast("date") < lit("1995-01-15").cast("date"))
@@ -47,14 +50,14 @@ class TransformsSpec extends AnyFunSuite {
     val lo = java.time.LocalDate.parse("1995-01-10").toEpochDay
     val hi = java.time.LocalDate.parse("1995-01-15").toEpochDay
     pvals.filter(v => v < lo || v >= hi).foreach { v =>
-      dataFiles(t).filter(_.toString.contains(s"__pv=$v/"))
+      dataFiles(t).filter(_.toString.contains(s"__pv0=$v/"))
         .foreach(Files.delete)
     }
-    val (df2, kept2, _) = Transforms.scanDays(spark, t, "1995-01-10", "1995-01-15")
+    val (df2, kept2, _) = days("1995-01-10", "1995-01-15")
     assert(df2.count() == expect.count(), "scan touched files outside the prune set")
     assert(kept2 == kept)
     // empty overlap → empty result, zero files
-    val (empty, k0, _) = Transforms.scanDays(spark, t, "2020-01-01", "2020-01-02")
+    val (empty, k0, _) = days("2020-01-01", "2020-01-02")
     assert(k0 == 0L && empty.count() == 0L)
   }
 
@@ -62,20 +65,23 @@ class TransformsSpec extends AnyFunSuite {
     val t = TempDirs.scratch("graft-tf-bucket")
     val orders = Tables(spark, sf, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
-    Transforms.land(spark, t, orders, Transforms.Bucket(8, "o_orderkey"))
-    assert(Transforms.partitionValues(t).size.toLong ==
+    Transforms.create(t, Seq(Transforms.Bucket(8, "o_orderkey")))
+    Transforms.append(spark, t, orders)
+    assert(Transforms.partitions(t).size.toLong ==
       orders.select(pmod(col("o_orderkey").cast("long"), lit(8L)))
         .distinct().count())
     val keys = orders.agg(min(col("o_orderkey")).cast("long"),
       max(col("o_orderkey")).cast("long")).head
     val ks = Seq(keys.getLong(0), keys.getLong(1))
-    val (df, kept, total) = Transforms.scanKeys(spark, t, ks)
+    val (df, kept, total) =
+      Transforms.scan(spark, t, Transforms.LongKeys("o_orderkey", ks))
     assert(df.count() == orders.filter(col("o_orderkey").isin(ks: _*)).count())
     assert(kept == ks.map(k => Math.floorMod(k, 8L)).distinct.size.toLong)
     assert(kept <= 2L && total == 8L)
     // wrong-scan-kind guard
     intercept[IllegalArgumentException] {
-      Transforms.scanDays(spark, t, "1995-01-01", "1995-01-02")
+      Transforms.scan(spark, t,
+        Transforms.TimeRange("o_orderdate", "1995-01-01", "1995-01-02"))
     }
   }
 
@@ -85,27 +91,29 @@ class TransformsSpec extends AnyFunSuite {
     def day(d: String, rows: Long*) = rows.toSeq
       .map(k => (k, java.sql.Timestamp.valueOf(s"$d 12:00:00")))
       .toDF("k", "ts")
-    Transforms.append(spark, t, day("2024-03-01", 1L, 2L),
-      Transforms.Days("ts"), batchId = Some(0L))
+    Transforms.create(t, Seq(Transforms.Days("ts")))
+    Transforms.append(spark, t, day("2024-03-01", 1L, 2L), batchId = Some(0L))
     Transforms.append(spark, t,
       day("2024-03-01", 3L).unionAll(day("2024-03-02", 4L)),
-      Transforms.Days("ts"), batchId = Some(1L))
+      batchId = Some(1L))
     // new day visible to planning; touched day has one file per batch
-    assert(Transforms.partitionValues(t).size == 2)
+    assert(Transforms.partitions(t).size == 2)
     val d1 = java.time.LocalDate.parse("2024-03-01").toEpochDay
-    assert(dataFiles(t).count(_.toString.contains(s"__pv=$d1/")) == 2,
+    assert(dataFiles(t).count(_.toString.contains(s"__pv0=$d1/")) == 2,
       "each append adds one file to a touched partition")
-    val (df, kept, total) = Transforms.scanDays(spark, t, "2024-03-01", "2024-03-02")
+    val firstDay = Transforms.TimeRange("ts", "2024-03-01", "2024-03-02")
+    val (df, kept, total) = Transforms.scan(spark, t, firstDay)
     assert(df.count() == 3L && kept == 1L && total == 2L)
     // at-least-once replay: same batch id short-circuits
-    Transforms.append(spark, t, day("2024-03-01", 9L),
-      Transforms.Days("ts"), batchId = Some(1L))
-    assert(Transforms.scanDays(spark, t, "2024-03-01", "2024-03-02")
-      ._1.count() == 3L, "replayed batch must not double-land")
-    // a writer cannot silently change the recorded partitioning
+    Transforms.append(spark, t, day("2024-03-01", 9L), batchId = Some(1L))
+    assert(Transforms.scan(spark, t, firstDay)._1.count() == 3L,
+      "replayed batch must not double-land")
+    // re-creating with the same spec is a no-op; a writer cannot
+    // silently change the recorded partitioning
+    Transforms.create(t, Seq(Transforms.Days("ts")))
+    assert(Transforms.specs(t) == Seq((0, Seq(Transforms.Days("ts")))))
     intercept[IllegalArgumentException] {
-      Transforms.append(spark, t, day("2024-03-03", 5L),
-        Transforms.Days("other"))
+      Transforms.create(t, Seq(Transforms.Days("other")))
     }
   }
 
@@ -120,16 +128,17 @@ class TransformsSpec extends AnyFunSuite {
     val feb = orders.filter(
       col("o_orderdate") >= lit("1995-02-01").cast("timestamp") &&
         col("o_orderdate") < lit("1995-03-01").cast("timestamp"))
-    Transforms.createEvolved(t, Seq(Transforms.Days("o_orderdate")))
-    Transforms.appendEvolved(spark, t, jan)
+    Transforms.create(t, Seq(Transforms.Days("o_orderdate")))
+    Transforms.append(spark, t, jan)
     val before = dataFiles(t).map(p =>
       p.toString -> Files.size(p)).toMap
     // ADD PARTITION FIELD touches zero data paths
-    Transforms.addPartitionField(t, Transforms.Bucket(4, "o_custkey"))
+    Transforms.evolve(t, Seq(Transforms.Days("o_orderdate"),
+      Transforms.Bucket(4, "o_custkey")))
     assert(dataFiles(t).map(p => p.toString -> Files.size(p)).toMap
       == before, "spec evolution must be metadata-only")
     assert(Transforms.specs(t).map(_._1) == Seq(0, 1))
-    Transforms.appendEvolved(spark, t, feb)
+    Transforms.append(spark, t, feb)
     // spec-0 files survive the spec-1 landing byte-identical
     before.foreach { case (f, sz) =>
       assert(Files.exists(Paths.get(f)) && Files.size(Paths.get(f)) == sz,
@@ -145,8 +154,8 @@ class TransformsSpec extends AnyFunSuite {
     // a key lookup cannot bucket-prune spec-0 (no bucket field) but
     // prunes spec-1 to the hit buckets
     val k = feb.agg(min(col("o_custkey")).cast("long")).head.getLong(0)
-    val (rows, read, total) = Transforms.scanEvolved(spark, t,
-      keys = Some(Seq(k)))
+    val (rows, read, total) =
+      Transforms.scan(spark, t, Transforms.LongKeys("o_custkey", Seq(k)))
     assert(total == nJanDays + nFebPairs)
     val bucketOfK = java.lang.Math.floorMod(k, 4L)
     val nFebHit = feb.filter(pmod(col("o_custkey"), lit(4)) === bucketOfK)
@@ -157,14 +166,51 @@ class TransformsSpec extends AnyFunSuite {
     val expect = jan.unionByName(feb).filter(col("o_custkey") === k).count()
     assert(rows.count() == expect)
     // day range prunes BOTH specs by day arithmetic
-    val (_, read2, _) = Transforms.scanEvolved(spark, t,
-      dayRange = Some(("1995-01-28", "1995-02-05")))
+    val (_, read2, _) = Transforms.scan(spark, t,
+      Transforms.TimeRange("o_orderdate", "1995-01-28", "1995-02-05"))
     val nJanHit = jan.filter(col("o_orderdate").cast("date") >= lit("1995-01-28"))
       .select(col("o_orderdate").cast("date")).distinct().count()
     val nFebHit2 = feb.filter(col("o_orderdate").cast("date") < lit("1995-02-05"))
       .select(col("o_orderdate").cast("date"),
         pmod(col("o_custkey"), lit(4))).distinct().count()
     assert(read2 == nJanHit + nFebHit2)
+  }
+
+  test("evolved scan: a time range prunes months fields and returns exactly the rows in range") {
+    import spark.implicits._
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def batch(rows: (Long, String)*) =
+      rows.map { case (k, t) => (k, ts(t)) }.toDF("k", "ts")
+    val t = TempDirs.scratch("graft-tf-evo-months")
+    Transforms.create(t, Seq(Transforms.Months("ts")))
+    Transforms.append(spark, t, batch((1L, "1995-01-10 08:00:00"),
+      (2L, "1995-02-03 09:00:00"), (3L, "1995-03-01 00:00:00")))
+    Transforms.evolve(t, Seq(Transforms.Months("ts"), Transforms.MBucket(4, "k")))
+    val spec1 = batch((10L, "1995-01-31 23:59:59"), (11L, "1995-02-01 00:00:00"),
+      (12L, "1995-02-14 12:00:00"), (13L, "1995-02-28 23:00:00"),
+      (14L, "1995-03-02 00:00:00"))
+    Transforms.append(spark, t, spec1)
+    val feb = Transforms.TimeRange("ts", "1995-02-01", "1995-03-01")
+    val (rows, read, total) = Transforms.scan(spark, t, feb)
+    assert(rows.select("k").as[Long].collect().sorted.toSeq == Seq(2L, 11L, 12L, 13L),
+      "a months-only spec must not leak rows outside the range")
+    // spec 0 opens its one February leaf; spec 1 opens the February
+    // (month, bucket) leaves — never the January or March ones
+    val febBuckets = Seq(11L, 12L, 13L)
+      .map(graft.functions.IcebergMurmur3.bucketLong(_, 4)).distinct.size
+    val spec1Leaves = Transforms.partitions(t).count(_._1 == 1)
+    assert(read == 1L + febBuckets && total == 3L + spec1Leaves,
+      s"read $read of $total leaves")
+    // a key lookup on a table none of whose specs has a bucket field
+    // cannot prune anything: rejected, never answered unfiltered
+    val noBucket = TempDirs.scratch("graft-tf-evo-nobucket")
+    Transforms.create(noBucket, Seq(Transforms.Months("ts")))
+    Transforms.append(spark, noBucket, batch((1L, "1995-01-10 08:00:00")))
+    Transforms.evolve(noBucket, Seq(Transforms.Years("ts")))
+    Transforms.append(spark, noBucket, batch((2L, "1996-01-10 08:00:00")))
+    intercept[IllegalArgumentException] {
+      Transforms.scan(spark, noBucket, Transforms.LongKeys("k", Seq(1L)))
+    }
   }
 
   test("murmur3: matches the Iceberg spec's published test vectors bit-for-bit") {
@@ -203,9 +249,11 @@ class TransformsSpec extends AnyFunSuite {
     val t = TempDirs.scratch("graft-tf-mbucket")
     val orders = Tables(spark, sf, "orders")
       .select(col("o_orderkey"), col("o_totalprice"))
-    Transforms.land(spark, t, orders, Transforms.MBucket(8, "o_orderkey"))
+    Transforms.create(t, Seq(Transforms.MBucket(8, "o_orderkey")))
+    Transforms.append(spark, t, orders)
     val keys = Seq(1L, 3L, 5L, 7L)
-    val (df, kept, total) = Transforms.scanKeys(spark, t, keys)
+    val (df, kept, total) =
+      Transforms.scan(spark, t, Transforms.LongKeys("o_orderkey", keys))
     assert(df.count() == orders.filter(col("o_orderkey").isin(keys: _*)).count())
     assert(kept == keys.map(k =>
       graft.functions.IcebergMurmur3.bucketLong(k, 8)).distinct.size.toLong)
@@ -213,23 +261,23 @@ class TransformsSpec extends AnyFunSuite {
     // placement IS the spec hash: every surviving directory value
     // equals the murmur3 bucket of the keys it holds
     val placed = spark.read.parquet(s"$t/data")
-      .select(col("o_orderkey"), col("__pv"))
-      .filter(col("__pv") =!= graft.functions.GraftFunctions
+      .select(col("o_orderkey"), col("__pv0"))
+      .filter(col("__pv0") =!= graft.functions.GraftFunctions
         .icebergBucket(col("o_orderkey"), 8).cast("long"))
     assert(placed.count() == 0L, "a row landed outside its spec bucket")
     // string keys: nation by name, lookup opens one bucket per name
     val tn = TempDirs.scratch("graft-tf-mbucket-str")
-    Transforms.land(spark, tn,
-      Tables(spark, sf, "nation").select(col("n_nationkey"), col("n_name")),
-      Transforms.MBucket(8, "n_name"))
-    val (nf, nKept, _) =
-      Transforms.scanStringKeys(spark, tn, Seq("NATION_3", "NATION_7"))
+    Transforms.create(tn, Seq(Transforms.MBucket(8, "n_name")))
+    Transforms.append(spark, tn,
+      Tables(spark, sf, "nation").select(col("n_nationkey"), col("n_name")))
+    val (nf, nKept, _) = Transforms.scan(spark, tn,
+      Transforms.StringKeys("n_name", Seq("NATION_3", "NATION_7")))
     assert(nf.count() == 2L)
     assert(nKept == Seq("NATION_3", "NATION_7").map(s =>
       graft.functions.IcebergMurmur3.bucketString(s, 8)).distinct.size.toLong)
     // wrong-scan-kind guard (loud, never wrong)
     intercept[IllegalArgumentException] {
-      Transforms.scanRange(spark, t, 0L, 10L)
+      Transforms.scan(spark, t, Transforms.LongRange("o_orderkey", 0L, 10L))
     }
   }
 
@@ -243,28 +291,30 @@ class TransformsSpec extends AnyFunSuite {
       .map { case (t, i) => (i.toLong, t) }.toDF("k", "t")
     // months: value = months since 1970-01
     val tm = TempDirs.scratch("graft-tf-months")
-    Transforms.land(spark, tm, rows, Transforms.Months("t"))
-    assert(Transforms.partitionValues(tm) == Seq(299L, 300L, 301L, 318L))
-    val (md, mk, mt) = Transforms.scanTimeRange(spark, tm,
-      "1995-01-10 00:00:00", "1995-02-01 00:00:00")
+    def land(dir: String, t: Transforms.Transform): Seq[Long] = {
+      Transforms.create(dir, Seq(t))
+      Transforms.append(spark, dir, rows)
+      Transforms.partitions(dir).map(_._2.head)
+    }
+    def range(dir: String, from: String, toExcl: String) =
+      Transforms.scan(spark, dir, Transforms.TimeRange("t", from, toExcl))
+    assert(land(tm, Transforms.Months("t")) == Seq(299L, 300L, 301L, 318L))
+    val (md, mk, mt) = range(tm, "1995-01-10 00:00:00", "1995-02-01 00:00:00")
     // to-bound exactly on the month boundary: Feb must NOT open
     assert(mk == 1L && mt == 4L && md.count() == 1L)
     // years
     val ty = TempDirs.scratch("graft-tf-years")
-    Transforms.land(spark, ty, rows, Transforms.Years("t"))
-    assert(Transforms.partitionValues(ty) == Seq(24L, 25L, 26L))
-    val (yd, yk, _) = Transforms.scanTimeRange(spark, ty,
-      "1995-01-01 00:00:00", "1996-01-01 00:00:00")
+    assert(land(ty, Transforms.Years("t")) == Seq(24L, 25L, 26L))
+    val (yd, yk, _) = range(ty, "1995-01-01 00:00:00", "1996-01-01 00:00:00")
     assert(yk == 1L && yd.count() == 3L)
     // hours: epoch-hour floor; the 23:59:59 row lands the hour below
     val th = TempDirs.scratch("graft-tf-hours")
-    Transforms.land(spark, th, rows, Transforms.Hours("t"))
-    val (hd, hk, ht) = Transforms.scanTimeRange(spark, th,
-      "1995-01-15 10:00:00", "1995-01-15 11:00:00")
+    land(th, Transforms.Hours("t"))
+    val (hd, hk, ht) = range(th, "1995-01-15 10:00:00", "1995-01-15 11:00:00")
     assert(hk == 1L && ht == 5L && hd.count() == 1L)
     // wrong-kind guard
     intercept[IllegalArgumentException] {
-      Transforms.scanKeys(spark, tm, Seq(1L))
+      Transforms.scan(spark, tm, Transforms.LongKeys("k", Seq(1L)))
     }
   }
 
@@ -274,19 +324,22 @@ class TransformsSpec extends AnyFunSuite {
     // negatives included: truncate must floor DOWN (-1 -> group -50)
     val rows = Seq(-60L, -1L, 0L, 49L, 50L, 149L, 150L, 260L)
       .map(k => (k, 1.0)).toDF("k", "x")
-    Transforms.land(spark, t, rows, Transforms.TruncateLong(50L, "k"))
-    assert(Transforms.partitionValues(t) ==
+    Transforms.create(t, Seq(Transforms.TruncateLong(50L, "k")))
+    Transforms.append(spark, t, rows)
+    assert(Transforms.partitions(t).map(_._2.head) ==
       Seq(-100L, -50L, 0L, 50L, 100L, 150L, 250L))
-    val (df, kept, total) = Transforms.scanRange(spark, t, -10L, 150L)
+    def range(lo: Long, hiExcl: Long) =
+      Transforms.scan(spark, t, Transforms.LongRange("k", lo, hiExcl))
+    val (df, kept, total) = range(-10L, 150L)
     assert(df.select("k").collect().map(_.getLong(0)).sorted.toSeq ==
       Seq(-1L, 0L, 49L, 50L, 149L))
     assert(kept == 4L && total == 7L,
       s"groups -50, 0, 50, 100 overlap [-10,150): kept=$kept total=$total")
     // group boundaries are half-open: hi exactly on a boundary never
     // opens the group above it
-    assert(Transforms.scanRange(spark, t, 0L, 50L)._2 == 1L)
+    assert(range(0L, 50L)._2 == 1L)
     intercept[IllegalArgumentException] {
-      Transforms.scanKeys(spark, t, Seq(1L))
+      Transforms.scan(spark, t, Transforms.LongKeys("k", Seq(1L)))
     }
   }
 }
