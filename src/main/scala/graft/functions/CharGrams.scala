@@ -4,19 +4,23 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native distinct character-n-gram generator — one pass over the
-  * string, one hash set, emitted straight as an ArrayData. Replaces
-  * the `array_distinct(transform(sequence(1, len-n+1), i ->
-  * substring(s, i, n)))` chain (an Integer-sequence allocation + a
-  * lambda-evaluated substring per position + a second distinct pass)
-  * on dedup's hottest path; same output SET per document, so every
-  * md5-derived downstream (minhash, Jaccard, LSH bands) and its
-  * DuckDB oracle are unchanged. Code-point semantics match Spark's
-  * `substring` (and DuckDB's): UTF8String.substringSQL slices by
-  * character, not byte. Stays inside whole-stage codegen via a
-  * static-call doGenCode.
+/** Native distinct character-n-gram generator — one forward walk
+  * over the code points, one hash set, emitted straight as an
+  * ArrayData in first-occurrence order. Replaces the
+  * `array_distinct(transform(sequence(1, len-n+1), i ->
+  * substring(s, i, n)))` chain on dedup's hottest path with the same
+  * output per document, so every md5-derived downstream (Jaccard,
+  * LSH bands) and its DuckDB oracle are unchanged. Code-point
+  * semantics match Spark's `substring` (and DuckDB's): character
+  * boundaries come from `UTF8String.numBytesForFirstByte`, the rule
+  * `substringSQL` and `length` use. Each gram is a zero-copy slice of
+  * the input's bytes, so a document costs O(length), not the
+  * O(length²) of a `substringSQL` per position (each call re-walks the
+  * string from its first byte). Stays inside whole-stage codegen via
+  * a static-call doGenCode.
   */
 case class CharGramsExpr(child: Expression, nExpr: Expression)
     extends BinaryExpression {
@@ -55,14 +59,24 @@ object CharGramsExpr {
     // emit the empty gram for every position and silently collapse
     // all documents into one shingle class
     require(n > 0, s"char_grams n must be positive, got $n")
-    val chars = s.numChars()
-    if (chars < n) return new GenericArrayData(Array.empty[Any])
+    val nb = s.numBytes
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    // ring of the last n character starts
+    val starts = new Array[Int](n)
     val seen = new java.util.LinkedHashSet[UTF8String]()
+    var chars = 0
     var i = 0
-    val last = chars - n
-    while (i <= last) {
-      seen.add(s.substringSQL(i + 1, n))
-      i += 1
+    while (i < nb) {
+      val next = i + UTF8String.numBytesForFirstByte(Platform.getByte(base, off + i))
+      starts(chars % n) = i
+      chars += 1
+      if (chars >= n) {
+        val g0 = starts(chars % n)
+        // a truncated trailing sequence ends at the string's end
+        seen.add(UTF8String.fromAddress(base, off + g0, math.min(next, nb) - g0))
+      }
+      i = next
     }
     val out = new Array[Any](seen.size)
     val it = seen.iterator()

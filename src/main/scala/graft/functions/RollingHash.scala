@@ -80,6 +80,12 @@ object GraftFunctions {
         CharGramsExpr(exprs.head, exprs(1))
       }, "scala_udf")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "minhash_sig", exprs => {
+        require(exprs.length == 1,
+          s"minhash_sig expects 1 argument, got ${exprs.length}")
+        MinHashExpr(exprs.head)
+      }, "scala_udf")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "collect_capped", exprs => {
         require(exprs.length == 2,
           s"collect_capped expects 2 arguments, got ${exprs.length}")
@@ -143,6 +149,11 @@ object GraftFunctions {
   /** Distinct char-n-grams of a string column ([[CharGramsExpr]]). */
   def charGrams(c: Column, n: Int): Column =
     call_function("char_grams", c, org.apache.spark.sql.functions.lit(n))
+
+  /** K-permutation MinHash signature of a string's char-3-grams
+    * ([[MinHashExpr]]).
+    */
+  def minhashSig(c: Column): Column = call_function("minhash_sig", c)
 
   /** KMV distinct sketch of a long hash column ([[KMinValues]]). */
   def kMinValues(c: Column, k: Int): Column =

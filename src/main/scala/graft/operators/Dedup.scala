@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.functions.MinHashExpr.{HASH_A, HASH_B, HASH_P, K}
 
 /** Deduplication operators over `documents`: exact (hash groupBy),
   * n-gram Jaccard (df-pruned inverted index), MinHash+LSH (banding),
@@ -181,9 +182,9 @@ object Dedup {
   def d09LshRecall(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     // truth side needs the exploded shingle table (inverted index);
-    // the signature side uses the explode-free HOF path instead —
-    // a second in-row gram pass costs less than the 16-min groupBy
-    // over the 4M-row shingle table it previously shared
+    // the signature side runs the native minhash_sig kernel instead —
+    // a second in-row gram pass costs less than a 16-min groupBy over
+    // the exploded shingle table
     val sh = graft.Caches.scoped(shingles(docs(spark, dir)))
     val truth = d02From(sh)
     val caught = lshPairs(minhashSigs(docs(spark, dir)))
@@ -195,41 +196,39 @@ object Dedup {
       .orderBy(col("pair_rank"))
   }
 
-  private val K = 16        // minhash permutations
   private val BANDS = 4     // LSH bands of 4 rows each
 
-  /** Minhash universal-hash family: h_i(g) = (A_i·x + B_i) mod P over
-    * x = first 32 bits of md5(g). ONE md5 per gram row instead of K —
-    * md5 was ~all of the signature stage's cost (measured 4.4 s →
-    * 1.5 s at sf0.1) — and the K derived hashes are integer
-    * multiply-adds the oracle reproduces exactly
-    * (('0x' || substr(md5(g),1,8))::BIGINT in DuckDB ==
-    * conv(substring(md5(g),1,8),16,10) in Spark; both engines then do
-    * identical positive-BIGINT arithmetic). P = 2^31-1 (Mersenne);
-    * A_i ∈ [1, P-2] odd-ish Knuth-multiplier spread, B_i arbitrary —
-    * products stay < 2^63, so no overflow on either engine.
-    */
-  private val HASH_P = 2147483647L
-  private val HASH_A: IndexedSeq[Long] =
-    (0 until K).map(s => ((2654435761L * (s + 1)) % (HASH_P - 2)) + 1)
-  private val HASH_B: IndexedSeq[Long] =
-    (0 until K).map(s => (40503L * 65537L * (s + 1)) % HASH_P)
-
   /** d03: MinHash + LSH. md5-seeded min-hashing (cross-engine-stable),
-    * banded into 4×4 → candidate pairs from band-bucket collisions;
-    * emits per-doc signature digest + candidate count (never O(n²)).
+    * banded into 4×4 → per-doc signature digest + candidate count, the
+    * number of distinct other docs sharing at least one band bucket.
+    * One pass over the signatures: a single projection emits the
+    * digest, `minhash_0` and the band hashes and explodes the bands;
+    * `collect_list(doc_id)` over the `(band_idx, band_hash)` window
+    * hands every row its bucket's member list, and a per-doc group
+    * counts the distinct members across its bands (minus itself). Two
+    * shuffles, no pair self-join, no `distinct` of pair rows.
+    * Hot-bucket bound: a bucket of m docs costs m² ids either way (m
+    * rows each carrying the m-id list, as the pair join emitted ~m²/2
+    * pair rows); here they stay in arrays inside one window partition
+    * and one group buffer per doc instead of being shuffled as rows.
     */
   def d03MinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sig = minhashSigs(docs(spark, dir))
-    val pairs = lshPairs(sig)
-    val partners = pairs.select(col("da").as("doc_id"), col("db").as("partner"))
-      .unionAll(pairs.select(col("db").as("doc_id"), col("da").as("partner")))
-      .groupBy(col("doc_id")).agg(countDistinct(col("partner")).as("n_candidates"))
-    sig
-      .withColumn("sig_digest", md5(concat_ws("|", (0 until K).map(i => col(s"h$i")): _*)))
-      .select(col("doc_id"), col("sig_digest"), col("h0").as("minhash_0"))
-      .join(partners, Seq("doc_id"), "left")
-      .withColumn("n_candidates", coalesce(col("n_candidates"), lit(0L)))
+    val bands = (0 until BANDS).map(b =>
+      struct(lit(b).as("band_idx"), bandHash(b).as("band_hash")))
+    val banded = minhashSigs(docs(spark, dir))
+      .select(col("doc_id"),
+        md5(concat_ws("|", (0 until K).map(i => col(s"h$i")): _*)).as("sig_digest"),
+        col("h0").as("minhash_0"),
+        explode(array(bands: _*)).as("band"))
+      .select(col("doc_id"), col("sig_digest"), col("minhash_0"),
+        col("band.band_idx").as("band_idx"), col("band.band_hash").as("band_hash"))
+    val bucket = Window.partitionBy(col("band_idx"), col("band_hash"))
+    banded
+      .select(col("doc_id"), col("sig_digest"), col("minhash_0"),
+        collect_list(col("doc_id")).over(bucket).as("members"))
+      .groupBy(col("doc_id"), col("sig_digest"), col("minhash_0"))
+      .agg((size(array_distinct(flatten(collect_list(col("members"))))) - 1)
+        .cast("long").as("n_candidates"))
       .orderBy(col("doc_id"))
   }
 
@@ -367,39 +366,32 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** MinHash signature table (doc_id, h0..h{K-1}), md5-seeded via the
-    * [[HASH_A]]/[[HASH_B]] affine family (one md5 per gram) — computed
-    * PER DOC with higher-order functions: the gram set stays an in-row
-    * array (one md5 per element), and the K affine mins are
-    * `array_min(transform(...))` over it, so the whole signature stage
-    * is a narrow Project — no gram-row explosion, no groupBy shuffle
-    * (measured 4.0 s → ~0.5 s at sf0.1 vs the explode+groupBy
-    * formulation, identical output by the d03/d06 oracles). The
-    * oracles still derive the same values from their exploded-gram
-    * CTEs — the math is identical, only the Spark plan shape changed.
+  /** MinHash signature table (doc_id, h0..h{K-1}): the native
+    * [[graft.functions.MinHashExpr]] kernel (one code-point walk and
+    * one md5 per gram position, K running minima of the affine family)
+    * as one narrow Project, then K `getItem` columns. Identical values
+    * to the oracles' exploded-gram `min((A·x + B) % P)` CTEs.
     */
   private def minhashSigs(d: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(d.sparkSession)
-    val xs = transform(
-      graft.functions.GraftFunctions.charGrams(col("text"), 3),
-      g => conv(substring(md5(g), 1, 8), 16, 10).cast("long"))
     Tables.spread(d.filter(length(col("text")) >= 3)
         .select(col("doc_id"), col("text")))
-      .select(col("doc_id"), xs.as("xs"))
+      .select(col("doc_id"),
+        graft.functions.GraftFunctions.minhashSig(col("text")).as("sig"))
       .select(col("doc_id") +:
-        (0 until K).map { s =>
-          array_min(transform(col("xs"),
-            x => (lit(HASH_A(s)) * x + lit(HASH_B(s))) % lit(HASH_P))).as(s"h$s")
-        }: _*)
+        (0 until K).map(s => col("sig").getItem(s).as(s"h$s")): _*)
   }
+
+  /** Band `b`'s bucket key: md5 of its 4 signature values. */
+  private def bandHash(b: Int): Column =
+    md5(concat_ws("|", (b * 4 until b * 4 + 4).map(i => col(s"h$i")): _*))
 
   /** `(doc_id, band_idx, band_hash)` LSH band table from a signature
     * table — the shape a LANDED corpus band index stores.
     */
   private def bandTable(sig: DataFrame): DataFrame = {
     val withBands = (0 until BANDS).foldLeft(sig) { (df, b) =>
-      val cols = (b * 4 until b * 4 + 4).map(i => col(s"h$i"))
-      df.withColumn(s"band$b", md5(concat_ws("|", cols: _*)))
+      df.withColumn(s"band$b", bandHash(b))
     }
     withBands.selectExpr("doc_id",
       s"stack($BANDS, ${(0 until BANDS).map(b => s"$b, band$b").mkString(", ")}) as (band_idx, band_hash)")
@@ -1098,7 +1090,7 @@ object Dedup {
     "p13_fuzzy_contamination" -> (p13FuzzyContamination _)
   )
 
-  // oracle mirror of minhashSigs' affine family — same A/B/P literals
+  // oracle mirror of MinHashExpr's affine family — same A/B/P literals
   private val sigX = "(('0x' || substr(md5(g),1,8))::BIGINT)"
   private val sigSelect = (0 until K)
     .map(s => s"min((${HASH_A(s)} * $sigX + ${HASH_B(s)}) % $HASH_P) AS h$s")

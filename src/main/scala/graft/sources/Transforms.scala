@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -43,10 +43,12 @@ import graft.functions.IcebergMurmur3
   * exactly one file per partition tuple per write; `filesRead` below
   * therefore counts leaves and is oracle-derivable from the transform
   * arithmetic. `_partitions` is rebuilt from the directory listing
-  * after every write — planning reads ONLY the two sidecars, never a
-  * data listing or footer: cost = two tiny files, independent of data
-  * size. At 100 TB a day-range query opens the hit days and a key
-  * lookup opens one bucket; everything else is never listed.
+  * after every write and renamed into place atomically (a reader sees
+  * the old manifest or the new one) — planning reads ONLY the two
+  * sidecars, never a data listing or footer: cost = two tiny files,
+  * independent of data size. At 100 TB a day-range query opens the
+  * hit days and a key lookup opens one bucket; everything else is
+  * never listed.
   *
   * Transforms:
   *   - `days/hours/months/years(ts)` — time since 1970-01-01 (UTC) of
@@ -366,7 +368,10 @@ object Transforms {
   }
 
   /** `_partitions` rebuilt from the directory listing — what was
-    * actually written, never what a writer intended.
+    * actually written, never what a writer intended. Written to a
+    * temp file in the table dir, then renamed over the manifest
+    * atomically, so a concurrent [[scan]] or [[partitions]] reads the
+    * old manifest or the new one, never a truncated one.
     */
   private def writeManifest(tableDir: String): Unit = {
     val lines = specs(tableDir).flatMap { case (sid, fields) =>
@@ -380,9 +385,12 @@ object Transforms {
         }
       leaves.map { case (vals, _) => s"$sid|${vals.mkString(",")}" }
     }
-    Files.write(manifest(tableDir),
-      lines.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
+    val tmp = Files.createTempFile(Paths.get(tableDir), "_partitions.", ".tmp")
+    try {
+      Files.write(tmp, lines.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, manifest(tableDir),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Scan with `predicate` on its RAW column. Planning reads only the

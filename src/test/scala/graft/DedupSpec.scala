@@ -414,4 +414,61 @@ class DedupSpec extends AnyFunSuite {
       f"aligned blocks unexpectedly robust: $alignedSurvived%.2f")
     assert(survived > alignedSurvived + 0.5)
   }
+
+  test("d03 equals the pair self-join formulation row for row, with no join and one minhash_sig") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.functions.{GraftFunctions, MinHashExpr}
+    import graft.functions.MinHashExpr.K
+    GraftFunctions.register(spark)
+    // reference: the per-gram substring/md5/array_min signature chain
+    // and d03's former band self-join + distinct + countDistinct
+    val sig = Tables(spark, sf, "documents").filter(length(col("text")) >= 3)
+      .select(col("doc_id"), MinHashReference.sig(col("text")).as("sig"))
+      .select(col("doc_id") +: (0 until K).map(s => col("sig").getItem(s).as(s"h$s")): _*)
+    val banded = sig.selectExpr("doc_id",
+      "stack(4, " + (0 until 4).map { b =>
+        s"$b, md5(concat_ws('|', ${(b * 4 until b * 4 + 4).map(i => s"h$i").mkString(", ")}))"
+      }.mkString(", ") + ") as (band_idx, band_hash)")
+    val pairs = banded.as("a")
+      .join(banded.as("b"),
+        col("a.band_idx") === col("b.band_idx") &&
+          col("a.band_hash") === col("b.band_hash") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+      .distinct()
+    val partners = pairs.select(col("da").as("doc_id"), col("db").as("partner"))
+      .unionAll(pairs.select(col("db").as("doc_id"), col("da").as("partner")))
+      .groupBy(col("doc_id")).agg(countDistinct(col("partner")).as("n_candidates"))
+    val expected = sig
+      .withColumn("sig_digest", md5(concat_ws("|", (0 until K).map(i => col(s"h$i")): _*)))
+      .select(col("doc_id"), col("sig_digest"), col("h0").as("minhash_0"))
+      .join(partners, Seq("doc_id"), "left")
+      .withColumn("n_candidates", coalesce(col("n_candidates"), lit(0L)))
+      .orderBy(col("doc_id"))
+      .collect().toSeq
+
+    val d03 = Dedup.d03MinhashLsh(spark, sf)
+    val got = d03.collect().toSeq
+    assert(got.map(_.schema.fieldNames.toSeq).headOption ==
+      expected.map(_.schema.fieldNames.toSeq).headOption)
+    assert(got.length == expected.length && got.length > 100)
+    assert(got.exists(_.getAs[Long]("n_candidates") > 0),
+      "no candidate pairs: the parity check would be vacuous")
+    got.zip(expected).foreach { case (g, e) => assert(g == e, s"$g != $e") }
+
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    val executed = nodes(d03.queryExecution.executedPlan)
+    assert(!executed.exists(_.isInstanceOf[BaseJoinExec]),
+      s"d03 plan has a join:\n${d03.queryExecution.executedPlan}")
+    val sigEvals = executed.flatMap(_.expressions)
+      .flatMap(_.collect { case m: MinHashExpr => m })
+    assert(sigEvals.size == 1, s"minhash_sig evaluated ${sigEvals.size} times")
+  }
 }

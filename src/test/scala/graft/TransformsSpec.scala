@@ -117,6 +117,42 @@ class TransformsSpec extends AnyFunSuite {
     }
   }
 
+  test("manifest rewrite is atomic: a reader polling during 20 appends never sees a torn or shrunk manifest") {
+    import spark.implicits._
+    val t = TempDirs.scratch("graft-tf-atomic")
+    Transforms.create(t, Seq(Transforms.Days("ts")))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    var polls = 0 // read after join()
+    val shrinks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val reader = new Thread(() => {
+      var last = 0
+      try while (!done.get()) {
+        val n = Transforms.partitions(t).size
+        if (n < last) shrinks.add((last, n))
+        last = n
+        polls += 1
+      } catch { case e: Throwable => failure.set(e) }
+    })
+    reader.start()
+    try (0 until 20).foreach { d =>
+      val ts = java.sql.Timestamp.valueOf(
+        java.time.LocalDate.parse("2024-03-01").plusDays(d.toLong).atTime(12, 0))
+      Transforms.append(spark, t, Seq((d.toLong, ts)).toDF("k", "ts"))
+    } finally {
+      done.set(true)
+      reader.join()
+    }
+    assert(failure.get() == null, s"reader failed to parse the manifest: ${failure.get()}")
+    assert(polls > 20, s"reader polled only $polls times")
+    assert(shrinks.isEmpty, s"leaf count shrank (from, to): ${shrinks.asScala.take(10)}")
+    assert(Transforms.partitions(t).size == 20)
+    val listing = Files.list(Paths.get(t))
+    try assert(!listing.iterator().asScala.exists(_.getFileName.toString.endsWith(".tmp")),
+      "temp manifest left behind")
+    finally listing.close()
+  }
+
   test("spec evolution: ALTER is metadata-only, old files prune by their own spec") {
     val t = TempDirs.scratch("graft-tf-evo")
     val orders = Tables(spark, sf, "orders")
