@@ -30,6 +30,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         RollingHashExpr(exprs.head)
       }))
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
     ext.injectOptimizerRule(_ => graft.plans.MvRewriteRule)
     ext.injectFunction((

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Parquet table loader for the driver-generated testdata layout
   * (`<dir>/<name>.parquet`). One function so every operator reads
-  * through the same (pushdown-friendly, plain `spark.read`) path.
+  * through the same pushdown-friendly path, which plans without a job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -13,27 +13,24 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      // events.ts varies across generator versions: parquet
-      // TIMESTAMP(NANOS) (which Spark 4 only reads as long, via the
-      // legacy conf) or TIMESTAMP(MICROS) with isAdjustedToUTC=false
-      // (read natively as TIMESTAMP_NTZ). Normalize both to a
-      // microsecond TimestampType so every operator sees one shape.
-      // All graft sessions run with session.timeZone=UTC, so the
-      // NTZ→LTZ cast is value-preserving.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      df.schema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          // nanos long → micros long → timestamp; `div` stays in Long
-          // (a double round-trip would lose precision above 2^53 ns)
-          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case org.apache.spark.sql.types.TimestampNTZType =>
-          df.withColumn("ts", col("ts").cast("timestamp"))
-        case _ => df
-      }
-    } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+    // events.ts varies across generator versions: parquet
+    // TIMESTAMP(NANOS) (which Spark 4 only reads as long, via the
+    // legacy conf) or TIMESTAMP(MICROS) with isAdjustedToUTC=false
+    // (read natively as TIMESTAMP_NTZ). Normalize both to a
+    // microsecond TimestampType so every operator sees one shape.
+    // All graft sessions run with session.timeZone=UTC, so the
+    // NTZ→LTZ cast is value-preserving.
+    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val df = graft.sources.ParquetSchemas.read(spark, s"$dir/$name.parquet")
+    if (name != "events") df
+    else df.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        // nanos long → micros long → timestamp; `div` stays in Long
+        // (a double round-trip would lose precision above 2^53 ns)
+        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case org.apache.spark.sql.types.TimestampNTZType =>
+        df.withColumn("ts", col("ts").cast("timestamp"))
+      case _ => df
     }
   }
 

@@ -209,9 +209,9 @@ object Multimodal {
     * holding its cumulative-byte position. The cumulative sum is
     * [[Rank.globalRunningSum]] — `sum() OVER (ORDER BY …)` would plan
     * a SINGLE-PARTITION window (every payload byte through one task);
-    * the distributed form is two jobs over one shuffle: per-partition
-    * byte totals (one (Int, Long) each) → driver prefix offsets →
-    * map-side accumulation. Shards come out contiguous in sample
+    * the distributed plan node range-partitions the samples, sums
+    * bytes per partition (one long each) → driver prefix offsets →
+    * per-partition accumulation, all at action time. Shards come out contiguous in sample
     * order with bytes ≤ budget + one payload (spec-pinned).
     */
   def m05ShardManifest(spark: SparkSession, dir: String): DataFrame = {

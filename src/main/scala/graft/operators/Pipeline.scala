@@ -394,7 +394,7 @@ object Pipeline {
   /** p11: deterministic global shuffle — the training-order shuffle, as
     * a distributed range sort on a salted md5 key (reproducible, no
     * single-partition window: ranks come from [[Rank.globalRowNumber]]'s
-    * two-job shuffle-reuse design). Emits the first 100 positions.
+    * distributed plan node). Emits the first 100 positions.
     */
   def p11GlobalShuffle(spark: SparkSession, dir: String): DataFrame = {
     val keyed = docs(spark, dir)
@@ -471,7 +471,8 @@ object Pipeline {
     * n_tokens` — longer words ≈ harder text; any scorer with a total
     * order slots in), the global order comes from
     * [[graft.operators.Rank.globalRowNumber]] (never a
-    * single-partition window), and phase = `(rn−1)·3 div n` — exact
+    * single-partition window; its total column is the corpus size n),
+    * and phase = `(rn−1)·3 div n` — exact
     * equal-count thirds, no NTILE edge-rule ambiguity. Output: per
     * phase, the doc/token volume and the difficulty bounds — proving
     * the schedule partitions the corpus into contiguous,
@@ -484,11 +485,10 @@ object Pipeline {
         size(expr(graft.functions.TextGrams.tokensExpr("text"))).cast("long"))
       .withColumn("difficulty", expr("n_chars * 1000 div n_tokens"))
       .select(col("doc_id"), col("n_tokens"), col("difficulty"))
-    val n = scored.count()
     val ranked = graft.operators.Rank.globalRowNumber(
-      scored, Seq(col("difficulty"), col("doc_id")), "rn")
+      scored, Seq(col("difficulty"), col("doc_id")), "rn", totalCol = Some("n"))
     ranked
-      .withColumn("phase", expr(s"(rn - 1) * 3 div $n"))
+      .withColumn("phase", expr("(rn - 1) * 3 div n"))
       .groupBy(col("phase"))
       .agg(
         count(lit(1)).as("n_docs"),

@@ -1,111 +1,52 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, GraftShims}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.{Column, DataFrame, GraftDatasetFactory}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, SortOrder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.LongType
+
+import graft.plans.{GlobalRankStrategy, GlobalRunningSum, Registration}
 
 /** Scalable global ranking. `row_number() OVER (ORDER BY …)` with no
   * PARTITION BY plans as a single-partition WindowExec — every row
-  * moves to ONE task (Spark itself warns "No Partition Defined"),
-  * which is the first thing to fall over at 100 TB.
-  *
-  * `globalRowNumber` produces the IDENTICAL ranking distributed:
-  *  1. range-repartition by the sort key + sort within partitions
-  *     (total order ACROSS partitions, data stays spread);
-  *  2. compile that plan ONCE and run two jobs over the same RDD:
-  *     a cheap per-partition count, then the rank pass with each
-  *     partition's prefix-sum offset. The second job's map stage is
-  *     SKIPPED (shuffle files from the first are reused), so both
-  *     passes provably read the same partitioning — no reliance on
-  *     SQL-layer exchange reuse, which AQE re-planning can break —
-  *     and nothing is persisted/checkpointed (at 100 TB,
-  *     materializing the input just to rank it is not a plan).
+  * moves to ONE task (Spark itself warns "No Partition Defined").
+  * These build the IDENTICAL ranking as one distributed plan node,
+  * [[graft.plans.GlobalRunningSum]]; building the DataFrame runs no job.
   *
   * The order must be total (tie-break on a unique column) — the same
-  * requirement the oracle-parity rules already impose on every
-  * window in this library (SURVEY.md §4).
+  * requirement the oracle-parity rules impose on every window in this
+  * library (SURVEY.md §4). `totalCol`, when given, adds the grand total
+  * (N for a row number) as a column, so callers need no count branch.
   */
 object Rank {
 
-  /** Per-partition UnsafeProjection over `schema` (executor-side). */
-  private def projector(schema: StructType): UnsafeProjection =
-    UnsafeProjection.create(schema)
-
-  /** Global row_number over `order` (must be a total order), as column
-    * `rankCol`, with no single-partition data move.
-    */
+  /** Global row_number over `order` (a total order) as column `rankCol`. */
   def globalRowNumber(df: DataFrame, order: Seq[Column],
-      rankCol: String = "row_num"): DataFrame = {
-    require(!df.columns.contains(rankCol),
-      s"rank column '$rankCol' collides with an input column - pass a different name")
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-    // one compiled physical plan → one shuffle, shared by both jobs
-    val rdd = sorted.queryExecution.toRdd
-    val counts = rdd
-      .mapPartitionsWithIndex((i, it) => Iterator(i -> {
-        var n = 0L; while (it.hasNext) { it.next(); n += 1 }; n
-      }))
-      .collect().toMap // one (Int, Long) per partition — tiny
-    val offsets = new Array[Long](rdd.getNumPartitions)
-    var acc = 0L
-    offsets.indices.foreach { i => offsets(i) = acc; acc += counts.getOrElse(i, 0L) }
-    val outSchema = sorted.schema.add(rankCol, LongType, nullable = false)
-    val ranked = rdd.mapPartitionsWithIndex { (i, it) =>
-      var n = offsets(i)
-      val joined = new JoinedRow
-      val proj = projector(outSchema)
-      it.map { row =>
-        n += 1
-        // the shuffle reader reuses `row`'s buffer; project+copy so a
-        // consumer that defers its own copy can never observe a torn row
-        proj(joined(row, new GenericInternalRow(Array[Any](n)))).copy(): InternalRow
-      }
-    }
-    GraftShims.internalCreateDataFrame(spark, ranked, outSchema)
-  }
+      rankCol: String = "row_num", totalCol: Option[String] = None): DataFrame =
+    globalRunningSum(df, order, lit(1L), rankCol, totalCol)
 
-  /** Global RUNNING SUM over a total order — `sum(v) OVER (ORDER BY
-    * …)` without the single-partition window it would otherwise plan
-    * as: the same two-job shuffle-reuse design as [[globalRowNumber]]
-    * (per-partition value totals → driver prefix offsets, one (Int,
-    * Long) per partition → map-side accumulation). `value` must be
-    * non-null (coalesce upstream); the order must be total.
+  /** Global RUNNING SUM over a total order — `sum(v) OVER (ORDER BY …)`
+    * as a distributed node. `value` is cast to long; NULL adds nothing.
     */
   def globalRunningSum(df: DataFrame, order: Seq[Column], value: Column,
-      sumCol: String = "running_sum"): DataFrame = {
-    require(!df.columns.contains(sumCol),
-      s"sum column '$sumCol' collides with an input column - pass a different name")
+      sumCol: String = "running_sum", totalCol: Option[String] = None): DataFrame = {
+    val total = totalCol.getOrElse("__graft_total")
+    Seq(sumCol, total).foreach(c => require(!df.columns.contains(c),
+      s"column '$c' collides with an input column - pass a different name"))
+    require(sumCol != total, s"sum and total columns are both named '$sumCol'")
     val spark = df.sparkSession
-    val tmp = "__graft_rs_v"
-    val sorted = df.withColumn(tmp, value.cast("long"))
-      .repartitionByRange(order: _*).sortWithinPartitions(order: _*)
-    val rdd = sorted.queryExecution.toRdd
-    val vIdx = sorted.schema.fieldIndex(tmp)
-    val sums = rdd
-      .mapPartitionsWithIndex((i, it) => Iterator(i -> {
-        var s = 0L; while (it.hasNext) { s += it.next().getLong(vIdx) }; s
-      }))
-      .collect().toMap // one (Int, Long) per partition — tiny
-    val offsets = new Array[Long](rdd.getNumPartitions)
-    var acc = 0L
-    offsets.indices.foreach { i => offsets(i) = acc; acc += sums.getOrElse(i, 0L) }
-    val outSchema = sorted.schema.add(sumCol, LongType, nullable = false)
-    val summed = rdd.mapPartitionsWithIndex { (i, it) =>
-      var s = offsets(i)
-      val joined = new JoinedRow
-      val proj = projector(outSchema)
-      it.map { row =>
-        s += row.getLong(vIdx)
-        // see globalRowNumber: copy out of the reused shuffle-row buffer
-        proj(joined(row, new GenericInternalRow(Array[Any](s)))).copy(): InternalRow
-      }
-    }
-    GraftShims.internalCreateDataFrame(spark, summed, outSchema)
-      .drop(tmp)
+    Registration.ensure(spark, Seq(GlobalRankStrategy))
+    val orders = order.map(c => GraftDatasetFactory.expression(c) match {
+      case s: SortOrder => s
+      case e => SortOrder(e, Ascending)
+    })
+    val out = GraftDatasetFactory.ofRows(spark, GlobalRunningSum(orders,
+      GraftDatasetFactory.expression(value.cast("long")),
+      AttributeReference(sumCol, LongType, nullable = false)(),
+      AttributeReference(total, LongType, nullable = false)(),
+      df.queryExecution.analyzed))
+    if (totalCol.isEmpty) out.drop(total) else out
   }
 
   /** Global RANK() (ties share the smallest position) distributed:
@@ -116,10 +57,11 @@ object Rank {
     * percent_rank at scale = (globalRank - 1) / (N - 1).
     */
   def globalRank(df: DataFrame, values: Seq[Column], order: Seq[Column],
-      tiebreak: Seq[Column], rankCol: String = "rank"): DataFrame = {
+      tiebreak: Seq[Column], rankCol: String = "rank",
+      totalCol: Option[String] = None): DataFrame = {
     require(!df.columns.contains(rankCol),
       s"rank column '$rankCol' collides with an input column - pass a different name")
-    val rn = globalRowNumber(df, order ++ tiebreak, "__rn")
+    val rn = globalRowNumber(df, order ++ tiebreak, "__rn", totalCol)
     rn.withColumn(rankCol, min(col("__rn")).over(Window.partitionBy(values: _*)))
       .drop("__rn")
   }

@@ -68,12 +68,6 @@ object Checks {
     struct(nameC.as("check_name"), colC.as("col_name"),
       violations.cast("long").as("n_violations"))
 
-  /** One check → a one-row DataFrame (check_name, col_name,
-    * n_violations, passed).
-    */
-  def summaryOne(df: DataFrame, check: Check): DataFrame =
-    summary(df, Seq(check))
-
   /** A suite → one report DataFrame, ordered by (check_name,
     * col_name). ALL scalar checks (not_null / unique /
     * accepted_values) share ONE aggregate pass over the table —

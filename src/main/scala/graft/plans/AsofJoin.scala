@@ -3,7 +3,7 @@ package graft.plans
 import scala.collection.mutable
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftDatasetFactory, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftDatasetFactory}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
@@ -207,19 +207,6 @@ object AsofJoinStrategy extends SparkStrategy {
 /** Public API for the as-of join operator. */
 object Asof {
 
-  /** Make sure the strategy is installed in this session (also
-    * injectable at session build via `graft.GraftExtensions`).
-    */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val em = spark.experimental
-    if (!em.extraStrategies.contains(AsofJoinStrategy)) {
-      em.extraStrategies = em.extraStrategies :+ AsofJoinStrategy
-    }
-    if (!em.extraOptimizations.contains(PushFilterThroughAsofJoin)) {
-      em.extraOptimizations = em.extraOptimizations :+ PushFilterThroughAsofJoin
-    }
-  }
-
   /** LEFT OUTER as-of join: for each left row, the latest right row
     * (by rightTime, tie-broken by rightTieBreak) with
     * `rightTime <= leftTime` and equal keys. Right columns must not
@@ -237,7 +224,7 @@ object Asof {
       leftTime: String, rightTime: String,
       rightTieBreak: String): DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    Registration.ensure(spark, Seq(AsofJoinStrategy), Seq(PushFilterThroughAsofJoin))
     val dup = left.columns.toSet.intersect(right.columns.toSet)
     require(dup.isEmpty, s"rename right-side columns colliding with left: $dup")
     val fallbackBytes = BigInt(spark.conf

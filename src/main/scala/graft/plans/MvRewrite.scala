@@ -90,15 +90,9 @@ object Mv {
       .agg(aggCols.head, aggCols.tail: _*)
       .write.mode("overwrite").parquet(mvPath)
     val d = MvDef(name, basePath, mvPath, groupCols, measures, countStarCol)
-    // Arm the rule in THIS session even when GraftExtensions wasn't
-    // installed at build time (extraOptimizations runs in its own
-    // optimizer batch; the rule is idempotent, so coexisting with the
-    // injected copy is harmless).
-    val spark = base.sparkSession
-    if (!spark.experimental.extraOptimizations.contains(MvRewriteRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ MvRewriteRule
-    }
+    // arm the rule in THIS session even without GraftExtensions (it is
+    // idempotent, so coexisting with an injected copy is harmless)
+    Registration.ensure(base.sparkSession, Nil, Seq(MvRewriteRule))
     register(d)
     d
   }

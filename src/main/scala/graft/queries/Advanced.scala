@@ -73,12 +73,11 @@ object Advanced {
       .withColumn("running_max_price", max(col("o_totalprice")).over(wRun))
       .withColumn("cust_price_rank", rank().over(wRank).cast("long"))
       .withColumn("cust_price_dense_rank", dense_rank().over(wRank).cast("long"))
-    val rn = graft.operators.Rank.globalRowNumber(base,
-      Seq(col("o_totalprice").asc, col("o_orderkey").asc), "__rn_asc")
+    graft.operators.Rank.globalRowNumber(base,
+        Seq(col("o_totalprice").asc, col("o_orderkey").asc), "__rn_asc",
+        totalCol = Some("__n"))
       .withColumn("__maxrn",
         max(col("__rn_asc")).over(Window.partitionBy(col("o_totalprice"))))
-    val n = base.agg(count(lit(1)).as("__n"))
-    rn.join(broadcast(n))
       .withColumn("price_quartile", expr(
         "CASE WHEN __rn_asc <= (__n % 4) * ((__n div 4) + 1) " +
           "THEN (__rn_asc - 1) div ((__n div 4) + 1) + 1 " +

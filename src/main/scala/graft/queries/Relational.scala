@@ -105,30 +105,25 @@ object Relational {
         min(to_date(col("o_orderdate"))).as("first_order_date"),
         max(to_date(col("o_orderdate"))).as("last_order_date"))
       .withColumn("avg_order_value", ratio(col("total_revenue"), col("total_orders")))
-    // Global rankings via the distributed Rank operator (identical
-    // output to bare ROW_NUMBER/PERCENT_RANK windows, which would
-    // funnel the whole mart through one task at scale). The mart
-    // aggregate is scope-persisted: it feeds the rank chain AND the
-    // broadcast row count — unpersisted it would compute twice.
-    // PERCENT_RANK rides the revenue_rank pass instead of a third
-    // rank shuffle: rank_asc(v) = N − max(rn_desc within the tie
-    // group) + 1, so percentile = (rank_asc − 1)/(N − 1)
-    //                           = (N − max_desc)/(N − 1).
-    val um2 = graft.Caches.scoped(um)
+    // Global rankings via the distributed Rank node (bare ROW_NUMBER/
+    // PERCENT_RANK windows would funnel the mart through one task);
+    // revenue_rank also carries the row count N. PERCENT_RANK rides
+    // that pass: rank_asc(v) = N − max(rn_desc in the tie group) + 1,
+    // so percentile = (rank_asc − 1)/(N − 1) = (N − max_desc)/(N − 1).
     val wSeg = Window.partitionBy(col("c_mktsegment"))
       .orderBy(col("total_revenue").desc, col("c_custkey"))
-    val n = um2.agg(count(lit(1)).cast("double").as("__n"))
     val ranked = graft.operators.Rank.globalRowNumber(
-      graft.operators.Rank.globalRowNumber(um2,
-        Seq(col("total_revenue").desc, col("c_custkey")), "revenue_rank"),
+      graft.operators.Rank.globalRowNumber(um,
+        Seq(col("total_revenue").desc, col("c_custkey")), "revenue_rank",
+        totalCol = Some("__n")),
       Seq(col("total_orders").desc, col("c_custkey")), "order_count_rank")
+    val n = col("__n").cast("double")
     ranked
       .withColumn("__maxd",
         max(col("revenue_rank")).over(Window.partitionBy(col("total_revenue"))))
-      .join(broadcast(n))
       .withColumn("revenue_percentile",
-        when(col("__n") === 1.0, lit(0.0))
-          .otherwise((col("__n") - col("__maxd")) / (col("__n") - 1.0)))
+        when(n === 1.0, lit(0.0))
+          .otherwise((n - col("__maxd")) / (n - 1.0)))
       .drop("__maxd", "__n")
       .withColumn("segment_revenue_rank", row_number().over(wSeg))
       .withColumn("customer_tier",
@@ -331,20 +326,20 @@ object Relational {
       .agg(
         count(col("o_orderkey")).as("total_orders"),
         coalesce(dsum(col("o_totalprice")), lit(0.0)).as("total_revenue"))
-    // stage 3: window analytics — global rankings via the distributed
-    // Rank operator (see q04); tier ranking stays a partitioned window
+    // stage 3: window analytics — global rankings and N via the
+    // distributed Rank node (see q04); tier ranking stays partitioned
     val wTier = Window.partitionBy(col("balance_tier"))
       .orderBy(col("total_revenue").desc, col("c_custkey"))
-    val n = metrics.agg(count(lit(1)).cast("double").as("__n"))
+    val n = col("__n").cast("double")
     graft.operators.Rank.globalRank(
         graft.operators.Rank.globalRowNumber(metrics,
-          Seq(col("total_revenue").desc, col("c_custkey")), "revenue_rank"),
+          Seq(col("total_revenue").desc, col("c_custkey")), "revenue_rank",
+          totalCol = Some("__n")),
         Seq(col("total_revenue")), Seq(col("total_revenue")),
         Seq(col("c_custkey")), "__pr")
-      .join(broadcast(n))
       .withColumn("revenue_percentile",
-        when(col("__n") === 1.0, lit(0.0))
-          .otherwise((col("__pr") - 1).cast("double") / (col("__n") - 1.0)))
+        when(n === 1.0, lit(0.0))
+          .otherwise((col("__pr") - 1).cast("double") / (n - 1.0)))
       .drop("__pr", "__n")
       .withColumn("tier_revenue_rank", row_number().over(wTier))
       .filter(col("revenue_rank") <= 100)

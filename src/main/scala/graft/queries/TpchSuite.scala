@@ -401,8 +401,9 @@ object TpchSuite {
 
   /** Scalable global ranking ([[graft.operators.Rank.globalRowNumber]])
     * — identical semantics to `ROW_NUMBER() OVER (ORDER BY …)` but
-    * distributed (range partition + offsets) instead of the
-    * single-partition WindowExec that a bare global window plans.
+    * distributed (one plan node: range partition + per-partition
+    * offsets at action time) instead of the single-partition
+    * WindowExec that a bare global window plans.
     */
   def q43ScalableRank(spark: SparkSession, dir: String): DataFrame = {
     val c = t(spark, dir, "customer")

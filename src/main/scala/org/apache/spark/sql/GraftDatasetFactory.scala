@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge for constructing a DataFrame from a custom LogicalPlan —
@@ -10,4 +11,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftDatasetFactory {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The unresolved Catalyst expression behind `c`, for a custom node. */
+  def expression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
 }

@@ -1,25 +1,12 @@
 package org.apache.spark.sql
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.types.StructType
-
-/** Narrow bridge into `private[sql]` Spark internals, kept to the one
-  * call the engine needs: re-wrapping an `RDD[InternalRow]` produced
-  * by `queryExecution.toRdd` back into a DataFrame WITHOUT a
-  * Row-encoder round trip (`createDataFrame(rdd: RDD[Row], …)` would
-  * deserialize/reserialize every row on the hot path).
+/** Narrow bridge into `private[sql]` Spark internals the engine needs:
+  * scoping conf to a cloned session, draining the listener bus, and
+  * re-rooting an analyzed plan onto another session.
   *
-  * Lives in `org.apache.spark.sql` purely for package-private access;
-  * uses only stable internals (LogicalRDD via internalCreateDataFrame,
-  * present since Spark 2.0).
+  * Lives in `org.apache.spark.sql` purely for package-private access.
   */
 object GraftShims {
-
-  def internalCreateDataFrame(spark: SparkSession, rdd: RDD[InternalRow],
-      schema: StructType): DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
 
   /** Clone `spark` (shared SparkContext/SharedState — so the cache
     * manager and catalog tables carry over; cloned SessionState — so

@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * tools/audit_oracle_types.py, now 0 flagged); this spec pins the
   * Spark side of the contract anyway: identical values across repeated
   * executions in one session, including the distributed prefix-sum
-  * paths (Rank.globalRowNumber / globalRunningSum), whose rows are now
-  * emitted through an UnsafeProjection copy rather than a reused
-  * JoinedRow over the shuffle reader's mutable row.
+  * node behind Rank.globalRowNumber / globalRunningSum, checked
+  * against the naive single-partition windows on skewed, empty and
+  * sparse (empty-partition) inputs.
   */
 class DeterminismSpec extends AnyFunSuite {
   import TestSession._
@@ -41,21 +41,56 @@ class DeterminismSpec extends AnyFunSuite {
   }
 
   test("globalRunningSum is deterministic and exact on a skewed input") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val df = spark.range(0, 5000).toDF("id")
-      .withColumn("v", (col("id") % 7) * (col("id") % 7)) // skewed small values
-      .repartition(13)
-    val runs = (1 to 3).map { _ =>
-      val out = operators.Rank.globalRunningSum(df, Seq(col("id")), col("v"), "rs")
-        .collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("rs"))).sortBy(_._1)
-      out.toSeq
+    import operators.Rank
+    val cols = Seq("id", "v", "rs", "total", "rn", "n", "rn_v")
+    def rows(df: DataFrame): Seq[Seq[Long]] =
+      df.select(cols.map(col): _*).collect()
+        .map(r => cols.indices.map(r.getAs[Number](_).longValue)).sortBy(_.head).toSeq
+    // running sum + total, a row number over the same order, then a
+    // stacked row number over another order (q04's shape)
+    def scalable(df: DataFrame): Seq[Seq[Long]] = {
+      val rs = Rank.globalRunningSum(df, Seq(col("id")), col("v"), "rs", Some("total"))
+      val rn = Rank.globalRowNumber(rs, Seq(col("id")), "rn", Some("n"))
+      rows(Rank.globalRowNumber(rn, Seq(col("v").desc, col("id")), "rn_v"))
     }
-    // exact prefix sums in id order
-    var acc = 0L
-    runs.head.foreach { case (id, rs) =>
-      acc += (id % 7) * (id % 7)
-      assert(rs == acc, s"wrong prefix sum at id=$id")
+    def naive(df: DataFrame): Seq[Seq[Long]] = {
+      val w = Window.orderBy(col("id"))
+      rows(df
+        .withColumn("rs", sum(col("v")).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        .withColumn("total", sum(col("v")).over())
+        .withColumn("rn", row_number().over(w))
+        .withColumn("n", count(lit(1)).over())
+        .withColumn("rn_v", row_number().over(Window.orderBy(col("v").desc, col("id")))))
     }
+    def input(s: org.apache.spark.sql.SparkSession, n: Long): DataFrame =
+      s.range(0, n).toDF("id")
+        .withColumn("v", (col("id") % 7) * (col("id") % 7)) // skewed small values
+        .repartition(13)
+
+    val skewed = input(spark, 5000)
+    val runs = (1 to 3).map(_ => scalable(skewed))
+    assert(runs.head.size == 5000)
+    assert(runs.head == naive(skewed))
     runs.tail.foreach(r => assert(r == runs.head))
+
+    val empty = input(spark, 0)
+    assert(scalable(empty).isEmpty && naive(empty).isEmpty)
+
+    // more range partitions than rows: a filter over an id-ranked frame
+    // keeps its 16 range partitions, so the next rank over id needs no
+    // exchange and most of its partitions arrive empty
+    val wide = org.apache.spark.sql.GraftShims.cloneWithConf(spark,
+      "spark.sql.shuffle.partitions" -> "16",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
+    val sparse = Rank.globalRowNumber(input(wide, 5000), Seq(col("id")), "pre")
+      .filter(col("id") % 1000 === 7).drop("pre")
+    val sizes = Rank.globalRowNumber(sparse, Seq(col("id")), "rn")
+      .rdd.mapPartitions(it => Iterator(it.size)).collect()
+    assert(sizes.length == 16 && sizes.count(_ == 0) >= 11 && sizes.sum == 5)
+    assert(scalable(sparse) == naive(sparse))
   }
 }

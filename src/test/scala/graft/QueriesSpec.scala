@@ -149,16 +149,16 @@ class QueriesSpec extends AnyFunSuite {
   test("q17 global analytics never funnel rows through a single-partition window") {
     // ntile/cume_dist used to be empty-partition windows (a WindowExec
     // fed by Exchange SinglePartition — the whole fact through one
-    // task); they now ride Rank's distributed row numbers. The only
-    // SinglePartition allowed is the one-row count(1) merge (one row
-    // per partition), so assert no Window sits on such an exchange.
+    // task); they now ride Rank's distributed row numbers, whose node
+    // also carries N. Assert no Window sits on a single-partition
+    // exchange.
     val plan = SparkEntry.queries("q17_window_suite")(spark, sf)
       .queryExecution.executedPlan.toString
     val windowOnSingle =
       "(?s)Window[^\\n]*\\n[^\\n]*Exchange SinglePartition".r
     assert(windowOnSingle.findFirstIn(plan).isEmpty,
       "q17 has a window fed by a single-partition exchange")
-    assert(plan.contains("ExistingRDD"), "q17 should ride Rank's shared-shuffle RDD")
+    assert(plan.contains("GlobalRunningSum"), "q17 should ride Rank's GlobalRunningSum exec")
   }
 
   test("st22 micro-batched ANN ingest == s15 bulk append (batch-structure invariance)") {

@@ -87,12 +87,12 @@ class TpchSuiteSpec extends AnyFunSuite {
       .select(col("c_custkey"), col("balance_rank"))
       .collect().map(r => r.getLong(0) -> r.getAs[Number]("balance_rank").intValue).toMap
     assert(scalable == naive)
-    // distributed rank: output reads the pre-ranked RDD (shared
-    // shuffle, partition-offset pass) — never a global WindowExec
-    // (which would move every row to one task)
+    // distributed rank: the GlobalRunningSum exec (range shuffle,
+    // partition-offset pass) — never a global WindowExec (which would
+    // move every row to one task)
     val plan = TpchSuite.q43ScalableRank(spark, sf)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("ExistingRDD") && !plan.contains("Window"))
+    assert(plan.contains("GlobalRunningSum") && !plan.contains("Window"))
   }
 
   test("globalRank matches naive rank() including tie groups") {
