@@ -694,7 +694,8 @@ object Dedup {
         "spark.sql.shuffle.partitions" -> loopParts.toString)
       // same persisted edge table, planned under the loop session (the
       // CacheManager lives in SharedState, so the cache hit carries over)
-      val edgesL = org.apache.spark.sql.GraftShims.reRoot(loopSpark, edges)
+      val edgesL = org.apache.spark.sql.GraftDatasetFactory.ofRows(loopSpark,
+        edges.queryExecution.analyzed)
       var labels = ccCheckpoint(edgesL.select(col("doc_id")).distinct()
         .withColumn("label", col("doc_id")))
       def step(ls: DataFrame): DataFrame = {
@@ -728,7 +729,7 @@ object Dedup {
       }
       // back onto the caller's session: the final corpus-wide rollup
       // plans at the session width, not the loop width
-      org.apache.spark.sql.GraftShims.reRoot(spark, labels)
+      org.apache.spark.sql.GraftDatasetFactory.ofRows(spark, labels.queryExecution.analyzed)
     }
     // cache hygiene: sig and pairs were consumed when edges was
     // forced (and the local path's collect); free them now — edges

@@ -18,6 +18,8 @@ import graft.plans.{GlobalRankStrategy, GlobalRunningSum, Registration}
   * requirement the oracle-parity rules impose on every window in this
   * library (SURVEY.md §4). `totalCol`, when given, adds the grand total
   * (N for a row number) as a column, so callers need no count branch.
+  * The input must be deterministic: one that needs no shuffle (a single
+  * partition, or a rank on the same order) is evaluated twice.
   */
 object Rank {
 
@@ -35,6 +37,7 @@ object Rank {
     Seq(sumCol, total).foreach(c => require(!df.columns.contains(c),
       s"column '$c' collides with an input column - pass a different name"))
     require(sumCol != total, s"sum and total columns are both named '$sumCol'")
+    require(df.queryExecution.analyzed.deterministic, "a global rank needs a deterministic input")
     val spark = df.sparkSession
     Registration.ensure(spark, Seq(GlobalRankStrategy))
     val orders = order.map(c => GraftDatasetFactory.expression(c) match {
@@ -54,14 +57,13 @@ object Rank {
     * value-partitioned window, never a single-partition move. `values`
     * are the raw ranking value columns (tie groups); `order` the same
     * values with sort direction; `tiebreak` any unique column(s).
-    * percent_rank at scale = (globalRank - 1) / (N - 1).
+    * percent_rank at scale = (globalRank - 1) / (N - 1), N via `totalCol`.
     */
   def globalRank(df: DataFrame, values: Seq[Column], order: Seq[Column],
-      tiebreak: Seq[Column], rankCol: String = "rank",
-      totalCol: Option[String] = None): DataFrame = {
+      tiebreak: Seq[Column], rankCol: String = "rank"): DataFrame = {
     require(!df.columns.contains(rankCol),
       s"rank column '$rankCol' collides with an input column - pass a different name")
-    val rn = globalRowNumber(df, order ++ tiebreak, "__rn", totalCol)
+    val rn = globalRowNumber(df, order ++ tiebreak, "__rn")
     rn.withColumn(rankCol, min(col("__rn")).over(Window.partitionBy(values: _*)))
       .drop("__rn")
   }

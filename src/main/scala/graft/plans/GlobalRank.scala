@@ -27,8 +27,8 @@ case class GlobalRunningSum(order: Seq[SortOrder], value: Expression,
   * execution time one job sums `value` per partition, the driver turns
   * those sums into prefix offsets, and one pass emits each row's
   * running sum and the grand total. The second pass re-reads the
-  * child's shuffle files (a shuffle-free child must be deterministic);
-  * nothing is persisted, and both jobs run inside the query's execution.
+  * child's shuffle files or re-evaluates a shuffle-free (deterministic)
+  * child; nothing is persisted, both jobs run in the query's execution.
   */
 case class GlobalRunningSumExec(order: Seq[SortOrder], value: Expression,
     sumAttr: Attribute, totalAttr: Attribute, child: SparkPlan) extends UnaryExecNode {

@@ -1251,9 +1251,9 @@ object Warehouse {
     // stream, the writer rolls a new file every `chunk` rows
     val s2 = org.apache.spark.sql.GraftShims.cloneWithConf(spark,
       "spark.sql.files.maxRecordsPerFile" -> chunk.toString)
-    val sorted = org.apache.spark.sql.GraftShims.reRoot(s2,
+    val sorted = org.apache.spark.sql.GraftDatasetFactory.ofRows(s2,
       src.repartitionByRange(1, col("o_orderkey"))
-        .sortWithinPartitions(col("o_orderkey")))
+        .sortWithinPartitions(col("o_orderkey")).queryExecution.analyzed)
     Snapshots.commit(sorted, t)
     val (lo, hi) = (n / 8 + 10, n / 3)
     val (pruned, kept, total) = Snapshots.readPruned(spark, t, "o_orderkey", lo, hi)

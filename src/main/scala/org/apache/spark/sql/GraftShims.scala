@@ -1,8 +1,9 @@
 package org.apache.spark.sql
 
 /** Narrow bridge into `private[sql]` Spark internals the engine needs:
-  * scoping conf to a cloned session, draining the listener bus, and
-  * re-rooting an analyzed plan onto another session.
+  * scoping conf to a cloned session and draining the listener bus.
+  * (Re-rooting an analyzed plan onto another session is
+  * [[GraftDatasetFactory.ofRows]] of `df.queryExecution.analyzed`.)
   *
   * Lives in `org.apache.spark.sql` purely for package-private access.
   */
@@ -32,13 +33,4 @@ object GraftShims {
   def waitListenerBusEmpty(spark: SparkSession, timeoutMs: Long = 30000L): Unit =
     try spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
     catch { case _: Throwable => () } // timeout: proceed with what arrived
-
-  /** Re-root an already-analyzed DataFrame onto another session (same
-    * SparkContext): the plan is re-planned under `spark`'s conf, and
-    * cached tables still resolve (the CacheManager is in SharedState
-    * and matches by canonicalized plan, not by session).
-    */
-  def reRoot(spark: SparkSession, df: DataFrame): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
-      df.queryExecution.analyzed)
 }

@@ -92,5 +92,10 @@ class DeterminismSpec extends AnyFunSuite {
       .rdd.mapPartitions(it => Iterator(it.size)).collect()
     assert(sizes.length == 16 && sizes.count(_ == 0) >= 11 && sizes.sum == 5)
     assert(scalable(sparse) == naive(sparse))
+
+    // a child that needs no shuffle is evaluated twice, so a
+    // nondeterministic input is rejected when the DataFrame is built
+    intercept[IllegalArgumentException](
+      Rank.globalRowNumber(input(spark, 10).withColumn("r", rand(1)), Seq(col("id"))))
   }
 }
