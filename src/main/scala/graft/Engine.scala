@@ -2,17 +2,17 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.GraftFunctions
-
 /** SQL facade — the engine-side equivalent of the reference's Kyuubi
   * surface (docs/components/kyuubi.md): a user connects, the warehouse
   * tables are there, and plain Spark SQL works against them. `open`
-  * registers every testdata table as a temp view and installs graft's
-  * native functions; afterwards `spark.sql(...)` is the full API.
+  * registers every testdata table as a temp view and the dialect
+  * aliases of [[graft.functions.SqlDialect]]; afterwards `spark.sql(...)`
+  * is the full API. SQL text naming graft's own functions needs a
+  * session built with [[GraftExtensions]].
   */
 object Engine {
 
-  /** Register all warehouse tables as temp views + graft functions. */
+  /** Register all warehouse tables as temp views + the dialect aliases. */
   def open(spark: SparkSession, dir: String): SparkSession = {
     // open() overwrites flat temp views out-of-band, exactly like
     // openGoverned: a warehouse table of the same name (e.g. 'orders')
@@ -23,7 +23,6 @@ object Engine {
     Tables.names.foreach { n =>
       Tables(spark, dir, n).createOrReplaceTempView(n)
     }
-    GraftFunctions.register(spark)
     graft.functions.SqlDialect.register(spark)
     spark
   }
@@ -254,7 +253,6 @@ object Engine {
         memo.synchronized { memo(memoKey) = fp }
       }
     }
-    GraftFunctions.register(spark)
     graft.functions.SqlDialect.register(spark)
     spark
   }
@@ -384,7 +382,6 @@ object Engine {
       byTable.get(n).fold(base)(applyPolicy(base, _))
         .createOrReplaceTempView(n)
     }
-    GraftFunctions.register(spark)
     graft.functions.SqlDialect.register(spark)
     spark
   }

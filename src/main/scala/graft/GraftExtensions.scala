@@ -2,12 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{CosineSimExpr, RollingHashExpr}
+import graft.functions.GraftFunctions
 
-/** SparkSessionExtensions entry point — wire graft's native functions
-  * into any session at build time:
+/** SparkSessionExtensions entry point — wire graft's SQL functions,
+  * planner strategies and optimizer rules into any session at build
+  * time:
   *
   * {{{
   * SparkSession.builder()
@@ -18,34 +19,24 @@ import graft.functions.{CosineSimExpr, RollingHashExpr}
   * This is the same injection surface the reference stack uses to load
   * Iceberg's extensions into Kyuubi-managed Spark sessions
   * (reference: docs/components/kyuubi.md §4 config snippets).
+  *
+  * A session built without it stays supported: the Column wrappers in
+  * [[GraftFunctions]] need no registry, so the whole DataFrame API
+  * works there; only SQL text naming a graft function needs the
+  * extension. The one exception is [[graft.plans.Registration.ensure]],
+  * through which an operator that plans a graft node appends that
+  * node's strategy or rule to such a session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("rolling_hash"),
-      new ExpressionInfo(classOf[RollingHashExpr].getName, null, "rolling_hash"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, s"rolling_hash expects 1 argument, got ${exprs.length}")
-        RollingHashExpr(exprs.head)
-      }))
+    GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName, null, name), builder))
+    }
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
     ext.injectOptimizerRule(_ => graft.plans.MvRewriteRule)
-    ext.injectFunction((
-      new FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalizeExpr].getName, null, "nfc_normalize"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, s"nfc_normalize expects 1 argument, got ${exprs.length}")
-        graft.functions.NfcNormalizeExpr(exprs.head)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimExpr].getName, null, "cosine_sim"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, s"cosine_sim expects 2 arguments, got ${exprs.length}")
-        CosineSimExpr(exprs.head, exprs(1))
-      }))
   }
 }

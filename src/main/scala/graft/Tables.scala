@@ -13,25 +13,15 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.ts varies across generator versions: parquet
-    // TIMESTAMP(NANOS) (which Spark 4 only reads as long, via the
-    // legacy conf) or TIMESTAMP(MICROS) with isAdjustedToUTC=false
-    // (read natively as TIMESTAMP_NTZ). Normalize both to a
-    // microsecond TimestampType so every operator sees one shape.
-    // All graft sessions run with session.timeZone=UTC, so the
-    // NTZ→LTZ cast is value-preserving.
-    if (name == "events") spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    // events.ts is parquet TIMESTAMP(MICROS), which Spark reads as
+    // TIMESTAMP_NTZ when the file marks it isAdjustedToUTC=false.
+    // Normalize to TimestampType so every operator sees one shape. All
+    // graft sessions run with session.timeZone=UTC, so the NTZ→LTZ
+    // cast is value-preserving.
     val df = graft.sources.ParquetSchemas.read(spark, s"$dir/$name.parquet")
-    if (name != "events") df
-    else df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // nanos long → micros long → timestamp; `div` stays in Long
-        // (a double round-trip would lose precision above 2^53 ns)
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => df
-    }
+    if (name == "events" && df.schema("ts").dataType == org.apache.spark.sql.types.TimestampNTZType)
+      df.withColumn("ts", col("ts").cast("timestamp"))
+    else df
   }
 
   /** Ensure at least the session's shuffle width of partitions before

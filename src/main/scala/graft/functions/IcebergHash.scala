@@ -1,9 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -193,32 +191,4 @@ case class IcebergHashExpr(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression)
       : IcebergHashExpr = copy(child = newChild)
-}
-
-object IcebergHash {
-  private[graft] def registerWith(
-      reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit = {
-    reg.createOrReplaceTempFunction("iceberg_bucket", exprs => {
-      require(exprs.length == 2,
-        s"iceberg_bucket expects 2 arguments, got ${exprs.length}")
-      val n = exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-        case other => throw new IllegalArgumentException(
-          s"iceberg_bucket N must be an integer literal, got $other")
-      }
-      IcebergBucketExpr(exprs.head, n)
-    }, "scala_udf")
-    reg.createOrReplaceTempFunction("iceberg_hash", exprs => {
-      require(exprs.length == 1,
-        s"iceberg_hash expects 1 argument, got ${exprs.length}")
-      IcebergHashExpr(exprs.head)
-    }, "scala_udf")
-  }
-
-  /** Iceberg-spec bucket id of a key column (register first). */
-  def icebergBucket(c: Column, n: Int): Column =
-    call_function("iceberg_bucket", c, org.apache.spark.sql.functions.lit(n))
-
-  /** Raw murmur3_x86_32 spec hash of a key column (register first). */
-  def icebergHash(c: Column): Column = call_function("iceberg_hash", c)
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.types.{StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -9,7 +10,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * DuckDB/Postgres-style names a SQL user coming from the reference's
   * Kyuubi endpoint would type that Spark spells differently. Each is a
   * pure alias onto a NATIVE Catalyst expression (zero UDFs, codegen
-  * intact); registration is session-scoped via temp functions.
+  * intact); registration is session-scoped via temp functions, and a
+  * name the session already resolves is left as it is.
   *
   * Deliberately NOT shimmed (semantic divergence, not spelling):
   * `dayofweek` (0- vs 1-based) and 1-based array subscripts — queries
@@ -21,7 +23,8 @@ object SqlDialect {
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     def install(name: String)(builder: Seq[Expression] => Expression): Unit =
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
 
     // epoch_ms(ts) / epoch_us(ts): ms/µs since epoch (DuckDB-ish)
     install("epoch_ms") {

@@ -65,7 +65,6 @@ object Approx {
     * exact, oracle-checkable.
     */
   def a02BloomFilteredJoin(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val dim = Tables(spark, dir, "customer")
       .filter(col("c_acctbal") > 9000.0)
     // 2^20 bits = 128 KB: the sketch is embedded in the probe-side plan
@@ -73,11 +72,10 @@ object Approx {
     // cardinality, not "as big as fits" — at 100 TB scale bits with the
     // dim count (~10 bits/key for ~1% FPP).
     val bloom = dim
-      .agg(call_function("bloom_agg", col("c_custkey"),
-        lit(100000L), lit(1L << 20)).as("bf"))
+      .agg(GraftFunctions.bloomAgg(col("c_custkey"), 100000L, 1L << 20).as("bf"))
       .head().getAs[Array[Byte]](0)
     val o = Tables(spark, dir, "orders")
-      .filter(call_function("bloom_might_contain", lit(bloom), col("o_custkey")))
+      .filter(GraftFunctions.bloomMightContain(lit(bloom), col("o_custkey")))
     o.join(dim, col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(
@@ -173,7 +171,6 @@ object Approx {
     */
   def a05KmvDistinct(spark: SparkSession, dir: String): DataFrame = {
     val K = 128
-    GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.kMinValues
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_returnflag").as("flag"), col("l_orderkey"),
@@ -208,7 +205,6 @@ object Approx {
     */
   def a07SketchSizing(spark: SparkSession, dir: String): DataFrame = {
     val K = 256
-    GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.kMinValues
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_orderkey"),
@@ -280,7 +276,6 @@ object Approx {
     */
   def a06KmvSetOps(spark: SparkSession, dir: String): DataFrame = {
     val K = 128
-    GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.kMinValues
     val li = Tables(spark, dir, "lineitem")
       .select(col("l_returnflag").as("t"), col("l_orderkey"),
@@ -341,7 +336,6 @@ object Approx {
     */
   def a09ReservoirSample(spark: SparkSession, dir: String): DataFrame = {
     val K = 8
-    GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.bottomK
     val docs = Tables(spark, dir, "documents").select(
       col("source"),
@@ -370,7 +364,6 @@ object Approx {
     */
   def a10SketchRollup(spark: SparkSession, dir: String): DataFrame = {
     val K = 256
-    GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.kMinValues
     val t = s"${graft.TempDirs.scratch("graft-sketchcube")}/nation_sketches"
     val cust = Tables(spark, dir, "customer").select(
@@ -426,7 +419,6 @@ object Approx {
     */
   def a11RollingSketch(spark: SparkSession, dir: String): DataFrame = {
     val K = 256
-    GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.kMinValues
     val t = s"${graft.TempDirs.scratch("graft-rollsketch")}/daily_sketches"
     val ev = Tables(spark, dir, "events").select(

@@ -29,7 +29,6 @@ object Dedup {
     * dedup's hottest path).
     */
   private def shingles(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     Tables.spread(d.filter(length(col("text")) >= 3)
         .select(col("doc_id"), col("source"), col("text")))
       .select(col("doc_id"), col("source"),
@@ -51,7 +50,6 @@ object Dedup {
     * frequent-shingle prune that keeps this linear-ish at 100 TB.
     */
   def d02NgramJaccard(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     d02From(shingles(docs(spark, dir)))
   }
 
@@ -119,7 +117,6 @@ object Dedup {
     * Σ df² bounded fanout, map-side pair generation.
     */
   def d17Containment(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val o = pairStats(shingles(docs(spark, dir)))
       .withColumn("overlap",
         col("n_common").cast("double") /
@@ -180,7 +177,6 @@ object Dedup {
     * flag exactly.
     */
   def d09LshRecall(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // truth side needs the exploded shingle table (inverted index);
     // the signature side runs the native minhash_sig kernel instead —
     // a second in-row gram pass costs less than a 16-min groupBy over
@@ -303,7 +299,6 @@ object Dedup {
     * output is exactly hash-checked.
     */
   def d05EmbeddingDup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = graft.Tables(spark, dir, "embeddings")
     val tb = (0 until EMB_TABLES).map { t =>
       struct(lit(t).as("t"),
@@ -373,7 +368,6 @@ object Dedup {
     * to the oracles' exploded-gram `min((A·x + B) % P)` CTEs.
     */
   private def minhashSigs(d: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(d.sparkSession)
     Tables.spread(d.filter(length(col("text")) >= 3)
         .select(col("doc_id"), col("text")))
       .select(col("doc_id"),
@@ -799,7 +793,6 @@ object Dedup {
     * exactly oracled, not rows-only.
     */
   def d10SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // scoped persist: the assignment table feeds both self-join sides
     // and the per-cell rollup — one Lloyd pass, not three
     val asn = graft.Caches.scoped(

@@ -217,7 +217,6 @@ object Pipeline {
     * contract), and the oracle expects it TRUE on every row.
     */
   def p16BloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val gram5 = expr(graft.functions.TextGrams.gramExpr("ts", 5))
     val grams = graft.Caches.scoped(
       graft.Tables.spread(docs(spark, dir).select(col("doc_id"), col("text")))
@@ -226,12 +225,11 @@ object Pipeline {
         .select(col("doc_id"), explode(array_distinct(gram5)).as("g")))
     val bench = grams.filter(col("doc_id") % 13 === 0).select(col("g")).distinct()
     val bloom = bench
-      .agg(call_function("bloom_agg", xxhash64(col("g")),
-        lit(100000L), lit(1L << 20)).as("bf"))
+      .agg(graft.functions.GraftFunctions.bloomAgg(xxhash64(col("g")), 100000L, 1L << 20).as("bf"))
       .head().getAs[Array[Byte]](0)
     val train = grams.filter(col("doc_id") % 13 =!= 0)
     val candidates = train.filter(
-      call_function("bloom_might_contain", lit(bloom), xxhash64(col("g"))))
+      graft.functions.GraftFunctions.bloomMightContain(lit(bloom), xxhash64(col("g"))))
     val hits = candidates.join(broadcast(bench), Seq("g"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit_grams"))
     // independent exact sweep (no bloom) — the soundness yardstick
@@ -674,7 +672,6 @@ object Pipeline {
     */
   def p30SourceQuota(spark: SparkSession, dir: String): DataFrame = {
     val K = 20
-    graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.bottomK
     val d = docs(spark, dir).select(
       col("source"), col("n_chars"),

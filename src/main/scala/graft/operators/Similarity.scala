@@ -26,7 +26,6 @@ object Similarity {
     * `aggregate(zip_with(...))` formulation, ~lambda-free hot loop).
     */
   def s01CosineTopk(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = emb(spark, dir)
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -117,7 +116,6 @@ object Similarity {
     * scale. Exactly oracle-checked on the same md5 hyperplanes.
     */
   def s07AnnMultiprobeTopk(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = emb(spark, dir)
     // no persist here: the probe side's vec_id filter prunes before
     // the projection folds run, and caching this table would pin the
@@ -160,7 +158,6 @@ object Similarity {
     * matters more than scan cost.
     */
   def s03AnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = emb(spark, dir)
     // coarse cells: per-dimension mean per label (the "centroid")
     val flat = e.select(col("vec_id"), col("label"), posexplode(col("embedding")))
@@ -237,7 +234,6 @@ object Similarity {
   private[operators] def kmeansAssignments(
       spark: SparkSession, dir: String,
       corpus: Option[DataFrame] = None): DataFrame = {
-    GraftFunctions.register(spark)
     val e = corpus.getOrElse(emb(spark, dir))
     val seeds = e
       .select(col("vec_id"), col("embedding"),
@@ -508,7 +504,6 @@ object Similarity {
   private[graft] def appendAnnIndex(spark: SparkSession, idxDir: String,
       batch: DataFrame, batchTag: Option[String] = None): Unit = {
     if (batchTag.exists(committedAppendTags(idxDir).contains)) return
-    GraftFunctions.register(spark)
     val cents = graft.sources.Snapshots.read(spark, s"$idxDir/centroids")
     val scored = Tables.spread(batch.select(col("vec_id"), col("embedding")))
       .crossJoin(broadcast(cents))
@@ -703,7 +698,6 @@ object Similarity {
     * serve in SQL.
     */
   def s13AnnServe(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idxDir = graft.TempDirs.scratch("graft-ann-index")
     buildAnnIndex(spark, dir, idxDir)
     val q = emb(spark, dir).filter(col("vec_id") < 10)
@@ -732,7 +726,6 @@ object Similarity {
     * retrain — exactly how production IVF indexes operate.
     */
   def s15AnnAppend(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idxDir = graft.TempDirs.scratch("graft-ann-append")
     val e = emb(spark, dir)
     buildAnnIndex(spark, dir, idxDir,
@@ -840,7 +833,6 @@ object Similarity {
     * sized — the same economics as q53's table compaction.
     */
   def s18IndexCompact(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idxDir = graft.TempDirs.scratch("graft-ann-compact")
     val e = emb(spark, dir)
     buildAnnIndex(spark, dir, idxDir,
@@ -886,7 +878,6 @@ object Similarity {
     * schedules the expensive rebuild.
     */
   def s19IndexDrift(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idxDir = graft.TempDirs.scratch("graft-ann-drift")
     val e = emb(spark, dir)
     buildAnnIndex(spark, dir, idxDir,
@@ -935,7 +926,6 @@ object Similarity {
     * exactly how production vector stores honor erasure requests.
     */
   def s20AnnDelete(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idxDir = graft.TempDirs.scratch("graft-ann-del")
     buildAnnIndex(spark, dir, idxDir)
     val e = emb(spark, dir)
@@ -1053,7 +1043,6 @@ object Similarity {
 
   private[graft] def pqModel(
       spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    GraftFunctions.register(spark)
     val e = emb(spark, dir)
     val seeds = e
       .select(col("vec_id"), col("embedding"),
@@ -1330,7 +1319,6 @@ object Similarity {
     * full production layout.
     */
   def s16Sq8Search(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = emb(spark, dir)
     val stats = e.select(posexplode(col("embedding")))
       .groupBy(col("pos"))
@@ -1389,7 +1377,6 @@ object Similarity {
     * per-query planner choice this layout leaves open.
     */
   def s17FilteredAnn(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val idxDir = graft.TempDirs.scratch("graft-ann-filtered")
     val e = emb(spark, dir)
     buildAnnIndex(spark, dir, idxDir,
@@ -1442,7 +1429,6 @@ object Similarity {
     * surface (docs/architecture/lakehouse.md ML-feature bullet).
     */
   def s21RandomProjection(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val K = 16
     val T = 40 // hyperplane table id — disjoint from s02 (0) and d05
     def projArr(vec: String): Column = expr("array(" +
@@ -1572,7 +1558,6 @@ object Similarity {
     * intersection counts exactly.
     */
   def s09AnnRecall(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = emb(spark, dir)
     // scoped persist: three corpus-wide passes read this table (exact
     // pairs, single-probe, multi-probe) — cache the narrow projection

@@ -108,10 +108,9 @@ object TextAnalysis {
     * char on the ASCII corpus) in HUGEINT space with the same modulus.
     */
   def t04Fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     docs(spark, dir)
       .withColumn("doc_fp", GraftFunctions.rollingHash(col("text")))
-      .withColumn("token_fps", expr("transform(split(trim(text), '\\\\s+'), t -> rolling_hash(t))"))
+      .withColumn("token_fps", transform(split(trim(col("text")), "\\s+"), GraftFunctions.rollingHash(_)))
       .select(
         col("doc_id"),
         col("doc_fp"),
@@ -385,7 +384,6 @@ object TextAnalysis {
     * row-local map work — embarrassingly parallel at 100 TB.
     */
   def t13Normalize(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     docs(spark, dir)
       .select(col("doc_id"), col("text"))
       .withColumn("nfc_text", GraftFunctions.nfcNormalize(col("text")))

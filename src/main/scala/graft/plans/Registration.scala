@@ -8,6 +8,11 @@ import org.apache.spark.sql.execution.SparkStrategy
 /** Installs graft's planner strategies and optimizer rules into a
   * session not built with [[graft.GraftExtensions]] (which injects them
   * at session build). Idempotent: appends only what is missing.
+  *
+  * This is the one place the library adds to a caller's session: a
+  * graft plan node has no physical plan without its strategy, so an
+  * operator that builds one calls `ensure` first. Functions never go
+  * this way; their Column wrappers need no registration.
   */
 object Registration {
   def ensure(spark: SparkSession, strategies: Seq[SparkStrategy],

@@ -1377,7 +1377,6 @@ object Warehouse {
     */
   def q116MurmurBucket(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Transforms
-    graft.functions.GraftFunctions.register(spark)
     val wh = tempDir("graft-mbucket")
     val t = s"$wh/supplier_by_key"
     Transforms.create(t, Seq(Transforms.MBucket(8, "s_suppkey")))
@@ -1409,7 +1408,6 @@ object Warehouse {
   def q117StringBucket(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Transforms
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val wh = tempDir("graft-sbucket")
     val t = s"$wh/nation_by_name"
     val nation = Tables(spark, dir, "nation")

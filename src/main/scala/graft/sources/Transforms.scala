@@ -336,7 +336,6 @@ object Transforms {
     val seen = batchId.exists(id =>
       Files.exists(ledger) && readLines(ledger).contains(id.toString))
     if (seen) return
-    graft.functions.GraftFunctions.register(spark) // MBucket's expression
     val pvCols = fields.indices.map(i => s"__pv$i")
     val withPv = fields.zip(pvCols).foldLeft(df) { case (d, (t, c)) =>
       d.withColumn(c, t.derive)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 
 import graft.functions.Exact.dsum
 
-/** Raw event row as streamed (ts = parquet TIMESTAMP(NANOS) as long). */
+/** Raw event row as streamed (ts = nanoseconds since epoch, as long). */
 case class RawEvent(event_id: Long, ts: Long, user_id: Long,
   event_type: String, value: Double, props: String)
 
@@ -138,19 +138,15 @@ object EventStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** The raw on-disk schema of `<dir>/events.parquet`, probed from the
-    * footer: `ts` is TIMESTAMP(NANOS)-as-long under older generator
-    * output, TIMESTAMP(MICROS)/NTZ under newer. A file-source stream
-    * must declare the files' actual schema, so probe before streaming.
+  /** The raw on-disk schema of `<dir>/events.parquet`, read from the
+    * footer on the driver. A file-source stream must declare the
+    * files' actual schema (`ts` may be TIMESTAMP or TIMESTAMP_NTZ).
     */
-  def rawEventsSchema(s: SparkSession, dir: String): StructType = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/events.parquet").schema
-  }
+  def rawEventsSchema(s: SparkSession, dir: String): StructType =
+    graft.sources.ParquetSchemas.read(s, s"$dir/events.parquet").schema
 
   /** File-source stream over the testdata events table with `ts`
-    * normalized to a microsecond TimestampType regardless of the
-    * file's physical encoding (all graft sessions run UTC, so the
+    * normalized to TimestampType (all graft sessions run UTC, so the
     * NTZ→LTZ cast is value-preserving). Same normalization as the
     * batch loader [[graft.Tables]].
     */
@@ -160,11 +156,8 @@ object EventStream {
       .schema(raw)
       .option("pathGlobFilter", "events.parquet")  // file source needs a dir
       .parquet(dir)
-    raw("ts").dataType match {
-      case LongType => stream.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case TimestampNTZType => stream.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => stream
-    }
+    if (raw("ts").dataType == TimestampNTZType) stream.withColumn("ts", col("ts").cast("timestamp"))
+    else stream
   }
 
   /** st01: event-time windowed aggregation (6 h tumbling, 1 h
@@ -424,7 +417,6 @@ object EventStream {
     */
   def st06KafkaCdc(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     // 1. land the changelog as Kafka-wire records (what the topic holds)
     val ev = graft.Tables(s, dir, "events")
@@ -550,7 +542,6 @@ object EventStream {
     * every event exactly once.
     */
   def st08StreamIngest(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st08-src")
     // land ts as long micros: the sharded copy must round-trip through
@@ -596,7 +587,6 @@ object EventStream {
     * table in one window.
     */
   def st09CdcMerge(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     // 1. the topic: st06's Debezium envelope, randomly sharded
     val ev = graft.Tables(s, dir, "events")
@@ -690,7 +680,6 @@ object EventStream {
     * batch partitioning.
     */
   def st10StreamingIvm(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st10-src")
     graft.Tables(spark, dir, "events")
@@ -747,8 +736,6 @@ object EventStream {
   def st13StreamingSketch(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.GraftFunctions
     val K = 128
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    GraftFunctions.register(spark) // before the clone: the stream session inherits
     val s = streamSession(spark)
     val hvCol = conv(substring(md5(col("user_id").cast("string").cast("binary")), 1, 15),
       16, 10).cast("long")
@@ -774,7 +761,6 @@ object EventStream {
     val q = stream.writeStream
       .option("checkpointLocation", graft.TempDirs.scratch("graft-st13-ckpt"))
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        GraftFunctions.register(batch.sparkSession) // idempotent
         graft.sources.Snapshots.mergeWith(
           batch.sparkSession, table, batch, tag = Some(s"sk-batch=$id")) { (mat, b) =>
           // stored k-min hashes ∪ the batch's raw hashes → re-sketch:
@@ -819,7 +805,6 @@ object EventStream {
     * the same rules.
     */
   def st14DeadLetter(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val envSchema = StructType(Seq(
       StructField("user_id", LongType), StructField("event_id", LongType),
@@ -909,7 +894,6 @@ object EventStream {
     * seed + 4 merge commits.
     */
   def st15RestartRecovery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st15-src")
     val ckpt = graft.TempDirs.scratch("graft-st15-ckpt")
@@ -1161,7 +1145,6 @@ object EventStream {
     * proving the multi-batch MoR path (4×(delete+data) + 1 compact).
     */
   def st17MorCdc(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     // 1. the topic: st06's Debezium envelope, sharded BY KEY
     val ev = graft.Tables(s, dir, "events")
@@ -1449,7 +1432,6 @@ object EventStream {
     */
   def st21StreamHiddenPartition(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Transforms
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st21-src")
     graft.Tables(spark, dir, "events")
@@ -1657,7 +1639,6 @@ object EventStream {
     */
   def st24StreamTwoSinkTxn(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshots
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st24-src")
     graft.Tables(spark, dir, "events")
@@ -1742,7 +1723,6 @@ object EventStream {
     */
   def st25StreamCdf(spark: SparkSession, dir: String): DataFrame = {
     import graft.sources.Snapshots
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val wh = graft.TempDirs.scratch("graft-st25-wh")
     val up = s"$wh/orders_up"
@@ -1880,7 +1860,6 @@ object EventStream {
   def st26StreamQualityGate(spark: SparkSession, dir: String): DataFrame = {
     import graft.pipeline.Checks
     import graft.sources.{Mor, Snapshots}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val s = streamSession(spark)
     val src = graft.TempDirs.scratch("graft-st26-src")
     graft.Tables(spark, dir, "events")
@@ -2025,7 +2004,10 @@ object EventStream {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         graft.sources.Snapshots.mergeWith(
           batch.sparkSession, table, batch, tag = Some(s"jm=$id")) { (mat, b) =>
-          val delta = broadcast(dim)
+          // re-rooted on the batch's session so the plan mixes no
+          // sessions; the shared cache manager still serves `dim`
+          val delta = broadcast(org.apache.spark.sql.GraftDatasetFactory.ofRows(
+              batch.sparkSession, dim.queryExecution.analyzed))
             .join(b, col("o_orderkey") === col("l_orderkey"))
             .groupBy(col("o_month"))
             .agg(sum(col("qty")).as("n_items"), sum(col("price")).as("rev"))

@@ -14,4 +14,7 @@ object GraftDatasetFactory {
 
   /** The unresolved Catalyst expression behind `c`, for a custom node. */
   def expression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** A Column over Catalyst expression `e` (the inverse of [[expression]]). */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 }

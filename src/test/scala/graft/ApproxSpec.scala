@@ -63,9 +63,7 @@ class ApproxSpec extends AnyFunSuite {
   }
 
   test("a02 bloom probe runs codegen'd in the scan stage (no UDF)") {
-    val spark0 = spark
-    graft.functions.GraftFunctions.register(spark0)
-    val plan = Approx.a02BloomFilteredJoin(spark0, sf)
+    val plan = Approx.a02BloomFilteredJoin(spark, sf)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("ScalaUDF") && !plan.contains("BatchEvalPython"))
     assert(plan.contains("might_contain") || plan.contains("BloomFilterMightContain"))
@@ -203,7 +201,6 @@ class ApproxSpec extends AnyFunSuite {
       "expected seed + ceil(16/4) merge commits")
     // single-pass sketch over the raw table — the batched incremental
     // maintenance must land on the IDENTICAL estimate (KMV union law)
-    GraftFunctions.register(spark)
     val K = 128
     val est = when(size(col("sk")) < K, size(col("sk")).cast("double"))
       .otherwise(lit((K - 1).toDouble) * lit(1152921504606846976L).cast("double") /

@@ -27,7 +27,6 @@ class DedupSpec extends AnyFunSuite {
     // 0.74 with T=10 tables × B=5 bits on this near-random corpus
     // (top-50 sims only 0.41–0.51); the floor below is deliberately
     // loose so the spec pins "gate works" without pinning the corpus.
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings")
     val a = e.select(col("vec_id").as("va"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("vb"), col("embedding").as("eb"))
@@ -58,7 +57,6 @@ class DedupSpec extends AnyFunSuite {
 
   test("collect_capped == collect_list for under-cap groups; hard-stops at cap") {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val df = spark.range(0, 1000)
       .selectExpr("id % 10 AS k", "id AS v") // 100 values per key
     val capped = df.groupBy(col("k"))
@@ -419,9 +417,8 @@ class DedupSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import graft.functions.{GraftFunctions, MinHashExpr}
+    import graft.functions.MinHashExpr
     import graft.functions.MinHashExpr.K
-    GraftFunctions.register(spark)
     // reference: the per-gram substring/md5/array_min signature chain
     // and d03's former band self-join + distinct + countDistinct
     val sig = Tables(spark, sf, "documents").filter(length(col("text")) >= 3)

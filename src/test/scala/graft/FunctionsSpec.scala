@@ -55,7 +55,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("rolling_hash runs inside a DataFrame plan (codegen path)") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val out = Seq("a", "spark", "a").toDF("s")
       .select(GraftFunctions.rollingHash(col("s")).as("h"))
       .collect().map(_.getLong(0))
@@ -65,7 +64,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("k_min_values: k smallest distinct, sorted, null-safe, merges across partitions") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // 1000 values with duplicates, spread over 8 partitions so the
     // sketch must MERGE partial buffers; expected = 5 smallest distinct
     val vals = (1L to 500L).flatMap(v => Seq(v * 7 % 501, v * 7 % 501, v))
@@ -83,7 +81,6 @@ class FunctionsSpec extends AnyFunSuite {
 
   test("k_min_values union-of-sketches == sketch-of-union") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val a = (1L to 300L).map(_ * 3).toDF("v")   // multiples of 3
     val b = (1L to 300L).map(_ * 2).toDF("v")   // multiples of 2, overlap on 6s
     def sk(df: org.apache.spark.sql.DataFrame) =
@@ -116,7 +113,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("minhash_sig equals the substring/md5/array_min formulation on every sf0.001 document") {
-    GraftFunctions.register(spark)
     val docs = Tables(spark, sf, "documents").filter(length(col("text")) >= 3)
     val diff = docs
       .select(col("doc_id"), GraftFunctions.minhashSig(col("text")).as("native"),
@@ -127,7 +123,6 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("minhash_sig equals the reference on multi-byte, invalid and repeated-gram strings") {
-    GraftFunctions.register(spark)
     val rows = edgeFrame
       .select(col("text"), length(col("text")).as("n"),
         GraftFunctions.minhashSig(col("text")).as("native"),
@@ -164,7 +159,6 @@ class FunctionsSpec extends AnyFunSuite {
       val got = CharGramsExpr.grams(u, n).toSeq[UTF8String](StringType)
       assert(got == ref, s"n=$n text=$u")
     }
-    GraftFunctions.register(spark)
     val diff = Tables(spark, sf, "documents").filter(length(col("text")) >= 3)
       .select(GraftFunctions.charGrams(col("text"), 3).as("native"),
         array_distinct(transform(sequence(lit(1), length(col("text")) - 2),
@@ -180,7 +174,6 @@ class FunctionsSpec extends AnyFunSuite {
     assert(!MinHashExpr(text).isInstanceOf[CodegenFallback])
     assert(!CharGramsExpr(text,
       org.apache.spark.sql.catalyst.expressions.Literal(3)).isInstanceOf[CodegenFallback])
-    GraftFunctions.register(spark)
     val df = Tables(spark, sf, "documents")
       .select(GraftFunctions.minhashSig(col("text")).as("sig"),
         GraftFunctions.charGrams(col("text"), 3).as("g"))

@@ -6,7 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Building a DataFrame only plans it: the ranking entries submit no
   * Spark job, persist nothing and leave the session conf as it was
-  * until an action runs.
+  * until an action runs. No entry rewrites the caller's session: the
+  * function registry and the conf stay as they were, and the planner
+  * gains only graft's own strategies and rules.
   */
 class LazyBuildSpec extends AnyFunSuite {
   import TestSession._
@@ -37,5 +39,33 @@ class LazyBuildSpec extends AnyFunSuite {
       sc.setLocalProperty(tag, null)
       sc.removeSparkListener(listener)
     }
+  }
+
+  test("building entries that use graft functions or read events leaves the session alone") {
+    // the graft-function Column wrappers (a02, d02, d03, t04, p16,
+    // q116), the `events` readers (a11, st08) and two entries that plan
+    // graft nodes through Registration.ensure (d14, m07); some of them
+    // write at build time, so jobs and cache entries are not asserted
+    val names = Seq("a02_bloom_filtered_join", "d02_ngram_jaccard", "d03_minhash_lsh",
+      "t04_fingerprint", "p16_bloom_decontaminate", "q116_murmur_bucket",
+      "a11_rolling_sketch", "st08_stream_ingest", "d14_prefix_join", "m07_media_align")
+    // a session of its own, so no earlier suite's registrations hide a change
+    val s = spark.newSession()
+    val functions = s.sessionState.functionRegistry.listFunction().toSet
+    val conf = s.conf.getAll
+    val em = s.experimental
+    val (strategies, rules) = (em.extraStrategies, em.extraOptimizations)
+    names.foreach(n => SparkEntry.queries(n)(s, sf))
+    val added = s.sessionState.functionRegistry.listFunction().toSet -- functions
+    val confChanges = s.conf.getAll.toSet -- conf.toSet
+    val planners = em.extraStrategies.diff(strategies) ++ em.extraOptimizations.diff(rules)
+    val foreign = planners.filterNot(_.getClass.getName.startsWith("graft.plans."))
+    val changes = Seq(
+      Option.when(added.nonEmpty)(s"registered functions ${added.mkString(", ")}"),
+      Option.when(confChanges.nonEmpty || s.conf.getAll.size != conf.size)(
+        s"changed the conf: ${confChanges.mkString(", ")}"),
+      Option.when(foreign.nonEmpty)(s"added planner hooks ${foreign.mkString(", ")}")).flatten
+    assert(changes.isEmpty, changes.mkString("building ", "; building ", ""))
+    assert(planners.nonEmpty, "d14 and m07 no longer plan a graft node")
   }
 }

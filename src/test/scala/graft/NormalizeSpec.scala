@@ -11,7 +11,6 @@ class NormalizeSpec extends AnyFunSuite {
 
   test("nfc_normalize composes decomposed sequences and is idempotent") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val decomposed = "Café"   // e + combining acute
     val composed = "Caf\u00e9"            // precomposed
     val df = Seq((1, decomposed), (2, composed), (3, "plain ascii"), (4, null))
@@ -25,8 +24,9 @@ class NormalizeSpec extends AnyFunSuite {
     assert(df(2).getString(1) == "plain ascii")
     assert(df(3).isNullAt(1), "null in, null out")
 
-    // SQL registration path
-    val viaSql = spark.sql(s"SELECT nfc_normalize('Café')").collect().head.getString(0)
+    // SQL path, through the extension's function table
+    val viaSql = withExtendedSession(
+      _.sql(s"SELECT nfc_normalize('Café')").collect().head.getString(0))
     assert(viaSql == composed)
   }
 

@@ -225,11 +225,13 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("Engine.open exposes tables + functions to plain SQL") {
-    Engine.open(spark, sf)
-    val n = spark.sql(
-      """SELECT n_name, count(*) AS c, rolling_hash(n_name) AS h
-        |FROM customer JOIN nation ON c_nationkey = n_nationkey
-        |GROUP BY n_name ORDER BY c DESC LIMIT 3""".stripMargin).collect()
+    val n = withExtendedSession { s =>
+      Engine.open(s, sf)
+      s.sql(
+        """SELECT n_name, count(*) AS c, rolling_hash(n_name) AS h
+          |FROM customer JOIN nation ON c_nationkey = n_nationkey
+          |GROUP BY n_name ORDER BY c DESC LIMIT 3""".stripMargin).collect()
+    }
     assert(n.length == 3 && n.forall(!_.isNullAt(2)))
   }
 
@@ -387,7 +389,6 @@ class OperatorsSpec extends AnyFunSuite {
     val cell = rows.head.getAs[Int]("cell_id")
     val postings = spark.read.parquet(s"$idxDir/postings")
       .filter(col("cell_id") === cell && col("vec_id") =!= 3)
-    graft.functions.GraftFunctions.register(spark)
     val exact = postings.crossJoin(broadcast(q1))
       .withColumn("sim", graft.functions.GraftFunctions
         .cosineSim(col("qe"), col("embedding")))
@@ -597,7 +598,6 @@ class OperatorsSpec extends AnyFunSuite {
     }
     // SQ8 at 64 dims reconstructs tightly: recall@5 vs exact brute
     // force should be near-perfect; 0.8 mean is a safe floor
-    GraftFunctions.register(spark)
     val e = Tables(spark, sf, "embeddings")
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
@@ -632,10 +632,8 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("a10 stored-sketch rollup == direct region sketch (KMV mergeability), envelope holds") {
-    import graft.functions.GraftFunctions
     import graft.functions.GraftFunctions.kMinValues
     import org.apache.spark.sql.functions._
-    GraftFunctions.register(spark)
     val served = graft.operators.Approx.a10SketchRollup(spark, sf).collect()
     assert(served.length == 5)
     assert(served.forall(_.getBoolean(3)), "an estimate left the 3/sqrt(K) envelope")

@@ -156,7 +156,6 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions
     import spark.implicits._
-    GraftFunctions.register(spark)
     // random key→values with group sizes straddling the cap
     val rows = List.fill(2000)((rng.nextInt(40), rng.nextLong().abs))
     val cap = 51
@@ -179,7 +178,6 @@ class PropertySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import graft.functions.GraftFunctions
     import spark.implicits._
-    GraftFunctions.register(spark)
     val k = 5
     // collisions on the sort key exercise the payload tiebreak
     val rows = List.tabulate(3000)(i =>

@@ -19,6 +19,29 @@ object TestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `f` on a fresh session built with [[GraftExtensions]] (sharing
+    * the test SparkContext), then restore the default/active sessions.
+    * SQL text that names a graft function needs such a session.
+    */
+  def withExtendedSession[T](f: SparkSession => T): T = {
+    val base = spark // ensure the shared context exists first
+    val prevDefault = SparkSession.getDefaultSession
+    val prevActive = SparkSession.getActiveSession
+    val out = try {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      f(SparkSession.builder()
+        .master("local[4]")
+        .withExtensions(new GraftExtensions)
+        .getOrCreate())
+    } finally {
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+    assert(base.sql("SELECT 1").count() == 1)
+    out
+  }
 }
 
 /** Every registered query runs and returns sane results at sf0.001. */

@@ -172,7 +172,6 @@ class SnapshotsSpec extends AnyFunSuite {
 
   test("streaming sink maintenance: coalesced files + inline retention") {
     val dir = tmp() + "/maintained"
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val stream = spark.readStream
       .schema(graft.streaming.EventStream.rawEventsSchema(spark, sf))
       .option("pathGlobFilter", "events.parquet")

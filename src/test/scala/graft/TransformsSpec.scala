@@ -259,25 +259,27 @@ class TransformsSpec extends AnyFunSuite {
     assert(hashBytes(Array[Byte](0, 1, 2, 3)) == -188683207, "binary 00010203")
     // the codegen'd expression lands on the same numbers from SQL,
     // over every accepted input type
-    graft.functions.GraftFunctions.register(spark)
-    val r = spark.sql(
-      """SELECT iceberg_hash(CAST(34 AS BIGINT)) AS h_long,
-        |  iceberg_hash(CAST(34 AS INT)) AS h_int,
-        |  iceberg_hash('iceberg') AS h_str,
-        |  iceberg_hash(CAST('2017-11-16' AS DATE)) AS h_date,
-        |  iceberg_bucket(CAST(34 AS BIGINT), 16) AS b_long,
-        |  iceberg_bucket('iceberg', 16) AS b_str""".stripMargin).head()
+    val (r, both) = withExtendedSession { s =>
+      val r = s.sql(
+        """SELECT iceberg_hash(CAST(34 AS BIGINT)) AS h_long,
+          |  iceberg_hash(CAST(34 AS INT)) AS h_int,
+          |  iceberg_hash('iceberg') AS h_str,
+          |  iceberg_hash(CAST('2017-11-16' AS DATE)) AS h_date,
+          |  iceberg_bucket(CAST(34 AS BIGINT), 16) AS b_long,
+          |  iceberg_bucket('iceberg', 16) AS b_str""".stripMargin).head()
+      // spec rule: int and long values of the same number hash alike
+      // (a bucket spec survives an int->bigint type promotion)
+      val both = s.range(100).selectExpr(
+        "iceberg_bucket(CAST(id AS INT), 7) AS bi",
+        "iceberg_bucket(id, 7) AS bl")
+        .filter(col("bi") =!= col("bl")).count()
+      (r, both)
+    }
     assert(r.getInt(0) == 2017239379 && r.getInt(1) == 2017239379)
     assert(r.getInt(2) == 1210000089)
     assert(r.getInt(3) == -653330422)
     assert(r.getInt(4) == (2017239379 & Int.MaxValue) % 16)
     assert(r.getInt(5) == (1210000089 & Int.MaxValue) % 16)
-    // spec rule: int and long values of the same number hash alike
-    // (a bucket spec survives an int->bigint type promotion)
-    val both = spark.range(100).selectExpr(
-      "iceberg_bucket(CAST(id AS INT), 7) AS bi",
-      "iceberg_bucket(id, 7) AS bl")
-      .filter(col("bi") =!= col("bl")).count()
     assert(both == 0L)
   }
 
