@@ -36,6 +36,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.ConnectedComponentsStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
     ext.injectOptimizerRule(_ => graft.plans.MvRewriteRule)
   }

@@ -1,11 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftDatasetFactory, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.Tables
 import graft.functions.MinHashExpr.{HASH_A, HASH_B, HASH_P, K}
+import graft.plans.{ConnectedComponents, ConnectedComponentsStrategy, Registration}
 
 /** Deduplication operators over `documents`: exact (hash groupBy),
   * n-gram Jaccard (df-pruned inverted index), MinHash+LSH (banding),
@@ -15,7 +18,7 @@ import graft.functions.MinHashExpr.{HASH_A, HASH_B, HASH_P, K}
   *
   * MinHash and SimHash both derive their hashes from md5 (identical
   * hex output in Spark and DuckDB), which makes every pipeline here —
-  * including the iterative connected-components clustering — exactly
+  * including the connected-components clustering — exactly
   * oracle-checkable.
   */
 object Dedup {
@@ -383,22 +386,30 @@ object Dedup {
   /** `(doc_id, band_idx, band_hash)` LSH band table from a signature
     * table — the shape a LANDED corpus band index stores.
     */
-  private def bandTable(sig: DataFrame): DataFrame = {
+  private def bandTable(sig: DataFrame, carry: Seq[String] = Nil): DataFrame = {
     val withBands = (0 until BANDS).foldLeft(sig) { (df, b) =>
       df.withColumn(s"band$b", bandHash(b))
     }
-    withBands.selectExpr("doc_id",
-      s"stack($BANDS, ${(0 until BANDS).map(b => s"$b, band$b").mkString(", ")}) as (band_idx, band_hash)")
+    withBands.selectExpr(("doc_id" +: carry) :+
+      s"stack($BANDS, ${(0 until BANDS).map(b => s"$b, band$b").mkString(", ")}) as (band_idx, band_hash)": _*)
   }
 
-  /** Candidate-duplicate edges from MinHash-LSH band collisions. */
-  private def lshPairs(sig: DataFrame): DataFrame = {
-    val banded = bandTable(sig)
-    banded.as("a")
-      .join(banded.as("b"),
+  /** Candidate-duplicate edges `(da < db)` from MinHash-LSH band
+    * collisions. With `verified`, each band row carries its doc's
+    * signature and only pairs passing d06's 14/16 agreement gate are
+    * kept: the gate runs on the band-join output. The self-join is a
+    * hinted sort-merge join, so both sides read one reused exchange
+    * and the signatures are computed once (a broadcast build side
+    * would compute them a second time).
+    */
+  private def lshPairs(sig: DataFrame, verified: Boolean = false): DataFrame = {
+    val banded = bandTable(sig, if (verified) (0 until K).map(i => s"h$i") else Nil)
+    val pairs = banded.as("a")
+      .join(banded.as("b").hint("merge"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
           col("a.doc_id") < col("b.doc_id"))
+    (if (verified) pairs.filter(sigAgreeCol("a", "b") >= (K * 7) / 8) else pairs)
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
       .distinct()
   }
@@ -485,11 +496,11 @@ object Dedup {
       .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b"))
   }
 
-  /** The 14-of-16 signature-agreement verify gate between aliased
-    * signature tables `sa`/`sb` (d06's near-dup bar).
+  /** How many of the K signature values agree between aliased
+    * signature tables `l`/`r`; d06's near-dup bar is 14 of 16.
     */
-  private def sigAgreeCol: Column = (0 until K)
-    .map(i => when(col(s"sa.h$i") === col(s"sb.h$i"), 1).otherwise(0))
+  private def sigAgreeCol(l: String, r: String): Column = (0 until K)
+    .map(i => when(col(s"$l.h$i") === col(s"$r.h$i"), 1).otherwise(0))
     .reduce(_ + _)
 
   /** d13: INCREMENTAL fuzzy dedup — d08's daily-ingest shape for NEAR
@@ -520,7 +531,7 @@ object Dedup {
       .distinct()
       .join(batchSig.as("sa"), col("bid") === col("sa.doc_id"))
       .join(corpusSig.as("sb"), col("cid") === col("sb.doc_id"))
-      .filter(sigAgreeCol >= (K * 7) / 8)
+      .filter(sigAgreeCol("sa", "sb") >= (K * 7) / 8)
       .select(col("bid"), col("cid"))
     val batchVerified = batchB.as("a")
       .join(batchB.as("b"),
@@ -531,7 +542,7 @@ object Dedup {
       .distinct()
       .join(batchSig.as("sa"), col("da") === col("sa.doc_id"))
       .join(batchSig.as("sb"), col("db") === col("sb.doc_id"))
-      .filter(sigAgreeCol >= (K * 7) / 8)
+      .filter(sigAgreeCol("sa", "sb") >= (K * 7) / 8)
       .select(col("da"), col("db"))
     val nCorp = corpVerified.groupBy(col("bid").as("doc_id"))
       .agg(countDistinct(col("cid")).as("n_corpus_dups"),
@@ -556,187 +567,46 @@ object Dedup {
     * ≥ 14/16 ≈ estimated Jaccard 0.875; char-3-gram similarity between
     * unrelated same-language docs already averages ~0.6, so a loose
     * gate chains everything into one giant component transitively) →
-    * connected components via iterative min-label propagation (the
-    * distributed union-find: each round every doc adopts the smallest
-    * label among itself and its neighbours). Duplicate graphs are
-    * shallow stars/cliques, so a fixed small round count converges;
-    * the spec asserts a fixpoint. Each round is one shuffle join —
-    * the standard large-graph CC pattern at 100 TB. Oracle: DuckDB
-    * recursive CTE reaching the same component-min fixpoint.
+    * connected components ([[dupLabels]]). One row per cluster: its
+    * label (the least member id), size and min/max member. Oracle:
+    * DuckDB recursive CTE reaching the same component-min labels.
     */
-  /** Per-round lineage cut for the CC fixpoint. localCheckpoint by
-    * default; `-Dgraft.cc.reliableCheckpoint=true` switches to
-    * reliable `checkpoint()` into `-Dgraft.cc.checkpointDir` (or a
-    * temp dir when unset — point it at HDFS/object storage on a real
-    * cluster) so the iteration survives executor loss.
-    */
-  private def ccCheckpoint(df: DataFrame): DataFrame =
-    if (java.lang.Boolean.getBoolean("graft.cc.reliableCheckpoint")) {
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty) {
-        sc.setCheckpointDir(sys.props.getOrElse("graft.cc.checkpointDir",
-          graft.TempDirs.scratch("graft-cc")))
-      }
-      df.checkpoint(eager = true)
-    } else df.localCheckpoint(eager = true)
-
   def d06DupClusters(spark: SparkSession, dir: String): DataFrame =
-    d06DupClusters(spark, dir, maxRounds = 20)
-
-  def d06DupClusters(spark: SparkSession, dir: String, maxRounds: Int): DataFrame =
-    dupLabels(spark, dir, maxRounds)
+    dupLabels(spark, dir)
       .groupBy(col("label").as("cluster_id"))
       .agg(count(lit(1)).as("cluster_size"),
         min(col("doc_id")).as("keep_doc_id"),
         max(col("doc_id")).as("max_doc_id"))
       .orderBy(col("cluster_size").desc, col("cluster_id"))
 
-  /** The full per-doc dup-cluster labeling behind d06/d12: LSH
-    * candidates → signature-verified edges → subgraph-only CC
-    * fixpoint, singletons labeled by their own id. Returns
-    * `(doc_id, label)` covering the whole corpus.
+  /** The per-doc dup-cluster labeling behind d06/d12/p15: LSH
+    * candidates → signature-verified pairs → one
+    * [[graft.plans.ConnectedComponents]] node over those pairs, then
+    * every document LEFT JOIN its component label; a doc with no
+    * verified pair is its own cluster. Returns `(doc_id, label)`
+    * covering the whole corpus, label = the least doc id of the
+    * cluster. A lazy plan: building it runs nothing.
     */
-  def dupLabels(spark: SparkSession, dir: String, maxRounds: Int): DataFrame = {
+  def dupLabels(spark: SparkSession, dir: String): DataFrame = {
     val d = docs(spark, dir)
-    val sig = minhashSigs(d).persist()
-    val pairs = lshPairs(sig).as("p")
-      .join(sig.as("sa"), col("p.da") === col("sa.doc_id"))
-      .join(sig.as("sb"), col("p.db") === col("sb.doc_id"))
-      .filter(sigAgreeCol >= (K * 7) / 8)
-      .select(col("p.da").as("da"), col("p.db").as("db"))
-      .persist()
-    val edges = pairs.select(col("da").as("doc_id"), col("db").as("nbr"))
-      .unionAll(pairs.select(col("db").as("doc_id"), col("da").as("nbr")))
-      .persist()
-    // Propagate only over the candidate SUBGRAPH (nodes with ≥1 edge)
-    // — a tiny fraction of the corpus at any scale. Docs outside it are
-    // singletons by construction and skip the iteration entirely.
-    // Checkpointing truncates the lineage each round: persist alone
-    // is NOT enough (unpersisting a parent cascades and invalidates
-    // the child's cache → exponential recomputation), and an uncut
-    // lineage grows one join deeper per round. Default is
-    // localCheckpoint (block-manager, fastest); set
-    // -Dgraft.cc.reliableCheckpoint=true (optionally with
-    // -Dgraft.cc.checkpointDir=hdfs://…) to write each round to
-    // reliable storage instead, so losing an executor mid-fixpoint
-    // costs one round's recompute, not the whole iteration — the
-    // setting a 1000-executor run should use.
-    // Iterate to FIXPOINT (no label changed), capped: plain
-    // propagation needs O(component diameter) rounds and real chains
-    // exceed any fixed guess, so each round ALSO pointer-jumps
-    // (label ← label's label — valid because every label is itself a
-    // subgraph node id carrying a ≤ label): distance-to-min doubles
-    // per round → O(log diameter) rounds on chain-shaped components.
-    // The fixpoint operates on the candidate SUBGRAPH — orders of
-    // magnitude smaller than the corpus — so its per-round shuffles
-    // should be sized to the EDGE count, not the session width that is
-    // sized for corpus-wide scans: at 32 session partitions each round
-    // pays 2 shuffles × 32 state-less tasklets over a few thousand
-    // rows (measured ~1.2 s/round at sf0.1 → ~0.3 s at width 4). The
-    // same count also forces the persisted edge table once, so
-    // sig/pairs can be released early. Width grows back toward the
-    // session value at one partition per 50k edges — a billion-edge
-    // subgraph on a real cluster keeps full parallelism.
-    //
-    // The narrow width is scoped to a CLONED session (shared context +
-    // cache, isolated conf) rather than set/restored on the shared
-    // session conf: a query planned concurrently on the same
-    // SparkSession must never be silently planned at the loop's width.
-    // The final labels are re-rooted onto the caller's session below,
-    // so the corpus-wide final rollup keeps the session width.
-    val nEdges = edges.count()
-    // STATS-GATED SOLVE, same pattern as the as-of join's build cap:
-    // the verified subgraph is usually a vanishing fraction of the
-    // corpus (near-dup pairs, not docs), so below the cap — ≤ 16 MB
-    // of (long, long) rows — the exact answer is one driver-side
-    // union-find over the collected pair list: no iteration, no
-    // per-round shuffles, bit-identical labels (min-root union makes
-    // every root the component min, which is what the fixpoint
-    // converges to). Above the cap — a corpus whose DUPLICATE GRAPH
-    // alone exceeds driver memory — the distributed fixpoint below is
-    // the unchanged 100 TB path. Tune/force with
-    // -Dgraft.cc.localEdgeCap (0 forces the distributed path; the
-    // spec pins local == distributed).
-    val localCap = sys.props.get("graft.cc.localEdgeCap")
-      .map(_.toLong).getOrElse(1000000L)
-    val finalLabels: DataFrame = if (nEdges / 2 <= localCap) {
-      import spark.implicits._
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(a: Long): Long = {
-        var r = a
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = a
-        while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      // one direction of each edge suffices for union-find
-      pairs.collect().foreach { row =>
-        val a = row.getLong(0); val b = row.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      val labelRows = scala.jdk.CollectionConverters
-        .SetHasAsScala(parent.keySet()).asScala.toSeq
-        .map(id => (id, find(id)))
-      labelRows.toDF("doc_id", "label")
-    } else {
-      val sessParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val loopParts = math.max(4L, math.min(sessParts.toLong, nEdges / 50000L))
-      val loopSpark = org.apache.spark.sql.GraftShims.cloneWithConf(spark,
-        "spark.sql.shuffle.partitions" -> loopParts.toString)
-      // same persisted edge table, planned under the loop session (the
-      // CacheManager lives in SharedState, so the cache hit carries over)
-      val edgesL = org.apache.spark.sql.GraftDatasetFactory.ofRows(loopSpark,
-        edges.queryExecution.analyzed)
-      var labels = ccCheckpoint(edgesL.select(col("doc_id")).distinct()
-        .withColumn("label", col("doc_id")))
-      def step(ls: DataFrame): DataFrame = {
-        val nbrMin = edgesL
-          .join(ls.select(col("doc_id").as("nbr"), col("label").as("nbr_label")), Seq("nbr"))
-          .groupBy(col("doc_id")).agg(min(col("nbr_label")).as("min_nbr_label"))
-        ls.join(nbrMin, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("label"), coalesce(col("min_nbr_label"), col("label"))).as("label"))
-      }
-      def jump(ls: DataFrame): DataFrame =
-        ls.join(ls.select(col("doc_id").as("label"), col("label").as("jlabel")),
-            Seq("label"))
-          .select(col("doc_id"), col("jlabel").as("label"))
-      var converged = false
-      var round = 0
-      while (!converged && round < maxRounds) {
-        // one neighbor hop + one pointer jump per materialization
-        // (measured at sf0.1: a double-hop variant is SLOWER — the
-        // extra edges-join per checkpoint costs more than the rounds it
-        // saves — and a double-jump variant saves no rounds at all on
-        // these shallow components while paying a deeper lineage; a
-        // step-folded init likewise measured net-negative)
-        val next = ccCheckpoint(jump(step(labels.select(col("doc_id"), col("label"))))
-          .withColumnRenamed("label", "new_label")
-          .join(labels.select(col("doc_id"), col("label").as("old_label")), Seq("doc_id"))
-          .select(col("doc_id"), col("old_label"), col("new_label").as("label")))
-        converged = next.filter(col("label") =!= col("old_label")).isEmpty
-        labels = next.select(col("doc_id"), col("label"))
-        round += 1
-      }
-      // back onto the caller's session: the final corpus-wide rollup
-      // plans at the session width, not the loop width
-      org.apache.spark.sql.GraftDatasetFactory.ofRows(spark, labels.queryExecution.analyzed)
-    }
-    // cache hygiene: sig and pairs were consumed when edges was
-    // forced (and the local path's collect); free them now — edges
-    // still feeds the singleton anti-join below, so its release is
-    // deferred until the caller's terminal action completes (Caches)
-    sig.unpersist(blocking = false)
-    pairs.unpersist(blocking = false)
-    graft.Caches.deferRelease(edges)
-    val singletons = d.select(col("doc_id"))
-      .join(edges.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("label"))
-    // keep singletons too: the result is the full dedup manifest
-    finalLabels.unionAll(singletons)
+    val cc = components(lshPairs(minhashSigs(d), verified = true), col("da"), col("db"))
+    d.select(col("doc_id"))
+      .join(cc.select(col("node").as("doc_id"), col("label").as("cc_label")), Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("cc_label"), col("doc_id")).as("label"))
+  }
+
+  /** `(node, label)` connected components of the undirected edges
+    * `(src, dst)`, as one [[graft.plans.ConnectedComponents]] node.
+    */
+  def components(edges: DataFrame, src: Column, dst: Column): DataFrame = {
+    val spark = edges.sparkSession
+    Registration.ensure(spark, Seq(ConnectedComponentsStrategy))
+    GraftDatasetFactory.ofRows(spark, ConnectedComponents(
+      GraftDatasetFactory.expression(src.cast("long")),
+      GraftDatasetFactory.expression(dst.cast("long")),
+      AttributeReference("node", LongType, nullable = false)(),
+      AttributeReference("label", LongType, nullable = false)(),
+      edges.queryExecution.analyzed))
   }
 
   /** d12: cluster APPLY — the corpus-cleansing product d06's manifest
@@ -751,7 +621,7 @@ object Dedup {
     * + drop accounting.
     */
   def d12ClusterApply(spark: SparkSession, dir: String): DataFrame = {
-    val labels = dupLabels(spark, dir, maxRounds = 20)
+    val labels = dupLabels(spark, dir)
     val quality = docs(spark, dir)
       .select(col("doc_id"), length(col("text")).cast("long").as("q"))
     val ranked = labels.join(quality, Seq("doc_id"))
@@ -1396,9 +1266,9 @@ object Dedup {
          |FROM sigs s LEFT JOIN partners p ON s.doc_id = p.doc_id
          |ORDER BY s.doc_id""".stripMargin,
     // Full LSH ladder + connected components: DuckDB reproduces the
-    // iterative min-label propagation with a recursive CTE (labels
-    // reach every node in their component; MIN per node = component
-    // min — the same fixpoint d06's distributed loop converges to).
+    // connected components with a recursive CTE (labels reach every
+    // node in their component; MIN per node = component min — the
+    // label d06's union-find gives).
     "d06_dup_clusters" ->
       s"""WITH RECURSIVE raw AS (
          |  SELECT doc_id,

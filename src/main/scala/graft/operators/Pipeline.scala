@@ -81,14 +81,15 @@ object Pipeline {
     * (the model has effectively seen the answer), and keying the
     * split on doc_id makes that a coin flip per pair. Keying it on
     * the doc's DUP-CLUSTER label ([[Dedup.dupLabels]] — d06's
-    * verified-LSH fixpoint) pins every cluster wholly to one side BY
-    * CONSTRUCTION. The gate carries both schemes' straddle counts
-    * over multi-doc clusters: `by_id` > 0 (the leakage p02-style
-    * splitting really causes on this corpus) and `by_cluster` = 0,
-    * exactly oracled through the same recursive-CC labels.
+    * connected components over verified LSH pairs, one plan node)
+    * pins every cluster wholly to one side BY CONSTRUCTION. The gate
+    * carries both schemes' straddle counts over multi-doc clusters:
+    * `by_id` > 0 (the leakage p02-style splitting really causes on
+    * this corpus) and `by_cluster` = 0, exactly oracled through the
+    * same recursive-CC labels.
     */
   def p15LeakproofSplit(spark: SparkSession, dir: String): DataFrame = {
-    val labels = graft.Caches.scoped(Dedup.dupLabels(spark, dir, maxRounds = 20))
+    val labels = Dedup.dupLabels(spark, dir)
     def splitOf(h: Column): Column =
       when(h < "cd", "train").when(h < "e6", "val").otherwise("test")
     val a = labels
@@ -96,25 +97,33 @@ object Pipeline {
         substring(md5(concat(lit("split:"), col("doc_id").cast("string"))), 1, 2)))
       .withColumn("split_by_cluster", splitOf(
         substring(md5(concat(lit("split:"), col("label").cast("string"))), 1, 2)))
-    // ONE per-cluster aggregation feeds everything: the per-split
-    // rollup (split_by_cluster is constant within a label, so max()
-    // recovers it) AND both straddle counters — no second or third
-    // pass over the label manifest
-    val per = graft.Caches.scoped(a.groupBy(col("label"))
+    // ONE per-cluster aggregation (split_by_cluster is constant within
+    // a label, so max() recovers it), read once: one global aggregate
+    // yields both straddle counters and each split's rollup. A second
+    // reader would plan its own, differently pruned copy of the labels
+    // and run the connected components twice unless AQE reused an
+    // exchange between the copies
+    val per = a.groupBy(col("label"))
       .agg(count(lit(1)).as("sz"),
         countDistinct(col("split_by_id")).as("ns_id"),
         countDistinct(col("split_by_cluster")).as("ns_cl"),
-        max(col("split_by_cluster")).as("split")))
-    val straddles = per.agg(
-      sum(when(col("sz") > 1 && col("ns_id") > 1, 1L).otherwise(0L))
-        .as("n_straddling_by_id"),
-      sum(when(col("sz") > 1 && col("ns_cl") > 1, 1L).otherwise(0L))
-        .as("n_straddling_by_cluster"))
-    per.groupBy(col("split"))
-      .agg(
-        sum(col("sz")).as("n_docs"),
-        count(lit(1)).as("n_clusters"))
-      .crossJoin(broadcast(straddles))
+        max(col("split_by_cluster")).as("split"))
+    val bySplit = Seq("train", "val", "test").map { s =>
+      val in = col("split") === s
+      struct(lit(s).as("split"), sum(when(in, col("sz"))).as("n_docs"),
+        count(when(in, 1)).as("n_clusters"))
+    }
+    per.agg(array(bySplit: _*).as("splits"),
+        sum(when(col("sz") > 1 && col("ns_id") > 1, 1L).otherwise(0L))
+          .as("n_straddling_by_id"),
+        sum(when(col("sz") > 1 && col("ns_cl") > 1, 1L).otherwise(0L))
+          .as("n_straddling_by_cluster"))
+      .select(explode(col("splits")).as("s"),
+        col("n_straddling_by_id"), col("n_straddling_by_cluster"))
+      .filter(col("s.n_clusters") > 0)
+      .select(col("s.split").as("split"), col("s.n_docs").as("n_docs"),
+        col("s.n_clusters").as("n_clusters"),
+        col("n_straddling_by_id"), col("n_straddling_by_cluster"))
       .orderBy(col("split"))
   }
 

@@ -146,26 +146,6 @@ class DedupSpec extends AnyFunSuite {
     assert(rows.forall(r => r.getAs[Long]("vec_a") < r.getAs[Long]("vec_b")))
   }
 
-  test("d06 fixpoint runs under reliable checkpointing with identical clusters") {
-    def key(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
-      rows.map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
-    // cap 0 forces the DISTRIBUTED fixpoint (the default stats gate
-    // would solve this small subgraph driver-side, where
-    // checkpointing never engages)
-    System.setProperty("graft.cc.localEdgeCap", "0")
-    try {
-      val default = key(Dedup.d06DupClusters(spark, sf).collect())
-      System.setProperty("graft.cc.reliableCheckpoint", "true")
-      try {
-        val reliable = key(Dedup.d06DupClusters(spark, sf).collect())
-        assert(reliable == default,
-          "reliable-checkpoint run diverged from the localCheckpoint run")
-        assert(spark.sparkContext.getCheckpointDir.nonEmpty,
-          "reliable run must have installed a checkpoint dir")
-      } finally System.clearProperty("graft.cc.reliableCheckpoint")
-    } finally System.clearProperty("graft.cc.localEdgeCap")
-  }
-
   test("d13 incremental probe: accounting sound, flagged docs share a d06 cluster with the corpus") {
     val rows = Dedup.d13IncrementalLsh(spark, sf).collect()
     val batchN = Tables(spark, sf, "documents")
@@ -182,7 +162,7 @@ class DedupSpec extends AnyFunSuite {
     // a verified batch→corpus pair is an edge of d06's full graph, so
     // every corpus-flagged batch doc must share its dup-cluster label
     // with at least one corpus doc
-    val labels = Dedup.dupLabels(spark, sf, 20).collect()
+    val labels = Dedup.dupLabels(spark, sf).collect()
       .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("label"))
     val labelOf = labels.toMap
     val corpusLabels = labels.collect { case (d, l) if d % 5 != 0 => l }.toSet
@@ -193,6 +173,42 @@ class DedupSpec extends AnyFunSuite {
       assert(corpusLabels.contains(labelOf(id)),
         s"batch doc $id flagged against the corpus but its cluster has no corpus member")
     }
+  }
+
+  test("connected components node matches a naive union-find over 4 partitions") {
+    import spark.implicits._
+    // reference: union-find with arbitrary roots, label = component min
+    def naive(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(a: Long): Long = { val p = parent.getOrElseUpdate(a, a); if (p == a) a else find(p) }
+      edges.foreach { case (a, b) => parent(find(a)) = find(b) }
+      parent.keys.toSeq.groupBy(find).values.flatMap(ms => ms.map(_ -> ms.min)).toMap
+    }
+    def run(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+      val df = spark.sparkContext.parallelize(edges, 4).toDF("src", "dst")
+      assert(df.rdd.getNumPartitions == 4)
+      val rows = Dedup.components(df, col("src"), col("dst")).collect()
+      val labels = rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(labels.size == rows.length, "a node got more than one row")
+      labels
+    }
+    // a chain over scrambled ids; slice k of 4 holds links k, k+4, …,
+    // so no partition sees two adjacent links
+    def link(i: Long) = 1000 + (i * 7) % 23
+    val chain = (0L until 20L).sortBy(_ % 4).map(i => (link(i), link(i + 1)))
+    val star = (101L to 110L).map(l => if (l % 2 == 0) (100L, l) else (l, 100L))
+    def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (b, a)
+    val bridged = clique(200L to 204L) ++ clique(300L to 304L) :+ (304L, 202L)
+    val dupsAndReversed = Seq((401L, 400L), (400L, 401L), (401L, 400L), (402L, 401L), (401L, 402L))
+    val selfLoops = Seq((500L, 500L), (401L, 401L))
+    val cases = Seq("chain" -> chain, "star" -> star, "bridged cliques" -> bridged,
+      "duplicate and reversed" -> dupsAndReversed, "self-loops" -> selfLoops,
+      "all together" -> (chain ++ star ++ bridged ++ dupsAndReversed ++ selfLoops))
+    cases.foreach { case (name, edges) =>
+      assert(run(edges) == naive(edges), s"$name: labels differ from the naive union-find")
+    }
+    assert(naive(chain).values.toSet == Set(1000L) && naive(bridged).values.toSet == Set(200L))
+    assert(run(Seq.empty).isEmpty, "empty input must yield no labels")
   }
 
   test("d14 prefix join equals the brute-force exact Jaccard join (no false negatives)") {
@@ -212,18 +228,6 @@ class DedupSpec extends AnyFunSuite {
     assert(got == naive,
       s"prefix join missed ${(naive -- got).size} pairs / invented ${(got -- naive).size}")
     assert(naive.nonEmpty, "expected >= tau pairs in testdata")
-  }
-
-  test("d06 driver union-find (stats gate) matches the distributed fixpoint") {
-    def key(rows: Array[org.apache.spark.sql.Row]): Seq[String] =
-      rows.map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
-    val local = key(Dedup.d06DupClusters(spark, sf).collect()) // default cap → local path
-    System.setProperty("graft.cc.localEdgeCap", "0")
-    try {
-      val distributed = key(Dedup.d06DupClusters(spark, sf).collect())
-      assert(local == distributed,
-        "driver-side union-find labels diverged from the distributed fixpoint")
-    } finally System.clearProperty("graft.cc.localEdgeCap")
   }
 
   test("d10 semantic dedup: accounting consistent, pair join never a cartesian") {
@@ -338,7 +342,7 @@ class DedupSpec extends AnyFunSuite {
     // multi-doc clusters must exist and keep their longest member
     val multi = rows.filter(_.getAs[Long]("cluster_size") > 1)
     assert(multi.nonEmpty, "expected near-dup clusters in testdata")
-    val labels = graft.operators.Dedup.dupLabels(spark, sf, 20)
+    val labels = graft.operators.Dedup.dupLabels(spark, sf)
       .collect().map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("label")).toMap
     multi.foreach { r =>
       val cid = r.getAs[Long]("cluster_id")

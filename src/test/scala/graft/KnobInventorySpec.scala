@@ -38,12 +38,7 @@ class KnobInventorySpec extends AnyFunSuite {
     // standard JVM properties (java.version, …) report the runtime;
     // they configure nothing
     val knobs = uses.flatMap(_._2).filterNot(_.startsWith("java.")).toSet
-    assert(knobs == Set(
-      "graft.now.millis",
-      "graft.cc.localEdgeCap",
-      "graft.cc.reliableCheckpoint",
-      "graft.cc.checkpointDir",
-      "SPARK_GRAFT_CPUS"))
+    assert(knobs == Set("graft.now.millis", "SPARK_GRAFT_CPUS"))
   }
 
   test("the library reads exactly the documented spark.graft.* session confs") {

@@ -4,18 +4,19 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{GraftShims, GraftTestShims}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Building a DataFrame only plans it: the ranking entries submit no
-  * Spark job, persist nothing and leave the session conf as it was
-  * until an action runs. No entry rewrites the caller's session: the
-  * function registry and the conf stay as they were, and the planner
-  * gains only graft's own strategies and rules.
+/** Building a DataFrame only plans it: the ranking and dup-cluster
+  * entries submit no Spark job, persist nothing and leave the session
+  * conf as it was until an action runs. No entry rewrites the caller's
+  * session: the function registry and the conf stay as they were, and
+  * the planner gains only graft's own strategies and rules.
   */
 class LazyBuildSpec extends AnyFunSuite {
   import TestSession._
 
   test("building the ranking entries submits no job, caches nothing and keeps the conf") {
     val names = Seq("q04_user_order_summary", "q15_cte_pipeline", "q17_window_suite",
-      "q43_scalable_rank", "p11_global_shuffle", "p21_curriculum", "m05_shard_manifest")
+      "q43_scalable_rank", "p11_global_shuffle", "p21_curriculum", "m05_shard_manifest",
+      "d06_dup_clusters", "d12_cluster_apply", "p15_leakproof_split")
     // count only jobs submitted from this thread while the tag is set
     val tag = "graft.test.lazyBuild"
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]

@@ -124,7 +124,23 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("p15 cluster-keyed split leaks zero near-dup clusters; id-keyed split leaks") {
-    val rows = graft.operators.Pipeline.p15LeakproofSplit(spark, sf).collect()
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val df = graft.operators.Pipeline.p15LeakproofSplit(spark, sf)
+    val rows = df.collect()
+    // the connected components node runs once in the final adaptive
+    // plan (a reused exchange does not run its subtree), also when an
+    // earlier suite left cache entries that AQE plans around
+    def executed(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => executed(a.executedPlan)
+      case q: QueryStageExec => executed(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case other => other.children.flatMap(executed)
+    })
+    assert(executed(df.queryExecution.executedPlan)
+      .count(_.isInstanceOf[graft.plans.ConnectedComponentsExec]) == 1,
+      "the connected components node does not run exactly once")
     assert(rows.map(_.getAs[String]("split")).toSet == Set("train", "val", "test"))
     assert(rows.map(_.getAs[Long]("n_docs")).sum ==
       Tables(spark, sf, "documents").count())

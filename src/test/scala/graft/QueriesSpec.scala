@@ -145,13 +145,13 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("declarative queries keep UDF-free, codegen-friendly plans") {
-    // typed/iterative/streaming ops legitimately leave pure-SQL land:
+    // typed/streaming ops legitimately leave pure-SQL land:
     // m03 (typed mapPartitions), st02 (flatMapGroupsWithState),
-    // st01/03/04 (streaming machinery), d06 (iterative driver loop),
-    // a02 (builds its bloom eagerly at construction)
+    // st01/03/04 (streaming machinery), a02 (builds its bloom eagerly
+    // at construction)
     val exempt = Set("m03_resize_features", "st01_stream_window",
       "st02_stateful_counts", "st03_stream_static_join",
-      "st04_stream_dedup", "d06_dup_clusters", "a02_bloom_filtered_join")
+      "st04_stream_dedup", "a02_bloom_filtered_join")
     SparkEntry.queries.filterNot(q => exempt(q._1)).foreach { case (name, fn) =>
       val plan = fn(spark, sf).queryExecution.executedPlan.toString
       assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"),
