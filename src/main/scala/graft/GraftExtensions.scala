@@ -37,6 +37,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.GlobalRankStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.ConnectedComponentsStrategy)
+    ext.injectPlannerStrategy(_ => graft.plans.SharedFrameStrategy)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughAsofJoin)
     ext.injectOptimizerRule(_ => graft.plans.MvRewriteRule)
   }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftDatasetFactory, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.plans.{Registration, SharedFrame, SharedFrameStrategy}
 
 /** Parquet table loader for the driver-generated testdata layout
   * (`<dir>/<name>.parquet`). One function so every operator reads
@@ -34,9 +36,26 @@ object Tables {
     * project): the width probe plans the frame's RDD, and under AQE
     * a frame containing a shuffle would materialize its upstream
     * stages eagerly — once for the probe and again for the action.
+    * It widens one reader's scan; [[shared]] is the exchange for a
+    * frame that several readers of one query share.
     */
   def spread(df: DataFrame): DataFrame = {
     val width = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     if (df.rdd.getNumPartitions < width) df.repartition(width) else df
+  }
+
+  /** `df` as one exchange that every branch of a query reading it
+    * shares ([[graft.plans.SharedFrame]]). AQE reuses an exchange, not
+    * the operator above it, so without this each branch re-runs the
+    * frame's root (a final aggregate, a projection fold). Use it where
+    * a frame has two or more readers in one query; each reader gets the
+    * frame's columns and rows as they are, and filters above the
+    * exchange. Planning only: runs no job and persists nothing.
+    */
+  def shared(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    Registration.ensure(spark, Seq(SharedFrameStrategy))
+    val plan = df.queryExecution.analyzed
+    GraftDatasetFactory.ofRows(spark, SharedFrame(plan.output, plan))
   }
 }

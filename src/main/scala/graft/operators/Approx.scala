@@ -129,9 +129,9 @@ object Approx {
   def a04CmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.util.sketch.CountMinSketch
     // persist: the tokenized scan feeds BOTH the sketch aggregate and
-    // the exact top-10 — both actions happen inside this function, so
-    // release is a plain try/finally (Caches' after-next-action
-    // release would fire on the FIRST of the two actions)
+    // the exact top-10 — two actions inside this function, so an
+    // in-plan shared exchange cannot serve them; a plain try/finally
+    // releases the cache before the function returns
     val toks = Tables(spark, dir, "documents")
       .select(explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
       .persist()

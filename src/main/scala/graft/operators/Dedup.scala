@@ -56,10 +56,7 @@ object Dedup {
     d02From(shingles(docs(spark, dir)))
   }
 
-  /** d02's pipeline from an externally supplied shingle table — d09
-    * shares one persisted shingle pass between the truth and
-    * candidate sides.
-    */
+  /** d02's pipeline from a shingle table — d09's truth side. */
   private def d02From(sh: DataFrame): DataFrame = {
     val j = pairStats(sh)
       .withColumn("jaccard",
@@ -85,14 +82,17 @@ object Dedup {
     * (groups ≤ 50 are collected in full, order-independent) at half
     * the shingle explosions and one fewer shuffle. Pairs are then
     * generated MAP-SIDE from each ≤50-element list (fanout ≤
-    * 1225/gram) — no index self-join.
+    * 1225/gram) — no index self-join. The doc lists feed both the
+    * per-doc gram counts and the pair generation, so they are
+    * [[Tables.shared]]: the capped aggregate runs once.
     */
   private def pairStats(sh: DataFrame): DataFrame = {
-    val grouped = graft.Caches.scoped(
+    val grouped = Tables.shared(
       sh.groupBy(col("source"), col("g"))
         .agg(graft.functions.GraftFunctions
           .collectCapped(col("doc_id"), 51).as("docs"))
-        .filter(size(col("docs")) <= 50))
+        .filter(size(col("docs")) <= 50)
+        .select(col("docs")))
     val cnt = grouped.select(explode(col("docs")).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val pairArr = expr(
@@ -184,8 +184,7 @@ object Dedup {
     // the signature side runs the native minhash_sig kernel instead —
     // a second in-row gram pass costs less than a 16-min groupBy over
     // the exploded shingle table
-    val sh = graft.Caches.scoped(shingles(docs(spark, dir)))
-    val truth = d02From(sh)
+    val truth = d02From(shingles(docs(spark, dir)))
     val caught = lshPairs(minhashSigs(docs(spark, dir)))
       .select(col("da").as("doc_a"), col("db").as("doc_b"))
       .withColumn("caught", lit(true))
@@ -307,13 +306,12 @@ object Dedup {
       struct(lit(t).as("t"),
         graft.functions.Hyperplanes.bucketCol("embedding", t, EMB_PLANES).as("bucket"))
     }
-    // scoped persist: the bucket table (n·T rows, 3 narrow columns)
-    // feeds both sides of the self-join — without it the T·B
-    // projection folds run twice per vector (measured 2.4 s → 0.7 s at
-    // sf0.1); released after the query's terminal action
+    // shared: the bucket table (n·T rows, 3 narrow columns) feeds both
+    // sides of the self-join — without it the T·B projection folds run
+    // twice per vector (measured 2.4 s → 0.7 s at sf0.1)
     // spread first: the T·B sign-bit folds are the CPU of this query
     // and a local single-file scan would run them in one task
-    val buckets = graft.Caches.scoped(
+    val buckets = Tables.shared(
       Tables.spread(e.select(col("vec_id"), col("embedding")))
         .select(col("vec_id"), explode(array(tb: _*)).as("tb"))
         .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket")))
@@ -396,21 +394,28 @@ object Dedup {
 
   /** Candidate-duplicate edges `(da < db)` from MinHash-LSH band
     * collisions. With `verified`, each band row carries its doc's
-    * signature and only pairs passing d06's 14/16 agreement gate are
-    * kept: the gate runs on the band-join output. The self-join is a
-    * hinted sort-merge join, so both sides read one reused exchange
-    * and the signatures are computed once (a broadcast build side
-    * would compute them a second time).
+    * signature, only pairs passing d06's 14/16 agreement gate are
+    * kept, and each edge carries its agreement count `agree`: the gate
+    * runs on the band-join output. `keep(da, db)` restricts the pairs
+    * inside the join (d13's batch probe, p13's train × bench); it
+    * reads both ids, so no side is filtered on its own. The self-join
+    * is a hinted sort-merge join, so both sides read one reused
+    * exchange and the signatures are computed once (a broadcast build
+    * side or a one-sided filter would compute them a second time).
     */
-  private def lshPairs(sig: DataFrame, verified: Boolean = false): DataFrame = {
+  private def lshPairs(sig: DataFrame, verified: Boolean = false,
+      keep: (Column, Column) => Column = (_, _) => lit(true)): DataFrame = {
     val banded = bandTable(sig, if (verified) (0 until K).map(i => s"h$i") else Nil)
     val pairs = banded.as("a")
       .join(banded.as("b").hint("merge"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-    (if (verified) pairs.filter(sigAgreeCol("a", "b") >= (K * 7) / 8) else pairs)
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+          col("a.doc_id") < col("b.doc_id") && keep(col("a.doc_id"), col("b.doc_id")))
+    val ids = Seq(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
+    (if (verified)
+      pairs.select(ids :+ sigAgreeCol("a", "b").as("agree"): _*)
+        .filter(col("agree") >= (K * 7) / 8)
+    else pairs.select(ids: _*))
       .distinct()
   }
 
@@ -450,17 +455,13 @@ object Dedup {
     // guarantee exactly at the scale this operator exists for
     val dict = Rank.globalRowNumber(df, Seq(col("df"), col("tok")), "tid")
       .select(col("tok"), col("tid"))
-    val docIds = graft.Caches.scoped(
+    // shared: the prefix index and both verify sides read the
+    // encoded docs, so the dictionary-encode plan runs once
+    val docIds = Tables.shared(
       toks.join(dict, Seq("tok"))
         .groupBy(col("doc_id"))
         .agg(sort_array(collect_list(col("tid"))).as("ids"))
         .withColumn("cnt", size(col("ids")).cast("long")))
-    // populate the cache EAGERLY: the prefix self-join's two AQE query
-    // stages start concurrently — both would miss a cold cache and
-    // compute the full dictionary-encode plan twice (the d06 lesson:
-    // materialize before fan-out). One tiny count job, RDD-level so
-    // the Caches release listener is not consumed by it.
-    docIds.queryExecution.toRdd.count()
     // 2. prefix index = the first |d| − ⌈τ·|d|⌉ + 1 rarest ids
     val prefix = docIds.select(col("doc_id"), col("cnt"),
       explode(expr(
@@ -508,51 +509,34 @@ object Dedup {
     * corpus's LSH BAND INDEX plus its own batch-internal banding, both
     * verified at d06's 14/16 signature-agreement gate. At 100 TB the
     * corpus side is a LANDED `(band_idx, band_hash, doc_id)` index
-    * table ([[bandTable]]'s shape) maintained per ingest — the corpus
-    * text is never re-shingled and never re-paired against itself;
-    * per-ingest cost is the batch's own hashing plus one index-probe
-    * equi-join sized by band collisions. Split is modulo-deterministic
-    * (corpus = doc_id%5≠0, batch = %5==0, as d08) so the oracle
-    * reproduces it at any sf. Output per batch doc: corpus-dup count +
-    * best (min-id) corpus match, count of earlier in-batch dups, and
-    * the keep decision.
+    * table ([[bandTable]]'s shape) maintained per ingest, so the corpus
+    * text is never re-shingled. Here both sides come from one band
+    * self-join over the documents ([[lshPairs]], signatures carried on
+    * the band rows), restricted inside the join to pairs that touch the
+    * batch, so every signature is computed once. Split is
+    * modulo-deterministic (corpus = doc_id%5≠0, batch = %5==0, as d08)
+    * so the oracle reproduces it at any sf. Output per batch doc:
+    * corpus-dup count + best (min-id) corpus match, count of earlier
+    * in-batch dups, and the keep decision.
     */
   def d13IncrementalLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sig = graft.Caches.scoped(minhashSigs(docs(spark, dir)))
-    val corpusSig = sig.filter(col("doc_id") % 5 =!= 0)
-    val batchSig = sig.filter(col("doc_id") % 5 === 0)
-    val corpusIdx = bandTable(corpusSig) // the landed-index shape
-    val batchB = bandTable(batchSig)
-    val corpVerified = batchB.as("a")
-      .join(corpusIdx.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash"))
-      .select(col("a.doc_id").as("bid"), col("b.doc_id").as("cid"))
-      .distinct()
-      .join(batchSig.as("sa"), col("bid") === col("sa.doc_id"))
-      .join(corpusSig.as("sb"), col("cid") === col("sb.doc_id"))
-      .filter(sigAgreeCol("sa", "sb") >= (K * 7) / 8)
-      .select(col("bid"), col("cid"))
-    val batchVerified = batchB.as("a")
-      .join(batchB.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-      .join(batchSig.as("sa"), col("da") === col("sa.doc_id"))
-      .join(batchSig.as("sb"), col("db") === col("sb.doc_id"))
-      .filter(sigAgreeCol("sa", "sb") >= (K * 7) / 8)
-      .select(col("da"), col("db"))
-    val nCorp = corpVerified.groupBy(col("bid").as("doc_id"))
-      .agg(countDistinct(col("cid")).as("n_corpus_dups"),
-        min(col("cid")).as("best_corpus_match"))
-    val nEarlier = batchVerified
-      .groupBy(col("db").as("doc_id"))
-      .agg(countDistinct(col("da")).as("n_batch_dups_earlier"))
-    batchSig.select(col("doc_id"))
-      .join(nCorp, Seq("doc_id"), "left")
-      .join(nEarlier, Seq("doc_id"), "left")
+    val inBatch = (id: Column) => id % 5 === 0
+    val d = docs(spark, dir)
+    val pairs = lshPairs(minhashSigs(d), verified = true,
+      keep = (a, b) => inBatch(a) || inBatch(b))
+    // each pair names its batch doc (the later one when both are in the
+    // batch) and the other doc; the other is a corpus match or an
+    // earlier in-batch dup
+    val other = when(inBatch(col("db")), col("da")).otherwise(col("db"))
+    val hits = pairs
+      .select(when(inBatch(col("db")), col("db")).otherwise(col("da")).as("doc_id"),
+        when(!inBatch(other), other).as("cid"), when(inBatch(other), other).as("eid"))
+      .groupBy(col("doc_id"))
+      .agg(count(col("cid")).as("n_corpus_dups"), min(col("cid")).as("best_corpus_match"),
+        count(col("eid")).as("n_batch_dups_earlier"))
+    d.filter(length(col("text")) >= 3 && inBatch(col("doc_id")))
+      .select(col("doc_id"))
+      .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_corpus_dups"), lit(0L)).as("n_corpus_dups"),
         col("best_corpus_match"),
@@ -663,9 +647,9 @@ object Dedup {
     * exactly oracled, not rows-only.
     */
   def d10SemanticDedup(spark: SparkSession, dir: String): DataFrame = {
-    // scoped persist: the assignment table feeds both self-join sides
-    // and the per-cell rollup — one Lloyd pass, not three
-    val asn = graft.Caches.scoped(
+    // shared: the assignment table feeds both self-join sides and the
+    // per-cell rollup — one Lloyd pass, not three
+    val asn = Tables.shared(
       Similarity.kmeansAssignments(spark, dir)
         .select(col("vec_id"), col("embedding"), col("cell_id"),
           round(col("sim"), 6).as("simc")))
@@ -702,40 +686,24 @@ object Dedup {
     * exact 5-gram overlap misses near-verbatim contamination (light
     * edits, reflowed punctuation); the production screen is
     * signature-level: train corpus × eval slice through d03's
-    * md5-seeded MinHash machinery. Candidates come from an ASYMMETRIC
-    * train×bench band equi-join — O(n·bands) with the bench side
-    * small, never train×train — then each candidate pair is scored by
-    * signature agreement and kept at est Jaccard ≥ 14/16 (d06's
-    * verify bar; raw band collisions over-fire on char-3-grams).
-    * Output: every flagged train doc with its strong-hit count and
-    * best match.
+    * md5-seeded MinHash machinery. Candidates come from the band
+    * self-join of [[lshPairs]], restricted inside the join to pairs
+    * with exactly one bench doc (train × bench, never kept train ×
+    * train), with the signatures carried on the band rows so each is
+    * computed once; each candidate pair is scored by signature
+    * agreement and kept at est Jaccard ≥ 14/16 (d06's verify bar; raw
+    * band collisions over-fire on char-3-grams). Output: every flagged
+    * train doc with its strong-hit count and best match.
     * The eval slice is doc_id % 13 == 0, same as p06 — so the two
     * sweeps are directly comparable (exact-overlap vs fuzzy recall).
     */
   def p13FuzzyContamination(spark: SparkSession, dir: String): DataFrame = {
-    // scoped persist: the signature table feeds banding twice and the
-    // pair scoring twice — one gram pass, not four
-    val sig = graft.Caches.scoped(minhashSigs(docs(spark, dir)))
-    val trainB = bandTable(sig.filter(col("doc_id") % 13 =!= 0))
-    val benchB = bandTable(sig.filter(col("doc_id") % 13 === 0))
-    val cand = trainB.as("a").join(benchB.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash"))
-      .select(col("a.doc_id").as("t_id"), col("b.doc_id").as("b_id"))
-      .distinct()
-    val sa = sig.select(
-      col("doc_id").as("t_id") +: (0 until K).map(i => col(s"h$i").as(s"a_h$i")): _*)
-    val sb = sig.select(
-      col("doc_id").as("b_id") +: (0 until K).map(i => col(s"h$i").as(s"b_h$i")): _*)
-    val agree = (0 until K).map(i =>
-      when(col(s"a_h$i") === col(s"b_h$i"), 1).otherwise(0)).reduce(_ + _)
-    // verify gate: candidates are just band collisions (char-3-gram
-    // similarity between unrelated same-language docs is high, see
-    // d06) — only signature agreement ≥ 14/16 (est J ≥ 0.875, d06's
-    // verify bar) counts as contamination
-    val scored = cand.join(sa, "t_id").join(sb, "b_id")
-      .select(col("t_id"), col("b_id"), agree.as("agree"))
-      .filter(col("agree") >= 14)
+    val inBench = (id: Column) => id % 13 === 0
+    val scored = lshPairs(minhashSigs(docs(spark, dir)), verified = true,
+        keep = (a, b) => inBench(a) =!= inBench(b))
+      .select(when(inBench(col("da")), col("db")).otherwise(col("da")).as("t_id"),
+        when(inBench(col("da")), col("da")).otherwise(col("db")).as("b_id"),
+        col("agree"))
     val w = Window.partitionBy(col("t_id")).orderBy(col("agree").desc, col("b_id"))
     scored
       .withColumn("rn", row_number().over(w))
@@ -775,7 +743,7 @@ object Dedup {
         conv(substring(md5(col("span").cast("binary")), 1, 15), 16, 10)
           .cast("long").as("h"))
     // one window pass feeds both the cross-doc stats and the rollup
-    val winsP = graft.Caches.scoped(wins)
+    val winsP = Tables.shared(wins)
     val crossDoc = winsP.groupBy(col("h"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2)

@@ -260,9 +260,9 @@ object Multimodal {
       .map(j => when(expr(s"64 * element_at(px, ${j + 1}) > total"),
         lit(1L << j)).otherwise(lit(0L)))
       .reduce(_ + _)
-    // scoped persist: the O(64·w)-per-doc cell sums feed both sides
-    // of the banded self-join AND the final projection — compute once
-    val sigs = graft.Caches.scoped(pix.select(col("doc_id"), phash.as("phash")))
+    // shared: the O(64·w)-per-doc cell sums feed both sides of the
+    // banded self-join AND the final projection — compute once
+    val sigs = Tables.shared(pix.select(col("doc_id"), phash.as("phash")))
     val banded = sigs.select(col("doc_id"), col("phash"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band_idx"),

@@ -180,32 +180,33 @@ object Pipeline {
       .orderBy(col("lang"))
   }
 
+  /** Distinct word-5-grams per doc `(doc_id, g)` of docs with at least
+    * 5 tokens — p06's and p16's gram stream.
+    */
+  private def gram5s(spark: SparkSession, dir: String): DataFrame =
+    graft.Tables.spread(docs(spark, dir).select(col("doc_id"), col("text")))
+      .select(col("doc_id"), expr(graft.functions.TextGrams.tokensExpr("text")).as("ts"))
+      .filter(size(col("ts")) >= 5)
+      .select(col("doc_id"),
+        explode(array_distinct(expr(graft.functions.TextGrams.gramExpr("ts", 5)))).as("g"))
+
   /** p06: benchmark-contamination check — flag training docs sharing
     * any word-5-gram with the held-out benchmark set (here: the
     * doc_id % 13 slice as a stand-in eval set). The benchmark's
     * distinct grams are a small broadcast side; the corpus explodes
-    * its grams once and semi-aggregates matches per doc — the
-    * standard decontamination sweep before an LLM training run.
+    * its grams once and counts its grams and its matches per doc in one
+    * aggregate — the standard decontamination sweep before an LLM
+    * training run.
     */
   def p06ContaminationCheck(spark: SparkSession, dir: String): DataFrame = {
-    val gram5 = expr(graft.functions.TextGrams.gramExpr("ts", 5))
-    // scoped persist: the gram explosion feeds THREE consumers (bench
-    // distinct, per-doc totals, the semi join) — materialize the
-    // narrow (doc_id, gram) table once instead of re-running the
-    // tokenize+explode per branch; released after the terminal action
-    val grams = graft.Caches.scoped(
-      graft.Tables.spread(docs(spark, dir).select(col("doc_id"), col("text")))
-        .select(col("doc_id"), expr(graft.functions.TextGrams.tokensExpr("text")).as("ts"))
-        .filter(size(col("ts")) >= 5)
-        .select(col("doc_id"), explode(array_distinct(gram5)).as("g")))
+    val grams = gram5s(spark, dir)
     val bench = grams.filter(col("doc_id") % 13 === 0)
-      .select(col("g")).distinct()
-    val perDoc = grams.filter(col("doc_id") % 13 =!= 0)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
+      .select(col("g")).distinct().withColumn("hit", lit(true))
     grams.filter(col("doc_id") % 13 =!= 0)
-      .join(broadcast(bench), Seq("g"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit_grams"))
-      .join(perDoc, Seq("doc_id"))
+      .join(broadcast(bench), Seq("g"), "left")
+      .groupBy(col("doc_id"))
+      .agg(count(col("hit")).as("n_hit_grams"), count(lit(1)).as("n_grams"))
+      .filter(col("n_hit_grams") > 0)
       .withColumn("contamination_ratio",
         col("n_hit_grams").cast("double") / col("n_grams").cast("double"))
       .orderBy(col("n_hit_grams").desc, col("doc_id"))
@@ -222,16 +223,14 @@ object Pipeline {
     * candidates are then exactly CONFIRMED against the bench set, so
     * the emitted accounting is bit-identical to the exact sweep; the
     * `bloom_sound` column cross-checks the bloom path against an
-    * independent exact semi-join (no false negatives — the bloom
-    * contract), and the oracle expects it TRUE on every row.
+    * independent exact join (no false negatives — the bloom
+    * contract), and the oracle expects it TRUE on every row. Only the
+    * bloom probe runs at build time (one aggregate over the bench
+    * grams); the training grams are read twice by the query, once
+    * bloom-pruned and once in full for the exact counts.
     */
   def p16BloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val gram5 = expr(graft.functions.TextGrams.gramExpr("ts", 5))
-    val grams = graft.Caches.scoped(
-      graft.Tables.spread(docs(spark, dir).select(col("doc_id"), col("text")))
-        .select(col("doc_id"), expr(graft.functions.TextGrams.tokensExpr("text")).as("ts"))
-        .filter(size(col("ts")) >= 5)
-        .select(col("doc_id"), explode(array_distinct(gram5)).as("g")))
+    val grams = gram5s(spark, dir)
     val bench = grams.filter(col("doc_id") % 13 === 0).select(col("g")).distinct()
     val bloom = bench
       .agg(graft.functions.GraftFunctions.bloomAgg(xxhash64(col("g")), 100000L, 1L << 20).as("bf"))
@@ -241,13 +240,14 @@ object Pipeline {
       graft.functions.GraftFunctions.bloomMightContain(lit(bloom), xxhash64(col("g"))))
     val hits = candidates.join(broadcast(bench), Seq("g"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit_grams"))
-    // independent exact sweep (no bloom) — the soundness yardstick
-    val exactHits = train.join(broadcast(bench), Seq("g"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_exact_hits"))
-    val perDoc = train.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
+    // independent exact sweep (no bloom) — the soundness yardstick —
+    // counted in the same aggregate as the per-doc totals
+    val perDoc = train
+      .join(broadcast(bench.withColumn("hit", lit(true))), Seq("g"), "left")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_grams"), count(col("hit")).as("n_exact_hits"))
     perDoc
       .join(hits, Seq("doc_id"), "left")
-      .join(exactHits, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
         coalesce(col("n_hit_grams"), lit(0L)).as("n_hit_grams"),
         (coalesce(col("n_hit_grams"), lit(0L)).cast("double") /
@@ -518,9 +518,11 @@ object Pipeline {
     */
   def p19DatasetCard(spark: SparkSession, dir: String): DataFrame = {
     val h = substring(md5(concat(lit("split:"), col("doc_id").cast("string"))), 1, 2)
-    val d = graft.Caches.scoped(docs(spark, dir)
+    // both roll-ups read the table; each scans it, since sharing it
+    // would shuffle every document's text
+    val d = docs(spark, dir)
       .withColumn("split",
-        when(h < "cd", "train").when(h < "e6", "val").otherwise("test")))
+        when(h < "cd", "train").when(h < "e6", "val").otherwise("test"))
     val card = d.groupBy(col("split")).agg(
       count(lit(1)).as("n_docs"),
       sum(nTokens(col("text"))).as("n_tokens"),

@@ -55,10 +55,9 @@ object Similarity {
     * hash-checked.
     */
   def s02AnnLsh(spark: SparkSession, dir: String): DataFrame = {
-    // scoped persist: bucketed feeds the size roll-up AND the final
-    // join — one pass over the projection folds instead of two; the
-    // cache is released after the query's terminal action (Caches)
-    val bucketed = graft.Caches.scoped(emb(spark, dir)
+    // shared: bucketed feeds the size roll-up AND the final join — one
+    // pass over the projection folds instead of two
+    val bucketed = Tables.shared(emb(spark, dir)
       .select(col("vec_id"), col("label"),
         graft.functions.Hyperplanes.bucketCol("embedding", 0, PLANES).as("bucket")))
     val sizes = bucketed.groupBy(col("bucket")).agg(count(lit(1)).as("bucket_size"))
@@ -78,10 +77,9 @@ object Similarity {
     * s02, so DuckDB reproduces every bucket id exactly.
     */
   def s06AnnMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    // scoped persist: bucketed is read three times (sizes, probes,
-    // label join) — cache the narrow table, not the projection folds;
-    // released after the terminal action
-    val bucketed = graft.Caches.scoped(emb(spark, dir)
+    // shared: bucketed is read four times (sizes, total, probes, label
+    // join) — share the narrow table, not the projection folds
+    val bucketed = Tables.shared(emb(spark, dir)
       .select(col("vec_id"), col("label"),
         graft.functions.Hyperplanes.bucketCol("embedding", 0, PLANES).as("bucket")))
     val sizes = bucketed.groupBy(col("bucket")).agg(count(lit(1)).as("bucket_size"))
@@ -206,7 +204,7 @@ object Similarity {
     * are all mirrored in the DuckDB twin.
     */
   def s12KnnGraph(spark: SparkSession, dir: String): DataFrame = {
-    val a = graft.Caches.scoped(kmeansAssignments(spark, dir)
+    val a = Tables.shared(kmeansAssignments(spark, dir)
       .select(col("vec_id"), col("embedding"), col("cell_id")))
     val q = a.select(col("cell_id"), col("vec_id").as("qid"),
       col("embedding").as("qe"))
@@ -1124,11 +1122,9 @@ object Similarity {
     * built for; S/K are the deploy knobs.
     */
   def s11PqSearch(spark: SparkSession, dir: String): DataFrame = {
-    val (rawCodebook, _) = pqModel(spark, dir)
-    // two consumers (query tables + corpus assignment) would each
-    // re-run PQ training: cache the 32-row codebook, train once
-    val codebook = graft.Caches.scoped(rawCodebook)
-    codebook.queryExecution.toRdd.count()
+    // two consumers (query tables + corpus assignment) read the 32-row
+    // codebook; shared, so PQ training runs once
+    val codebook = Tables.shared(pqModel(spark, dir)._1)
     val asn = pqAssign(spark, dir, codebook)
     val e = emb(spark, dir)
     val qsubs = e.filter(col("vec_id") < 10)
@@ -1170,28 +1166,12 @@ object Similarity {
     * statement).
     */
   def s14IvfPq(spark: SparkSession, dir: String): DataFrame = {
-    val coarse = graft.Caches.scoped(kmeansAssignments(spark, dir))
-    val (rawCodebook, _) = pqModel(spark, dir)
-    // the trained codebook (S·K = 32 rows) feeds TWO consumers — the
-    // query distance tables and the corpus assignment pass — and each
-    // would otherwise re-run the whole PQ training chain; cache it
-    // eagerly (RDD-level populate so the release listener is not
-    // consumed — the d14 lesson; same for `coarse`, which centroids,
-    // queries and candidates all consume). The two training chains
-    // are INDEPENDENT (coarse k-means vs PQ codebook), so their
-    // populate actions run CONCURRENTLY (guide §2.6 — actions are
-    // only sequential because the driver calls them sequentially;
-    // each chain is many small stages, so the other chain's tasks
-    // back-fill the scheduler gaps).
-    val codebook = graft.Caches.scoped(rawCodebook)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try scala.concurrent.Await.result(scala.concurrent.Future.sequence(Seq(
-      scala.concurrent.Future { coarse.queryExecution.toRdd.count(); () },
-      scala.concurrent.Future { codebook.queryExecution.toRdd.count(); () })),
-      scala.concurrent.duration.Duration.Inf)
-    finally pool.shutdown()
+    // both trained models have several readers — the coarse
+    // assignments feed the centroids, the queries and the candidates,
+    // the 32-row codebook the query distance tables and the corpus
+    // assignment — so each is shared and its training chain runs once
+    val coarse = Tables.shared(kmeansAssignments(spark, dir))
+    val codebook = Tables.shared(pqModel(spark, dir)._1)
     val asn = pqAssign(spark, dir, codebook)
     val cents = coarse.select(col("cell_id"), posexplode(col("embedding")))
       .withColumnRenamed("pos", "i").withColumnRenamed("col", "x")
@@ -1248,10 +1228,10 @@ object Similarity {
       explode(split(lower(trim(col("text"))), "\\s+")).as("token"))
     val tfAggs = terms.map(t =>
       count(when(col("token") === t, 1)).as(s"tf_$t"))
-    // scoped persist: tf (a narrow per-doc table) feeds both the df
-    // roll-up and the final scoring join — one pass over the token
-    // explosion instead of two; released after the terminal action
-    val tf = graft.Caches.scoped(
+    // shared: tf (a narrow per-doc table) feeds both the df roll-up and
+    // the final scoring join — one pass over the token explosion
+    // instead of two
+    val tf = Tables.shared(
       toks.groupBy(col("doc_id")).agg(tfAggs.head, tfAggs.tail: _*))
     val dfAggs = terms.map(t =>
       count(when(col(s"tf_$t") > 0, 1)).as(s"df_$t"))
@@ -1559,11 +1539,9 @@ object Similarity {
     */
   def s09AnnRecall(spark: SparkSession, dir: String): DataFrame = {
     val e = emb(spark, dir)
-    // scoped persist: three corpus-wide passes read this table (exact
-    // pairs, single-probe, multi-probe) — cache the narrow projection
-    // once instead of re-running the hyperplane folds per pass;
-    // released after the query's terminal action (Caches)
-    val bucketed = graft.Caches.scoped(e.select(col("vec_id"), col("embedding"),
+    // shared: three passes read this table (queries, single-probe,
+    // multi-probe) — one pass over the hyperplane folds, not three
+    val bucketed = Tables.shared(e.select(col("vec_id"), col("embedding"),
       graft.functions.Hyperplanes.bucketCol("embedding", 0, PLANES).as("bucket")))
     val q = bucketed.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),

@@ -286,19 +286,19 @@ object TextAnalysis {
     */
   def t11BpeMerges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val (merges, fin) = bpeTrain(spark, dir, rounds = 3)
-    fin.unpersist(blocking = false) // merges are already driver-side
-    merges
+    bpeTrain(spark, dir, rounds = 3)._1
       .toDF("merge_idx", "pair", "new_token", "pair_count", "n_word_types")
       .orderBy(col("merge_idx"))
   }
 
-  /** The shared BPE trainer behind t11 (merge table) and t12 (encode):
-    * `rounds` merge steps over the distinct-word frequency table;
-    * returns the merge records AND the final word table `(w, n, sym)`
-    * with every merge applied — the word→subword dictionary a trained
-    * tokenizer IS. The returned table is persisted; the caller owns
-    * its release.
+  /** The shared BPE trainer behind t11 (merge table) and t12/t18
+    * (encode): `rounds` merge steps over the distinct-word frequency
+    * table; returns the merge records AND the final word table
+    * `(w, n, sym)` with every merge applied — the word→subword
+    * dictionary a trained tokenizer IS. Training runs its rounds now
+    * and releases its own round caches before it returns; the returned
+    * dictionary is a lazy plan, the word table with the trained merges
+    * folded over the initial symbols as `replace` calls.
     */
   private def bpeTrain(spark: SparkSession, dir: String, rounds: Int)
       : (Seq[(Int, String, String, Long, Long)], DataFrame) = {
@@ -335,14 +335,21 @@ object TextAnalysis {
         val merged = pair.replace("> <", "")
         val nWords = top.getLong(2)
         merges += ((k, pair, merged, cnt, nWords))
-        val next = cur.select(col("w"), col("n"),
-          replace(col("sym"), lit(pair), lit(merged)).as("sym")).persist()
-        next.count() // materialize before dropping the parent cache
-        cur.unpersist(blocking = false)
-        cur = next
+        if (k < rounds) { // the last round's table is the lazy dictionary below
+          val next = cur.select(col("w"), col("n"),
+            replace(col("sym"), lit(pair), lit(merged)).as("sym")).persist()
+          next.count() // materialize before dropping the parent cache
+          cur.unpersist(blocking = false)
+          cur = next
+        }
       }
     }
-    (merges.result(), cur)
+    cur.unpersist(blocking = false)
+    val trained = merges.result()
+    val sym = trained.foldLeft(sym0) { case (s, (_, pair, merged, _, _)) =>
+      replace(s, lit(pair), lit(merged))
+    }
+    (trained, words.select(col("w"), col("n"), sym.as("sym")))
   }
 
   /** t12: BPE ENCODING — the other half of the tokenizer loop: apply
@@ -359,7 +366,6 @@ object TextAnalysis {
     */
   def t12BpeEncode(spark: SparkSession, dir: String): DataFrame = {
     val (_, dict) = bpeTrain(spark, dir, rounds = 3)
-    graft.Caches.deferRelease(dict) // released after the consuming action
     val docWords = docs(spark, dir)
       .select(col("doc_id"), explode(tokens(col("text"))).as("raw"))
       .select(col("doc_id"), regexp_replace(col("raw"), "[^a-z]", "").as("w"))
@@ -419,7 +425,8 @@ object TextAnalysis {
     * over the per-lang count table (vocab-sized, not corpus-sized).
     */
   def t14VocabStats(spark: SparkSession, dir: String): DataFrame = {
-    val counts = graft.Caches.scoped(docs(spark, dir)
+    // shared: the token counts feed the panel and the top-10 window
+    val counts = Tables.shared(docs(spark, dir)
       .select(col("lang"), explode(tokens(col("text"))).as("token"))
       .groupBy(col("lang"), col("token"))
       .agg(count(lit(1)).as("n")))
@@ -610,7 +617,6 @@ object TextAnalysis {
     */
   def t18Fertility(spark: SparkSession, dir: String): DataFrame = {
     val (_, dict) = bpeTrain(spark, dir, rounds = 3)
-    graft.Caches.deferRelease(dict) // released after the consuming action
     val docWords = docs(spark, dir)
       .select(col("lang"), explode(tokens(col("text"))).as("raw"))
       .select(col("lang"), regexp_replace(col("raw"), "[^a-z]", "").as("w"))

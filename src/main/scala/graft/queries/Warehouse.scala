@@ -439,8 +439,8 @@ object Warehouse {
     // the keyed rollup feeds BOTH landed versions: cache it so the
     // lineitem scan+aggregate runs once, not once per commit (guide
     // §5 — reused and more expensive to recompute than to hold).
-    // Plain persist, released right after the second commit:
-    // Caches.scoped would free it on the FIRST commit's write action.
+    // Plain persist, released right after the second commit: the two
+    // commits are separate actions, so no in-plan exchange can share it.
     val lk = Tables(spark, dir, "lineitem")
       .groupBy(col("l_orderkey"), col("l_linenumber"))
       .agg(count(lit(1)).as("qty"),

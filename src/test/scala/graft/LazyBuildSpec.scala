@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * entries submit no Spark job, persist nothing and leave the session
   * conf as it was until an action runs. No entry rewrites the caller's
   * session: the function registry and the conf stay as they were, and
-  * the planner gains only graft's own strategies and rules.
+  * the planner gains only graft's own strategies and rules. An entry
+  * that reads a frame twice shares it inside its own plan, so building
+  * it caches nothing and registers no query listener.
   */
 class LazyBuildSpec extends AnyFunSuite {
   import TestSession._
@@ -68,5 +70,48 @@ class LazyBuildSpec extends AnyFunSuite {
       Option.when(foreign.nonEmpty)(s"added planner hooks ${foreign.mkString(", ")}")).flatten
     assert(changes.isEmpty, changes.mkString("building ", "; building ", ""))
     assert(planners.nonEmpty, "d14 and m07 no longer plan a graft node")
+  }
+
+  test("building entries that read a frame twice caches nothing and registers no listener") {
+    val names = Seq("d02_ngram_jaccard", "d05_embedding_dup", "d09_lsh_recall",
+      "d10_semantic_dedup", "d11_dup_spans", "d13_incremental_lsh", "d14_prefix_join",
+      "d17_containment", "p06_contamination_check", "p13_fuzzy_contamination",
+      "p16_bloom_decontaminate", "p19_dataset_card", "s02_ann_lsh", "s04_tfidf_search",
+      "s06_ann_multiprobe", "s09_ann_recall", "s11_pq_search", "s12_knn_graph",
+      "s14_ivf_pq", "t12_bpe_encode", "t14_vocab_stats", "t18_fertility",
+      "m06_perceptual_dedup")
+    // entries that still run jobs at build time: t12 and t18 train
+    // their BPE merges, p16 collects its bloom sketch. This list may
+    // only shrink.
+    val buildJobs = Set("t12_bpe_encode", "t18_fertility", "p16_bloom_decontaminate")
+    val tag = "graft.test.lazyBuild"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) != null)
+          jobs.add(e.properties.getProperty(tag))
+    }
+    // a session of its own: its listener manager starts empty
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val listeners = GraftTestShims.listeners(s)
+      val cached = GraftTestShims.numCachedEntries(s)
+      names.foreach { n =>
+        sc.setLocalProperty(tag, n)
+        SparkEntry.queries(n)(s, sf)
+      }
+      sc.setLocalProperty(tag, null)
+      GraftShims.waitListenerBusEmpty(s)
+      assert(GraftTestShims.numCachedEntries(s) == cached, "building added cache-manager entries")
+      assert(GraftTestShims.listeners(s) == listeners, "building registered a query listener")
+      val withJobs = jobs.toArray.map(_.toString).toSet
+      assert(withJobs == buildJobs,
+        s"entries that ran jobs at build time: ${withJobs.toSeq.sorted.mkString(", ")}")
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -728,4 +728,43 @@ class OperatorsSpec extends AnyFunSuite {
     assert((mipsTop -- cosTop).nonEmpty,
       "weighted MIPS top-5 identical to cosine top-5 — weights inert")
   }
+
+  test("a frame read twice runs its root once: d02's capped aggregate, s14's two models") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+    // the operators the final adaptive plan runs: a reused exchange
+    // runs its subtree once, wherever AQE left the original stage
+    def executed(root: SparkPlan): Seq[SparkPlan] = {
+      val seen = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+      def go(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case a: AdaptiveSparkPlanExec => go(a.executedPlan)
+        case q: QueryStageExec => go(q.plan)
+        case r: ReusedExchangeExec => go(r.child)
+        case e: Exchange => if (seen.add(e)) e.children.flatMap(go) else Nil
+        case other => other.children.flatMap(go)
+      })
+      go(root)
+    }
+    def finalAggs(df: org.apache.spark.sql.DataFrame): Map[String, Int] = {
+      df.collect()
+      executed(df.queryExecution.executedPlan).collect { case a: BaseAggregateExec =>
+        a.aggregateExpressions.filter(_.mode == Final).map(_.aggregateFunction.prettyName)
+      }.flatten.groupBy(identity).map { case (k, v) => k -> v.size }
+    }
+    // d02: both readers of the doc lists (gram counts, pair generation)
+    // read the one collect_capped aggregate
+    val d02 = finalAggs(graft.operators.Dedup.d02NgramJaccard(spark, sf))
+    // s14: k-means runs two Lloyd rounds (max_by each), PQ one training
+    // round and the corpus assignment (min_by each); collect_list is the
+    // k-means centroids, s14's own centroid restatement and the PQ
+    // codebook. A chain re-run by one of its readers adds to these.
+    val s14 = finalAggs(graft.operators.Similarity.s14IvfPq(spark, sf))
+    assert(d02.get("collect_capped").contains(1) &&
+      Seq("max_by", "min_by", "collect_list").map(s14.get) == Seq(Some(2), Some(2), Some(3)),
+      s"final aggregates: d02 $d02, s14 $s14")
+  }
 }
